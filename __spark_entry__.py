@@ -1155,7 +1155,7 @@ def _merged_artifact_hash(spark, sf):
     pages = pages_dataframe(spark, 60)
     extracted = extract_tasks(build_task_table(pages, order_partitions=8),
                               repartition=False)
-    merged = merge_extracted_to_markdown(extracted, num_partitions=8)
+    merged = merge_extracted_to_markdown(extracted)
     import hashlib
 
     digest = hashlib.md5(merged.encode("utf-8")).hexdigest()

@@ -34,7 +34,7 @@ def main() -> None:
     from ocr_agent_spark.functions.similarity import cosine_topk
     from ocr_agent_spark.functions.text import text_profile
     from ocr_agent_spark.operators.extract import extract_pages_fused
-    from ocr_agent_spark.operators.merge import _ordered_chunks, _ordered_slim
+    from ocr_agent_spark.operators.merge import _ordered_chunks
     from ocr_agent_spark.session import build_spark
 
     import __spark_entry__ as entrymod
@@ -93,10 +93,7 @@ def main() -> None:
     extracted_path = os.path.join(REPO, "_build", "bench_extracted")
     if os.path.exists(extracted_path):
         ext = spark.read.parquet(extracted_path)
-        timed("merge_slim_noop", lambda: noop(
-            _ordered_slim(ext, None, ("url", "page_index"))))
-        timed("merge_chunks_noop", lambda: noop(
-            _ordered_chunks(ext, "dollar", None, ("url", "page_index"))))
+        timed("merge_chunks_noop", lambda: noop(_ordered_chunks(ext, "dollar")))
 
     def loadavg():
         with open("/proc/loadavg") as fh:

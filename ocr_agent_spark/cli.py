@@ -163,8 +163,11 @@ def cmd_enqueue(args) -> int:
     if os.path.exists(manifest):
         with open(manifest) as fh:
             existing = json.load(fh).get("paths", [])
-    with open(manifest, "w") as fh:
+    # temp + os.replace: a reader never sees a torn manifest
+    tmp = f"{manifest}.tmp-{os.getpid()}"
+    with open(tmp, "w") as fh:
         json.dump({"paths": sorted(set(existing) | set(paths))}, fh)
+    os.replace(tmp, manifest)
     print(f"enqueued {n} pages from {len(paths)} input(s)")
     return 0
 

@@ -1,25 +1,33 @@
 """Ordered global merge: extracted rows → one markdown artifact (A6).
 
 The reference walks all completed tasks in task_id order and
-concatenates blocks into one file (markdown_merge.py:18-47). At scale a
-single global sort into one partition is the wrong plan, so the merge
-is two-phase:
+concatenates blocks into one file (markdown_merge.py:18-47). Here one
+render-and-write core, ``_write_merged``, builds that artifact:
 
-1. range-partition by ``order_key`` + ``sortWithinPartitions`` — a
-   distributed sort whose partition boundaries respect global order;
-2. per-partition: render every row's block (header + math-normalized
-   body, via the pure kernel) and concat into ONE row per partition
-   ``(pid, chunk)`` inside ``mapInPandas``;
-3. driver: collect the ~numPartitions chunk rows, concat in pid order,
-   prepend the document title, normalize the tail.
+1. range-partition the slim merge input on ``(url, page_index)`` +
+   ``sortWithinPartitions`` — a distributed sort whose partition
+   boundaries respect global order. The partition count comes from the
+   plan's byte estimate against Spark's advisory partition size
+   (``partitioning.partitions_for_bytes``), capped at the shuffle
+   parallelism, so a small artifact is one partition;
+2. per partition: render every row's block (header + math-normalized
+   body) and concat into ONE ``chunk`` row inside
+   ``mapInPandas``;
+3. on the Spark driver: ``toLocalIterator`` pulls the chunks one
+   partition at a time in partition order (= range order) and writes
+   the title, the ``"\\n"``-joined chunks and the rstripped tail to a
+   file handle.
 
-Only step 3 touches the driver, and it moves one string per partition —
-the full text bytes stream through exactly once. Output is
-byte-identical to a sequential merge for any partition count (D1 test).
+The in-memory and the on-disk artifact are that core writing to a
+``StringIO`` and to a temp file that is renamed over the target, so
+they cannot drift apart. Output is byte-identical to a sequential merge
+for any partition count (D1 test).
 """
 
 from __future__ import annotations
 
+import io
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -28,13 +36,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_agent_spark.kernel.merge import DOCUMENT_TITLE
+from ocr_agent_spark.partitioning import (
+    advisory_partition_bytes,
+    partitions_for_bytes,
+)
+
+ORDER_COLS = ("url", "page_index")
 
 
 def _partition_blocks(batches: Iterator[pd.DataFrame],
-                      style: str) -> tuple[int, list[str]]:
-    """One task's (partition id, rendered blocks) — THE shared render
-    loop: both the chunk collector and the sharded writer consume it,
-    so block rendering can never drift between the two artifacts.
+                      style: str) -> list[str]:
+    """One task's rendered blocks, in row order.
 
     The loop inlines ``render_row_block`` (no per-row dataclass, no
     strip() copy for the blank test, one f-string instead of a
@@ -42,13 +54,9 @@ def _partition_blocks(batches: Iterator[pd.DataFrame],
     byte-identical to the kernel function by
     ``test_partition_blocks_matches_render_row_block``.
     """
-    from pyspark import TaskContext
-
     from ocr_agent_spark.kernel.mathdown import convert_math_delimiters
     from ocr_agent_spark.kernel.merge import KIND_PDF_PAGE
 
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
     blocks: list[str] = []
     for batch in batches:
         for url, kind, page_index, total_pages, text in zip(
@@ -65,208 +73,90 @@ def _partition_blocks(batches: Iterator[pd.DataFrame],
                 header = f"## {url}"
             body = convert_math_delimiters(text, style)
             blocks.append(f"{header}\n\n\n{body}\n\n---\n")
-    return pid, blocks
+    return blocks
 
 
-def _ordered_slim(
-    extracted: DataFrame,
-    num_partitions: int | None,
-    order_cols: tuple[str, ...],
-) -> DataFrame:
-    """Pruned + range-partitioned + partition-sorted merge input (the
-    shared phase-1 plan of every merge artifact)."""
+def _ordered_chunks(extracted: DataFrame, style: str) -> DataFrame:
+    """The merge plan: one ``chunk`` row per non-empty range
+    partition, partitions sized by the slim input's plan bytes."""
     spark = extracted.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     # Column pruning: the merge never needs html/doc_bytes/lineage cols.
-    needed = dict.fromkeys(
-        [*order_cols, "url", "kind", "page_index", "total_pages", "text"]
+    slim = extracted.select(
+        "url", "kind", "page_index", "total_pages", "text"
+    ).filter(F.col("text").isNotNull())
+    n = partitions_for_bytes(
+        slim, advisory_partition_bytes(spark),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    slim = extracted.select(*needed).filter(F.col("text").isNotNull())
 
-    return slim.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
-    ).sortWithinPartitions(*order_cols)
-
-
-def _ordered_chunks(
-    extracted: DataFrame,
-    style: str,
-    num_partitions: int | None,
-    order_cols: tuple[str, ...],
-) -> DataFrame:
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid, blocks = _partition_blocks(batches, style)
+        blocks = _partition_blocks(batches, style)
         if blocks:
-            yield pd.DataFrame({"pid": [pid], "chunk": ["\n".join(blocks)]})
+            yield pd.DataFrame({"chunk": ["\n".join(blocks)]})
 
-    return _ordered_slim(extracted, num_partitions, order_cols).mapInPandas(
-        render, schema="pid int, chunk string"
-    )
+    return (slim.repartitionByRange(n, *ORDER_COLS)
+            .sortWithinPartitions(*ORDER_COLS)
+            .mapInPandas(render, schema="chunk string"))
 
 
-def merge_extracted_to_markdown(
-    extracted: DataFrame,
-    style: str = "dollar",
-    num_partitions: int | None = None,
-    order_cols: tuple[str, ...] = ("url", "page_index"),
-) -> str:
-    """Completed extracted rows → single merged markdown string.
+def _write_merged(extracted: DataFrame, fh, style: str) -> int:
+    """Render the merged artifact into text handle ``fh``; returns the
+    UTF-8 bytes written.
 
-    Sorts by the natural enqueue order (url, page_index) — identical to
-    the staged path's dense ``order_key`` ordering, but available on
-    fused-path output that carries no key column. Collects the whole
-    artifact into driver memory; for artifacts beyond memory use
-    ``merge_extracted_to_file``.
+    The Spark driver holds one partition's chunk at a time. Trailing-newline
+    contract: the artifact ends ``...rstrip() + '\\n'`` exactly like the
+    sequential join (markdown_merge.py:47); every chunk contains
+    non-whitespace (``---``), so only the last one is held back and
+    trimmed.
     """
-    # toPandas, not collect(): with Arrow enabled (session.py) the
-    # ~one-chunk-per-partition strings stream to the driver as Arrow
-    # batches instead of pickled Row objects — same rows, cheaper
-    # driver transfer for a multi-MB artifact (guide §6, Arrow for
-    # driver transfers).
-    chunks = _ordered_chunks(extracted, style, num_partitions, order_cols).toPandas()
-    chunks = chunks.sort_values("pid")
-    parts = [DOCUMENT_TITLE, ""] + chunks["chunk"].tolist()
-    return "\n".join(parts).rstrip() + "\n"
-
-
-def merge_extracted_to_sharded_files(
-    extracted: DataFrame,
-    dir_path: str,
-    style: str = "dollar",
-    num_partitions: int | None = None,
-    order_cols: tuple[str, ...] = ("url", "page_index"),
-) -> dict:
-    """The 100 TB merged-artifact shape: one ordered file PER RANGE
-    PARTITION plus an ordered manifest — no driver funnel at all.
-
-    ``merge_extracted_to_file`` still streams every byte through the
-    driver (one partition at a time); here each task renders AND writes
-    its own shard directly (executor-side, to a shared filesystem —
-    the same worker-visible-path contract as ``sources.warc``), and the
-    driver handles only the manifest plus a tail fix-up bounded by the
-    LAST shard's size. Concatenating header + shards in manifest order
-    is byte-identical to ``merge_extracted_to_markdown`` for any
-    partition count (tested). Shard writes are deterministic renders of
-    deterministic partitions, so a retried task rewrites the same bytes
-    (idempotent — rule D1).
-
-    Returns the manifest (also written to ``<dir>/manifest.json``):
-    ``{"files": [path, ...], "total_bytes": N}`` with files in
-    concatenation order, header first.
-    """
-    import json
-    import os
-
-    os.makedirs(dir_path, exist_ok=True)
-    header_path = os.path.join(dir_path, "part-header.md")
-    header = DOCUMENT_TITLE + "\n"
-    with open(header_path, "w", encoding="utf-8", newline="") as fh:
-        fh.write(header)
-
-    def write_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid, blocks = _partition_blocks(batches, style)
-        if blocks:
-            # every shard starts with the separator that the single-file
-            # writer would place BEFORE this partition's chunk, so plain
-            # concatenation reproduces the exact join
-            data = ("\n" + "\n".join(blocks)).encode("utf-8")
-            shard = os.path.join(dir_path, f"part-{pid:05d}.md")
-            # temp + atomic rename: a task dying mid-write can never
-            # leave a torn part file visible under the manifest name,
-            # and a retried attempt's os.replace lands the identical
-            # deterministic bytes (advice r5)
-            tmp = f"{shard}.tmp-{os.getpid()}"
-            with open(tmp, "wb") as fh:
-                fh.write(data)
-            os.replace(tmp, shard)
-            yield pd.DataFrame(
-                {"pid": [pid], "path": [shard], "n_bytes": [len(data)]}
-            )
-
-    meta = _ordered_slim(extracted, num_partitions, order_cols).mapInPandas(
-        write_shards, schema="pid int, path string, n_bytes long"
-    ).collect()
-    meta.sort(key=lambda r: r["pid"])
-
-    # tail contract ('"\n".join(...).rstrip() + "\n"'): only the LAST
-    # file can carry trailing whitespace to trim — bounded driver work.
-    # The trimmed copy goes under a NEW name referenced from the
-    # manifest: a zombie/speculative attempt still flushing the
-    # task-owned part file after collect() returns can then never
-    # clobber the driver's fix-up (advice r5).
-    last_path = meta[-1]["path"] if meta else header_path
-    with open(last_path, "rb") as fh:
-        tail_bytes = fh.read()
-    fixed = tail_bytes.decode("utf-8").rstrip() + "\n"
-    if fixed.encode("utf-8") != tail_bytes:
-        trimmed = last_path[:-3] + "-tail.md" \
-            if last_path.endswith(".md") else last_path + ".tail"
-        import os as _os
-        tmp = f"{trimmed}.tmp-{_os.getpid()}"
-        with open(tmp, "w", encoding="utf-8", newline="") as fh:
-            fh.write(fixed)
-        _os.replace(tmp, trimmed)
-        if meta:
-            meta[-1] = {"pid": meta[-1]["pid"], "path": trimmed,
-                        "n_bytes": len(fixed.encode("utf-8"))}
-        last_path = trimmed
-
-    files = [header_path] + [r["path"] for r in meta]
-    sizes = {header_path: len(header.encode("utf-8"))}
-    for r in meta:
-        sizes[r["path"]] = r["n_bytes"]
-    sizes[last_path] = len(fixed.encode("utf-8"))
-    manifest = {"files": files, "total_bytes": sum(sizes[f] for f in files)}
-    with open(os.path.join(dir_path, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    return manifest
-
-
-def merge_extracted_to_file(
-    extracted: DataFrame,
-    path: str,
-    style: str = "dollar",
-    num_partitions: int | None = None,
-    order_cols: tuple[str, ...] = ("url", "page_index"),
-) -> int:
-    """Stream the merged artifact to ``path`` with bounded driver memory.
-
-    ``toLocalIterator`` pulls one range partition's chunk at a time —
-    the driver never holds more than one partition of text (vs
-    ``collect`` holding the full artifact). Output is byte-identical to
-    ``merge_extracted_to_markdown``. Returns bytes written.
-
-    Trailing-newline contract: the final chunk must end ``...rstrip() +
-    '\\n'`` exactly like the in-memory join (markdown_merge.py:47), so
-    the last chunk is held back and trimmed before the final write.
-    """
-    import os
-
-    chunk_df = _ordered_chunks(extracted, style, num_partitions, order_cols)
-    # Partition ids ascend with range order; toLocalIterator preserves
-    # partition order for a sorted-by-pid plan. Sort explicitly anyway.
-    it = chunk_df.orderBy("pid").toLocalIterator()
-
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     written = 0
-    with open(path, "w", encoding="utf-8", newline="") as fh:
-        prev: str | None = None
-        header = DOCUMENT_TITLE + "\n"
-        fh.write(header)
-        written += len(header.encode("utf-8"))
-        for row in it:
-            if prev is not None:
-                piece = "\n" + prev
-                fh.write(piece)
-                written += len(piece.encode("utf-8"))
-            prev = row["chunk"]
+
+    def emit(piece: str) -> None:
+        nonlocal written
+        fh.write(piece)
+        written += len(piece.encode("utf-8"))
+
+    emit(DOCUMENT_TITLE + "\n")
+    prev: str | None = None
+    # toLocalIterator yields partitions in id order, and range
+    # partition ids ascend with (url, page_index).
+    for row in _ordered_chunks(extracted, style).toLocalIterator():
         if prev is not None:
-            # Matches the in-memory '"\n".join(...).rstrip() + "\n"':
-            # every chunk contains non-whitespace ('---'), so the global
-            # rstrip only ever trims within the final chunk.
-            tail = ("\n" + prev).rstrip() + "\n"
-            fh.write(tail)
-            written += len(tail.encode("utf-8"))
+            emit("\n" + prev)
+        prev = row["chunk"]
+    if prev is not None:
+        emit(("\n" + prev).rstrip() + "\n")
+    return written
+
+
+def merge_extracted_to_markdown(extracted: DataFrame,
+                                style: str = "dollar") -> str:
+    """Completed extracted rows → single merged markdown string, sorted
+    by the natural enqueue order (url, page_index). Holds the whole
+    artifact in Spark driver memory; beyond that use
+    ``merge_extracted_to_file``."""
+    buf = io.StringIO(newline="")
+    _write_merged(extracted, buf, style)
+    return buf.getvalue()
+
+
+def merge_extracted_to_file(extracted: DataFrame, path: str,
+                            style: str = "dollar") -> int:
+    """Write the merged artifact to ``path``; returns bytes written.
+
+    Byte-identical to ``merge_extracted_to_markdown`` with bounded
+    Spark driver memory. The bytes go to a temp file renamed over ``path``
+    only when complete, so no reader ever sees a torn artifact; on
+    failure the temp file is removed and ``path`` is left as it was.
+    """
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    tmp = f"{path}.tmp-{os.getpid()}"
+    try:
+        with open(tmp, "w", encoding="utf-8", newline="") as fh:
+            written = _write_merged(extracted, fh, style)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
     return written

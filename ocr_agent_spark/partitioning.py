@@ -16,6 +16,11 @@ repartition is round-robin; Spark's sort-before-repartition (on by
 default, SPARK-23207) keeps the row→partition assignment deterministic
 under task retry.
 
+The sizing rule itself, ``partitions_for_bytes``, is shared: the
+ordered merge (``operators.merge``) sizes its range partition with it
+too, against Spark's advisory partition size instead of the widening
+constant.
+
 Only row counts/placement change — never row values — so every
 downstream aggregate of exact types (counts, min-hash longs, integer
 sizes) is bit-identical. Callers whose results depend on float
@@ -66,6 +71,26 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
+def partitions_for_bytes(df: DataFrame, bytes_per_partition: int,
+                         limit: int) -> int:
+    """THE sizing rule: ``clamp(ceil(est_bytes / bytes_per_partition),
+    1, limit)`` over Catalyst's byte estimate of ``df`` (no job), or
+    ``limit`` when the estimate is unavailable."""
+    size = _plan_size_bytes(df)
+    if size is None:
+        return limit
+    return max(1, min(limit, math.ceil(size / bytes_per_partition)))
+
+
+def advisory_partition_bytes(spark) -> int:
+    """Spark's own per-partition byte target,
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (``'67108864b'``
+    by default), parsed by Spark's byte-string rules."""
+    value = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    return int(spark._jvm.org.apache.spark.network.util.JavaUtils
+               .byteStringAsBytes(value))
+
+
 def widen_if_narrow(df: DataFrame, target: int | None = None,
                     bytes_per_task: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` up to ``target`` partitions iff
@@ -78,7 +103,7 @@ def widen_if_narrow(df: DataFrame, target: int | None = None,
     numbers. Inputs already ≥ target/2 partitions pass through
     untouched — the production no-op path.
 
-    The widened count is ``clamp(ceil(est_bytes / bytes_per_task), 1,
+    The widened count is ``partitions_for_bytes(df, bytes_per_task,
     target)`` (``SPARK_GRAFT_WIDEN_BYTES_PER_TASK`` overrides the
     default): widening exists to parallelize CPU-heavy per-row work, so
     the fan-out should track how much data there is — a tiny input
@@ -101,10 +126,7 @@ def widen_if_narrow(df: DataFrame, target: int | None = None,
             "SPARK_GRAFT_WIDEN_BYTES_PER_TASK",
             str(DEFAULT_WIDEN_BYTES_PER_TASK),
         ))
-    size = _plan_size_bytes(df)
-    need = target if size is None else max(
-        1, min(target, math.ceil(size / bytes_per_task))
-    )
+    need = partitions_for_bytes(df, bytes_per_task, target)
     if need <= n:
         return df
     return df.repartition(need)

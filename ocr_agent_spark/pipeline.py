@@ -76,7 +76,6 @@ def run_extraction_job(
     pages: DataFrame,
     output_root: str,
     run_id: str | None = None,
-    num_partitions: int | None = None,
     settings: dict | None = None,
 ) -> RunResult:
     # cache_scope: release only the intermediates THIS job persisted —
@@ -84,7 +83,7 @@ def run_extraction_job(
     # result) survive the job (ADVICE r2).
     with cache_scope():
         return _run_extraction_job(
-            spark, pages, output_root, run_id, num_partitions, settings
+            spark, pages, output_root, run_id, settings
         )
 
 
@@ -93,7 +92,6 @@ def _run_extraction_job(
     pages: DataFrame,
     output_root: str,
     run_id: str | None = None,
-    num_partitions: int | None = None,
     settings: dict | None = None,
 ) -> RunResult:
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -170,20 +168,17 @@ def merge_job(
 ) -> str:
     """Merge committed output into one markdown artifact.
 
-    With ``merged_path`` the artifact is STREAMED to disk one range
-    partition at a time (``merge_extracted_to_file``) — the driver
-    never holds more than one partition of text. Pass
+    With ``merged_path`` the artifact is written by
+    ``merge_extracted_to_file``: streamed one range partition at a time
+    into a temp file that replaces ``merged_path`` atomically. Pass
     ``return_text=False`` (the CLI does) to skip reading the file back
-    and get ``""``; at 100 TB the file path is the only sane interface
-    and the byte count is in the lineage. Without ``merged_path`` the
-    collecting variant runs (byte-identical, tested) for small
-    in-memory use.
+    and get ``""``. Without ``merged_path`` the same render-and-write
+    core writes to memory and the text is returned.
     """
     extracted = read_extracted(spark, output_root)
     if extracted is None:
         raise EmptyInputError("nothing committed yet")
     if merged_path is not None:
-        os.makedirs(os.path.dirname(os.path.abspath(merged_path)), exist_ok=True)
         merge_extracted_to_file(extracted, merged_path, style=style)
         if not return_text:
             return ""

@@ -94,6 +94,29 @@ def test_cli_env_var_configures_math_style_and_manifest_records_it(
     assert toy.latest_manifest()["settings"] == {"math_delimiter_style": "latex"}
 
 
+def test_cli_enqueue_twice_manifest_is_union(spark, tmp_path, capsys):
+    """A second enqueue adds its inputs to the manifest (rewritten via
+    temp + rename, so no temp file is left) instead of replacing it."""
+    import json
+
+    def enqueued(job_root):
+        with open(os.path.join(job_root, "inputs.json")) as fh:
+            return json.load(fh)["paths"]
+
+    a, b = str(tmp_path / "pages_a"), str(tmp_path / "pages_b")
+    write_pages_parquet(a, 5)
+    write_pages_parquet(b, 7)
+    job_root, only_b = str(tmp_path / "job"), str(tmp_path / "job_b")
+
+    assert main(["enqueue", a, "--job-root", job_root]) == 0
+    first = enqueued(job_root)
+    assert main(["enqueue", b, "--job-root", only_b]) == 0
+    assert main(["enqueue", b, a, "--job-root", job_root]) == 0
+    capsys.readouterr()
+    assert enqueued(job_root) == sorted(set(first) | set(enqueued(only_b)))
+    assert [f for f in os.listdir(job_root) if ".tmp-" in f] == []
+
+
 def test_cli_empty_input_exit_code(spark, tmp_path):
     missing = str(tmp_path / "nope")
     job_root = str(tmp_path / "job2")

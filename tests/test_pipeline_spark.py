@@ -117,10 +117,26 @@ def test_lineage_rows(spark, completed_root):
 
 
 def test_merge_parallelism_invariance(spark, completed_root):
+    """The merge's range partition count comes from Spark conf (shuffle
+    parallelism caps it, the advisory partition size divides the plan
+    bytes); the artifact is byte-identical for any count."""
+    from ocr_agent_spark.operators.merge import _ordered_chunks
+
     ext = read_extracted(spark, completed_root)
-    outs = {
-        p: merge_extracted_to_markdown(ext, num_partitions=p) for p in (1, 3, 16)
-    }
+    # default sizing: the small fixture fits one advisory-sized partition
+    assert _ordered_chunks(ext, "dollar").rdd.getNumPartitions() == 1
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    outs = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1b")
+        for p in (1, 3, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            assert _ordered_chunks(ext, "dollar").rdd.getNumPartitions() == p
+            outs[p] = merge_extracted_to_markdown(ext)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
     assert outs[1] == outs[3] == outs[16]
     assert outs[1].startswith("# Extracted Output\n")
     assert outs[1].endswith("\n") and not outs[1].endswith("\n\n")
@@ -138,43 +154,26 @@ def test_merge_to_file_byte_identical(spark, completed_root, tmp_path):
         streamed = fh.read()
     assert streamed == in_memory
     assert n == len(in_memory.encode("utf-8"))
+    assert [f for f in os.listdir(tmp_path) if ".tmp-" in f] == []
 
 
-def test_merge_sharded_concat_byte_identical(spark, completed_root, tmp_path):
-    """The no-driver-funnel shape: per-range-partition shard files +
-    ordered manifest; concatenation in manifest order is byte-equal to
-    the single-file merge for ANY partition count, and total_bytes is
-    honest."""
-    import json
+def test_merge_to_file_failure_leaves_target_untouched(
+    spark, completed_root, tmp_path
+):
+    """A merge whose Spark action fails leaves the previous artifact's
+    bytes in place and no temp file behind."""
+    from ocr_agent_spark.operators.merge import merge_extracted_to_file
 
-    from ocr_agent_spark.operators.merge import merge_extracted_to_sharded_files
-
-    ext = read_extracted(spark, completed_root)
-    in_memory = merge_extracted_to_markdown(ext)
-    for p in (1, 3, 16):
-        d = str(tmp_path / f"shards_{p}")
-        manifest = merge_extracted_to_sharded_files(ext, d, num_partitions=p)
-        parts = []
-        for f in manifest["files"]:
-            with open(f, "rb") as fh:
-                parts.append(fh.read())
-        concat = b"".join(parts)
-        assert concat == in_memory.encode("utf-8"), f"p={p}"
-        assert manifest["total_bytes"] == len(concat)
-        on_disk = json.load(open(f"{d}/manifest.json"))
-        assert on_disk["files"] == manifest["files"]
-        # multiple shards actually exist at p=16 (not one giant file)
-        if p == 16:
-            assert len(manifest["files"]) > 2
-        # atomic-write discipline (advice r5): no torn temp files left,
-        # and if the driver trimmed the tail it wrote a NEW file rather
-        # than rewriting the task-owned shard (zombie-attempt safety)
-        leftovers = [f for f in os.listdir(d) if ".tmp-" in f]
-        assert leftovers == []
-        last = manifest["files"][-1]
-        if last.endswith("-tail.md"):
-            orig = last.replace("-tail.md", ".md")
-            assert os.path.exists(orig)  # task-owned file untouched
+    path = tmp_path / "output.md"
+    sentinel = b"# previous artifact\n"
+    path.write_bytes(sentinel)
+    broken = read_extracted(spark, completed_root).withColumn(
+        "text", F.raise_error(F.lit("merge input unreadable"))
+    )
+    with pytest.raises(Exception, match="merge input unreadable"):
+        merge_extracted_to_file(broken, str(path))
+    assert path.read_bytes() == sentinel
+    assert [f for f in os.listdir(tmp_path) if ".tmp-" in f] == []
 
 
 def test_merge_equals_sequential_reference_shape(spark, completed_root):

@@ -260,7 +260,7 @@ def test_partition_blocks_matches_render_row_block():
         rows, columns=["url", "kind", "page_index", "total_pages", "text"]
     )
     for style in ("dollar", "brackets"):
-        _, fast = _partition_blocks(iter([batch]), style)
+        fast = _partition_blocks(iter([batch]), style)
         slow = []
         for url, kind, pi, tp, text in rows:
             block = render_row_block(

@@ -68,8 +68,7 @@ def main() -> None:
         )
     if os.path.exists(extracted_path):
         plans["merge"] = lambda: _ordered_chunks(
-            spark.read.parquet(extracted_path), "dollar", None,
-            ("url", "page_index"),
+            spark.read.parquet(extracted_path), "dollar"
         )
 
     for name, fn in plans.items():
