@@ -239,14 +239,21 @@ def cmd_status(args) -> int:
     return 0
 
 
-def cmd_reset(args) -> int:
-    from ocr_agent_spark.pipeline import extraction_store, lineage_store
+def _job_stores(job_root: str) -> list:
+    """The root's snapshot stores: the extraction table, plus the
+    separate lineage table of roots written before lineage moved into
+    the run dirs."""
+    from ocr_agent_spark.pipeline import extraction_store, legacy_lineage_store
 
+    legacy = legacy_lineage_store(job_root)
+    return [extraction_store(job_root)] + ([legacy] if legacy else [])
+
+
+def cmd_reset(args) -> int:
     if not args.yes:
         print("refusing reset without --yes", file=sys.stderr)
         return 1
-    for store_fn in (extraction_store, lineage_store):
-        store = store_fn(args.job_root)
+    for store in _job_stores(args.job_root):
         store.reset()
     merged = os.path.join(args.job_root, "output.md")
     if os.path.exists(merged):
@@ -256,19 +263,17 @@ def cmd_reset(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Fold the extraction + lineage tables into one run dir each and,
-    with --expire, reclaim snapshots beyond the retention window.
+    """Fold the extraction table (and a legacy lineage table) into one
+    run dir each and, with --expire, reclaim snapshots beyond the
+    retention window. The runs' lineage sidecars fold with their data.
 
     Maintenance for long-lived job roots (a streaming watcher commits
     one run dir per micro-batch; reads slow down with file count, not
     byte count). Beyond the reference's surface — it has no equivalent
     because its store is one SQLite file.
     """
-    from ocr_agent_spark.pipeline import extraction_store, lineage_store
-
     spark = _spark(args.cores)
-    for store_fn in (extraction_store, lineage_store):
-        store = store_fn(args.job_root)
+    for store in _job_stores(args.job_root):
         if store.latest_manifest() is None:
             continue
         run_id = store.compact(spark, num_files=args.num_files)

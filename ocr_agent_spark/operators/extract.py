@@ -15,18 +15,24 @@ fails to parse becomes a row with ``status='failed'`` and
 reserved for infrastructure faults, not data faults.
 
 Lineage (north rule): each output row carries its physical
-``partition_id`` plus the partition's running wall-clock; a cheap
-post-aggregation distills one lineage row per partition
-(partition id, doc count, byte count, wall time).
+``partition_id`` plus the partition's running wall-clock, and the task
+itself reports the partition's lineage values (doc count, byte count,
+wall time) through a keyed accumulator (``lineage_counter``) once its
+last batch is out. The driver reads them when the write returns — no
+second pass over the output — and ``lineage_from_extracted`` turns them
+into one lineage row per partition.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from datetime import datetime, timezone
+from functools import partial
 
 import pandas as pd
 
+from pyspark import Accumulator, AccumulatorParam, SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,7 +46,35 @@ EXTRACTED_SCHEMA = (
 )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+class _LineageParam(AccumulatorParam):
+    """``partition_id -> (doc_count, byte_count, wall_ms)``. A later
+    report for a partition replaces the earlier one, so a recomputed
+    partition is never counted twice (Spark already drops the updates
+    of failed task attempts)."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
+
+
+def lineage_counter(sc: SparkContext) -> Accumulator:
+    """A fresh per-run lineage accumulator for the extraction tasks."""
+    return sc.accumulator({}, _LineageParam())
+
+
+def _report(counter: Accumulator | None, partition_id: int, rows: int,
+            nbytes: int, wall_ms: int) -> None:
+    """One lineage update per task, after its last batch — and none for
+    a partition that emitted no rows (it has no lineage row)."""
+    if counter is not None and rows:
+        counter.add({partition_id: (rows, nbytes, wall_ms)})
+
+
+def _extract_batches(batches: Iterator[pd.DataFrame],
+                     counter: Accumulator | None = None) -> Iterator[pd.DataFrame]:
     """Partition iterator → extracted rows (runs on executors)."""
     # Lazy heavyweight-init idiom (runner.py:78-94 analogue): kernels are
     # module-level imports cached per Python worker, loaded once — not
@@ -53,6 +87,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ctx = TaskContext.get()
     partition_id = ctx.partitionId() if ctx is not None else -1
     t0 = time.monotonic()
+    rows = nbytes = wall_ms = 0
 
     for batch in batches:
         texts: list[str | None] = []
@@ -75,7 +110,11 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 texts.append(None)
                 statuses.append(STATUS_FAILED)
                 errors.append(repr(exc))
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        doc_bytes = batch["html"].map(len)
+        if len(batch):
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            rows += len(batch)
+            nbytes += int(doc_bytes.sum())
         yield pd.DataFrame(
             {
                 "order_key": batch["order_key"],
@@ -87,11 +126,12 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "text": texts,
                 "status": statuses,
                 "error": errors,
-                "doc_bytes": batch["html"].map(len),
+                "doc_bytes": doc_bytes,
                 "partition_id": partition_id,
                 "part_wall_ms": wall_ms,
             }
         )
+    _report(counter, partition_id, rows, nbytes, wall_ms)
 
 
 # Max rows buffered before a fused output batch is flushed. Bounds the
@@ -103,7 +143,9 @@ FUSED_OUT_BATCH_ROWS = 4096
 
 
 def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
-                                 pdf_columns: bool = False) -> Iterator[pd.DataFrame]:
+                                 pdf_columns: bool = False,
+                                 counter: Accumulator | None = None,
+                                 ) -> Iterator[pd.DataFrame]:
     """Fused probe+fan-out+extract over raw pages (runs on executors).
 
     One Arrow trip: the raw payload enters Python exactly once; page
@@ -115,7 +157,8 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
     rows — including mid-document, so one degenerate PDF's fan-out
     never accumulates unbounded rows in memory. ``part_wall_ms`` is a
     running clock per task, so ``max()`` per partition is still that
-    partition's total wall time.
+    partition's total wall time; ``counter`` receives exactly those
+    values once the last batch is out.
     """
     from pyspark import TaskContext
 
@@ -125,6 +168,7 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
     ctx = TaskContext.get()
     partition_id = ctx.partitionId() if ctx is not None else -1
     t0 = time.monotonic()
+    rows = nbytes = wall_ms = 0
 
     def new_out():
         return {
@@ -148,10 +192,13 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
         out["doc_bytes"].append(nbytes)
 
     def drain() -> pd.DataFrame:
-        nonlocal out
+        nonlocal out, rows, nbytes, wall_ms
         df = pd.DataFrame(out)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        rows += len(df)
+        nbytes += sum(out["doc_bytes"])
         df["partition_id"] = partition_id
-        df["part_wall_ms"] = int((time.monotonic() - t0) * 1000)
+        df["part_wall_ms"] = wall_ms
         out = new_out()
         return df
 
@@ -203,6 +250,7 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
                 yield drain()
         if out["url"]:
             yield drain()
+    _report(counter, partition_id, rows, nbytes, wall_ms)
 
 
 FUSED_SCHEMA = (
@@ -212,8 +260,8 @@ FUSED_SCHEMA = (
 )
 
 
-def extract_pages_fused(pages: DataFrame,
-                        pdf_columns: bool = False) -> DataFrame:
+def extract_pages_fused(pages: DataFrame, pdf_columns: bool = False,
+                        counter: Accumulator | None = None) -> DataFrame:
     """Raw pages → extracted rows in ONE payload pass (the hot path).
 
     ``pdf_columns=True`` switches PDF page rendering to the
@@ -237,12 +285,12 @@ def extract_pages_fused(pages: DataFrame,
     (pages ≤ tens) are fine; a corpus of 10k-page PDFs should instead
     take the staged path, whose explode + shuffle spreads pages across
     the cluster before the per-page extraction.
+
+    ``counter`` (from ``lineage_counter``) collects each task's lineage
+    values while the plan runs.
     """
-    if pdf_columns:
-        def fn(batches):
-            return _extract_pages_fused_batches(batches, pdf_columns=True)
-    else:
-        fn = _extract_pages_fused_batches
+    fn = partial(_extract_pages_fused_batches, pdf_columns=pdf_columns,
+                 counter=counter)
     return pages.select("url", "warc_ts", "html").mapInPandas(
         fn, schema=FUSED_SCHEMA
     )
@@ -279,7 +327,8 @@ def giant_pdf_predicate(giant_bytes: int = GIANT_PDF_BYTES,
 
 def extract_pages_auto(pages: DataFrame,
                        giant_bytes: int = GIANT_PDF_BYTES,
-                       has_giant: bool | None = None) -> DataFrame:
+                       has_giant: bool | None = None,
+                       counter: Accumulator | None = None) -> DataFrame:
     """Fused extraction with automatic giant-PDF diversion.
 
     The fused path's one skew hazard: a PDF's pages are all emitted by
@@ -298,6 +347,7 @@ def extract_pages_auto(pages: DataFrame,
 
     Output schema = FUSED_SCHEMA for both branches (the staged branch
     drops its dense order_key; order is data — (url, page_index)).
+    ``counter`` is handed to both branches' extraction tasks.
     """
     from ocr_agent_spark.operators.ingest import has_doc_meta
 
@@ -314,19 +364,20 @@ def extract_pages_auto(pages: DataFrame,
     if has_giant is None:
         has_giant = pages.filter(is_giant).limit(1).count() > 0
     if not has_giant:
-        return extract_pages_fused(pages)
+        return extract_pages_fused(pages, counter=counter)
 
-    fused_out = extract_pages_fused(pages.filter(~is_giant))
+    fused_out = extract_pages_fused(pages.filter(~is_giant), counter=counter)
     from ocr_agent_spark.operators.ingest import build_task_table
 
     staged_out = extract_tasks(
-        build_task_table(pages.filter(is_giant))
+        build_task_table(pages.filter(is_giant)), counter=counter
     ).select(*[f.split(" ")[0] for f in FUSED_SCHEMA.split(", ")])
     return fused_out.unionByName(staged_out)
 
 
 def extract_tasks(tasks: DataFrame, num_partitions: int | None = None,
-                  repartition: bool = True) -> DataFrame:
+                  repartition: bool = True,
+                  counter: Accumulator | None = None) -> DataFrame:
     """tasks → extracted (one completed-or-failed row per task).
 
     Pass ``repartition=False`` when the input is already hash-
@@ -343,29 +394,22 @@ def extract_tasks(tasks: DataFrame, num_partitions: int | None = None,
         tasks = tasks.repartition(
             num_partitions, F.xxhash64(F.col("url"), F.col("page_index"))
         )
-    return tasks.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    return tasks.mapInPandas(partial(_extract_batches, counter=counter),
+                             schema=EXTRACTED_SCHEMA)
 
 
-def lineage_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage rows (north rule A7).
+def lineage_from_extracted(counts: dict, run_id: str) -> list[dict]:
+    """Per-partition lineage rows (north rule A7) from a
+    ``lineage_counter``'s value, stamped with the commit time: one row
+    per partition that emitted rows, ordered by ``partition_id``.
 
-    ``part_wall_ms`` is a running clock within each partition, so
-    ``max()`` per partition = that partition's total extraction wall
-    time. One output row per physical partition — trivially small.
+    Each value is the task's own ``(rows emitted, sum(doc_bytes), last
+    part_wall_ms)`` — ``count``, ``sum(doc_bytes)`` and
+    ``max(part_wall_ms)`` over the partition's committed rows.
     """
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("doc_bytes").alias("byte_count"),
-            F.max("part_wall_ms").alias("wall_time_ms"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "doc_count",
-            "byte_count",
-            "wall_time_ms",
-            F.current_timestamp().alias("committed_ts"),
-        )
-    )
+    ts = datetime.now(timezone.utc).isoformat()
+    return [
+        {"run_id": run_id, "partition_id": pid, "doc_count": docs,
+         "byte_count": nbytes, "wall_time_ms": wall_ms, "committed_ts": ts}
+        for pid, (docs, nbytes, wall_ms) in sorted(counts.items())
+    ]

@@ -33,6 +33,7 @@ from __future__ import annotations
 import math
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 # One CPU-heavy task per this many PLAN-ESTIMATED bytes. The estimate
@@ -63,7 +64,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
             str(df._jdf.queryExecution().optimizedPlan().stats()
                 .sizeInBytes())
         )
-    except Exception:
+    except (Py4JJavaError, ValueError):
         return None
     # 2^63-ish means "unknown" (Statistics.DEFAULT); treat as absent.
     if size <= 0 or size >= (1 << 62):

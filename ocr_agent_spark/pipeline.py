@@ -3,11 +3,18 @@
 The Spark translation of ``cli.py enqueue`` + ``cli.py run`` (SURVEY
 §3.1–3.2) as one resumable batch job. The hot path is the FUSED
 extractor: the binary payload is scanned once, crosses the JVM→Python
-boundary once, and is never shuffled or joined —
+boundary once, and is never shuffled or joined. A run is one
+aggregate, one write and one manifest publish —
 
-    pages parquet ─ anti-join committed urls ─ mapInPandas
-        (probe + pdf fan-out + extract, one pass) ─ commit snapshot
-        (+ per-partition lineage) ─ ordered merge
+    1. one slim aggregate: total, pending count, giant-PDF bit
+       (payload-free when the input carries ingest metadata)
+    2. one write: pages ─ anti-join committed urls ─ mapInPandas
+       (probe + pdf fan-out + extract, one pass; each task reports its
+       partition's lineage to an accumulator) ─ parquet run dir
+    3. publish: the lineage rows go to the run dir's ``_lineage.json``,
+       then the manifest makes data and lineage visible together
+
+and the ordered merge reads the committed table afterwards.
 
 Resume contract: re-running with the same ``output_root`` processes
 only pages whose url is absent from the last committed snapshot — url
@@ -26,8 +33,11 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
+from datetime import datetime
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +45,7 @@ from ocr_agent_spark.cache import cache_scope
 from ocr_agent_spark.operators.extract import (
     extract_pages_auto,
     giant_pdf_predicate,
+    lineage_counter,
     lineage_from_extracted,
 )
 from ocr_agent_spark.operators.ingest import (
@@ -68,7 +79,45 @@ def extraction_store(output_root: str) -> SnapshotStore:
 
 
 def lineage_store(output_root: str) -> SnapshotStore:
+    """The separate lineage table of job roots written before lineage
+    moved into the run dirs. Read-only: nothing writes to it any more."""
     return SnapshotStore(os.path.join(output_root, "lineage"))
+
+
+def legacy_lineage_store(output_root: str) -> SnapshotStore | None:
+    """``lineage_store`` if this root has one (without creating it)."""
+    if not os.path.isdir(os.path.join(output_root, "lineage", "_snapshots")):
+        return None
+    store = lineage_store(output_root)
+    return store if store.latest_manifest() is not None else None
+
+
+LINEAGE_SCHEMA = (
+    "run_id string, partition_id int, doc_count long, byte_count long, "
+    "wall_time_ms long, committed_ts timestamp"
+)
+
+
+def commit_run(
+    spark: SparkSession,
+    store: SnapshotStore,
+    run_id: str,
+    extract: Callable[[Accumulator], DataFrame],
+    settings: dict | None = None,
+) -> None:
+    """The one commit path: ``extract(counter)`` builds the extraction
+    plan with a fresh lineage counter, and one ``store.commit`` writes
+    it, then the counter's lineage rows, then publishes both."""
+    counter = lineage_counter(spark.sparkContext)
+    try:
+        store.commit(
+            extract(counter), run_id=run_id, settings=settings,
+            lineage=lambda: lineage_from_extracted(counter.value, run_id),
+        )
+    finally:
+        # The session's accumulator registry keeps every counter: drop
+        # the per-partition values once they are on disk.
+        counter.value = {}
 
 
 def run_extraction_job(
@@ -97,41 +146,53 @@ def _run_extraction_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     store = extraction_store(output_root)
 
-    total = pages.count()
+    stats = _run_stats(pages, store.read(spark)).first()
+    total, n_pending = stats["total"], stats["n_pending"] or 0
     if total == 0:
         raise EmptyInputError("no supported input rows to enqueue")
-
-    pending = store.anti_join_committed(pages, RESUME_KEYS, spark)
-    # ONE pass computes the pending count AND the giant-PDF existence
-    # bit (folding the router's probe into the count the job already
-    # pays). When the input carries ingest-time routing metadata
-    # (``with_doc_meta``: doc_bytes, is_pdf — the fixture corpus and
-    # any production ingest persist them), this aggregate prunes to two
-    # slim fixed-width columns and never touches the payload
-    # (plan-asserted in tests/test_plans.py); only a raw 5-column
-    # input-hint-shaped table pays one payload scan here.
-    use_meta = has_doc_meta(pending)
-    stats = pending.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(giant_pdf_predicate(use_meta=use_meta).cast("int")).alias("g"),
-    ).first()
-    n_pending = stats["n"]
     if n_pending == 0:
         return RunResult(run_id, total, 0, total)
 
+    pending = store.anti_join_committed(pages, RESUME_KEYS, spark)
     # Auto-routed: fused single-pass extraction, with giant PDFs (the
     # one fused-path skew hazard) diverted to the staged explode+shuffle
     # path so their pages spread across the cluster.
-    extracted = extract_pages_auto(pending, has_giant=bool(stats["g"] or 0))
-    # Snapshot-commit the extraction output, then derive lineage from
-    # the committed files (re-read, not recompute — the expensive
-    # kernel runs exactly once).
-    store.commit(extracted, run_id=run_id, settings=settings)
-    committed = spark.read.parquet(os.path.join(store.data_dir, run_id))
-    lineage_store(output_root).commit(
-        lineage_from_extracted(committed, run_id), run_id=run_id
+    commit_run(
+        spark, store, run_id,
+        lambda counter: extract_pages_auto(
+            pending, has_giant=bool(stats["giant"]), counter=counter),
+        settings=settings,
     )
     return RunResult(run_id, total, n_pending, total - n_pending)
+
+
+def _run_stats(pages: DataFrame, committed: DataFrame | None) -> DataFrame:
+    """The run's ONE aggregate: ``total`` input rows, ``n_pending`` rows
+    whose url is not committed yet, and ``giant`` — whether any pending
+    row is a giant PDF (the router's probe, folded into the count).
+
+    On a resumed root ``pages`` is left-joined to the distinct committed
+    urls with a flag. When the input carries ingest-time routing
+    metadata (``with_doc_meta``: doc_bytes, is_pdf — the fixture corpus
+    and any production ingest persist them), the aggregate prunes to
+    slim fixed-width columns and never touches the payload
+    (plan-asserted in tests/test_plans.py); only a raw 5-column
+    input-hint-shaped table pays one payload scan here.
+    """
+    giant = giant_pdf_predicate(use_meta=has_doc_meta(pages))
+    if committed is None:
+        pending = F.lit(True)
+    else:
+        done = committed.select(*RESUME_KEYS).distinct().withColumn(
+            "_committed", F.lit(True))
+        pages = pages.join(done, RESUME_KEYS, "left")
+        pending = F.col("_committed").isNull()
+    return pages.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.sum(pending.cast("long")).alias("n_pending"),
+        F.coalesce(F.max((pending & giant).cast("int")), F.lit(0))
+        .cast("boolean").alias("giant"),
+    )
 
 
 def read_extracted(spark: SparkSession, output_root: str) -> DataFrame | None:
@@ -156,7 +217,20 @@ def attach_order_key(extracted: DataFrame) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, output_root: str) -> DataFrame | None:
-    return lineage_store(output_root).read(spark)
+    """Lineage rows of the live runs (each run dir's ``_lineage.json``),
+    plus a pre-sidecar root's ``lineage_store``; None when there are none."""
+    rows = [
+        (r["run_id"], r["partition_id"], r["doc_count"], r["byte_count"],
+         r["wall_time_ms"], datetime.fromisoformat(r["committed_ts"]))
+        for r in extraction_store(output_root).lineage()
+    ]
+    legacy = legacy_lineage_store(output_root)
+    if legacy is None and not rows:
+        return None
+    lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    if legacy is not None:
+        lineage = legacy.read(spark).unionByName(lineage)
+    return lineage
 
 
 def merge_job(

@@ -20,7 +20,12 @@ Layout::
 
     <root>/
       data/<run_id>/part-*.parquet      # written, then committed
+      data/<run_id>/_lineage.json       # the run's lineage rows (optional)
       _snapshots/snap-000007.json       # {"seq":7,"runs":[...],"run_id":...}
+
+A run's lineage sidecar is written into its run dir before the manifest
+publish, so it becomes visible exactly when the run's data does (Spark's
+file index skips ``_``-prefixed files: data reads never see it).
 
 Manifests are cumulative (each lists all live run dirs), so reading =
 parse latest manifest + read its run dirs. Concurrency model: single
@@ -37,12 +42,26 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 
+LINEAGE_FILE = "_lineage.json"
+
+
 class CommitConflictError(RuntimeError):
     """A concurrent writer published the same snapshot seq first."""
+
+
+def _write_json_durably(path: str, obj) -> None:
+    """Write ``obj`` under a hidden temp name, fsync, then rename."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
 
 
 class SnapshotStore:
@@ -99,8 +118,12 @@ class SnapshotStore:
                 pass  # a hard kill may still strand a .tmp; reads ignore it
 
     def commit(self, df: DataFrame, run_id: str | None = None,
-               settings: dict | None = None) -> str:
+               settings: dict | None = None,
+               lineage: Callable[[], list[dict]] | None = None) -> str:
         """Write ``df`` under a fresh run dir, then atomically publish it.
+
+        ``lineage`` (optional) is called once the data is written; its
+        rows go to the run dir's ``_lineage.json`` before the publish.
 
         ``settings`` (optional, JSON-serializable) is recorded verbatim
         in the manifest — the per-job settings record the reference
@@ -113,6 +136,8 @@ class SnapshotStore:
         if os.path.exists(run_dir):
             raise ValueError(f"run_id {run_id!r} already written")
         df.write.mode("errorifexists").parquet(run_dir)
+        if lineage is not None:
+            _write_json_durably(os.path.join(run_dir, LINEAGE_FILE), lineage())
 
         prev = self.latest_manifest()
         seq = (prev["seq"] + 1) if prev else 0
@@ -166,6 +191,9 @@ class SnapshotStore:
         until ``expire_snapshots`` reclaims them). Readers are never
         disturbed — the publish is the same atomic CAS as any commit.
 
+        The folded runs' lineage sidecars are concatenated into the
+        compacted run's, each row keeping its original ``run_id``.
+
         Returns the compacted run_id. No-op error if the table is empty.
         """
         # Base BOTH the data read and the published seq on one manifest
@@ -191,6 +219,9 @@ class SnapshotStore:
         run_id = f"compact-{uuid.uuid4().hex[:12]}"
         run_dir = os.path.join(self.data_dir, run_id)
         df.write.mode("errorifexists").parquet(run_dir)
+        lineage = self._lineage_of(prev["runs"])
+        if lineage:
+            _write_json_durably(os.path.join(run_dir, LINEAGE_FILE), lineage)
 
         seq = prev["seq"] + 1
         manifest = {
@@ -317,6 +348,23 @@ class SnapshotStore:
 
             reader = reader.schema(StructType.fromJson(manifest["schema"]))
         return reader.parquet(*dirs)
+
+    def _lineage_of(self, runs: list[str]) -> list[dict]:
+        """Concatenated lineage sidecars of ``runs`` (runs without one
+        contribute nothing)."""
+        rows = []
+        for run in runs:
+            path = os.path.join(self.data_dir, run, LINEAGE_FILE)
+            if os.path.exists(path):
+                with open(path) as fh:
+                    rows.extend(json.load(fh))
+        return rows
+
+    def lineage(self) -> list[dict]:
+        """Lineage rows of the latest snapshot's runs (driver-side JSON;
+        one small sidecar per live run dir)."""
+        manifest = self.latest_manifest()
+        return self._lineage_of(manifest["runs"]) if manifest else []
 
     def snapshots(self) -> list[dict]:
         """Snapshot history (the GUI job-state listing analogue)."""

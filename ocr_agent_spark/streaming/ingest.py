@@ -25,10 +25,7 @@ import os
 from pyspark.sql import SparkSession
 
 from ocr_agent_spark.fixtures import PAGES_ARROW_SCHEMA_DDL
-from ocr_agent_spark.operators.extract import (
-    FUSED_SCHEMA,
-    _extract_pages_fused_batches,
-)
+from ocr_agent_spark.operators.extract import extract_pages_fused
 
 
 def _count_output_rows(spark: SparkSession, output_dir: str) -> int:
@@ -169,12 +166,8 @@ def run_streaming_extraction(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     pages = reader.load(input_dir)
 
-    extracted = pages.select("url", "warc_ts", "html").mapInPandas(
-        _extract_pages_fused_batches, schema=FUSED_SCHEMA
-    )
-
     query = (
-        extracted.writeStream.format("parquet")
+        extract_pages_fused(pages).writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -195,6 +188,22 @@ def run_streaming_extraction(
     return _count_output_rows(spark, output_dir) - (before_count or 0)
 
 
+def _claim_replay(store, run_id: str) -> bool:
+    """Idempotent ``foreachBatch`` guard for a stream committing into
+    ``store``: False if ``run_id`` (derived from the batch id) is
+    already published — a replayed batch, skip it; otherwise clear a
+    run dir left by a crash before its publish and return True."""
+    import shutil
+
+    manifest = store.latest_manifest()
+    if manifest is not None and run_id in manifest["runs"]:
+        return False
+    run_dir = os.path.join(store.data_dir, run_id)
+    if os.path.exists(run_dir):
+        shutil.rmtree(run_dir)  # crash between write and publish
+    return True
+
+
 def run_streaming_extraction_committed(
     spark: SparkSession,
     input_dir: str,
@@ -203,10 +212,11 @@ def run_streaming_extraction_committed(
     max_files_per_trigger: int | None = None,
 ) -> list[str]:
     """Streaming drain whose sink is the SNAPSHOT STORE: each micro-batch
-    commits atomically (manifest publish) with per-partition lineage
-    rows — the streaming twin of ``pipeline.run_extraction_job``, so
-    streamed and batch output share one table, one resume contract, one
-    merge/status surface (ST1–ST4 unified with S14).
+    is extracted and committed through ``pipeline.commit_run`` — data
+    and per-partition lineage in one atomic manifest publish — the
+    streaming twin of ``pipeline.run_extraction_job``, so streamed and
+    batch output share one table, one resume contract, one merge/status
+    surface (ST1–ST4 unified with S14).
 
     Exactly-once: source offsets live in the streaming checkpoint;
     after a failure ``foreachBatch`` re-delivers the same ``batch_id``,
@@ -223,13 +233,9 @@ def run_streaming_extraction_committed(
 
     Returns the run_ids committed by this drain (empty on a no-op).
     """
-    import shutil
-
-    from ocr_agent_spark.operators.extract import lineage_from_extracted
-    from ocr_agent_spark.pipeline import extraction_store, lineage_store
+    from ocr_agent_spark.pipeline import commit_run, extraction_store
 
     store = extraction_store(output_root)
-    lstore = lineage_store(output_root)
     committed_now: list[str] = []
 
     reader = (
@@ -239,45 +245,17 @@ def run_streaming_extraction_committed(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     pages = reader.load(input_dir)
-    extracted = pages.select("url", "warc_ts", "html").mapInPandas(
-        _extract_pages_fused_batches, schema=FUSED_SCHEMA
-    )
 
-    def ensure_lineage(run_id: str, run_dir: str) -> None:
-        # Idempotent lineage publish from the COMMITTED files. Runs on
-        # every delivery of a batch — including a replay whose
-        # extraction manifest is already published — so a crash landing
-        # between the extraction commit and the lineage commit is
-        # repaired on the next drain instead of leaving that batch's
-        # lineage missing forever (ADVICE r2, medium).
-        lmanifest = lstore.latest_manifest()
-        if lmanifest is not None and run_id in lmanifest["runs"]:
-            return
-        ldir = os.path.join(lstore.data_dir, run_id)
-        if os.path.exists(ldir):
-            shutil.rmtree(ldir)  # crash between lineage write and publish
-        committed = spark.read.parquet(run_dir)
-        lstore.commit(lineage_from_extracted(committed, run_id),
-                      run_id=run_id)
-
-    def commit_batch(df, batch_id: int) -> None:
+    def commit_batch(batch_pages, batch_id: int) -> None:
         run_id = f"stream{batch_id:08d}"
-        run_dir = os.path.join(store.data_dir, run_id)
-        manifest = store.latest_manifest()
-        if manifest is not None and run_id in manifest["runs"]:
-            # replayed batch already published: exactly-once — but the
-            # lineage commit may still be missing if the crash hit
-            # between the two publishes; repair before returning.
-            ensure_lineage(run_id, run_dir)
+        if not _claim_replay(store, run_id):
             return
-        if os.path.exists(run_dir):
-            shutil.rmtree(run_dir)  # crash between write and publish
-        store.commit(df, run_id=run_id)
-        ensure_lineage(run_id, run_dir)
+        commit_run(spark, store, run_id,
+                   lambda counter: extract_pages_fused(batch_pages, counter=counter))
         committed_now.append(run_id)
 
     query = (
-        extracted.writeStream.foreachBatch(commit_batch)
+        pages.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -20,16 +20,13 @@ Exactly-once: manifest offsets live in the streaming checkpoint;
 ``foreachBatch`` re-delivers the same ``batch_id`` after a failure,
 the run_id derives from it, and a replayed run_id already present in
 the snapshot manifest is skipped (same idempotent recipe as
-``run_streaming_extraction_committed`` — streaming/ingest.py:198).
+``run_streaming_extraction_committed``).
 An archive listed in two different manifests would be re-parsed;
 downstream url-revisit policy (latest ``warc_ts`` wins) makes that a
 dedup concern, not a correctness loss — list each archive once.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import SparkSession
 
@@ -45,32 +42,19 @@ def run_streaming_warc_extraction(
     """Drain all pending manifests (AvailableNow); returns committed
     run_ids. Each micro-batch: manifest lines → ``read_warc`` over the
     archive paths → fused extraction → atomic snapshot commit with
-    per-partition lineage."""
-    from ocr_agent_spark.operators.extract import (
-        extract_pages_fused,
-        lineage_from_extracted,
-    )
-    from ocr_agent_spark.pipeline import extraction_store, lineage_store
+    per-partition lineage (``pipeline.commit_run``)."""
+    from ocr_agent_spark.operators.extract import extract_pages_fused
+    from ocr_agent_spark.pipeline import commit_run, extraction_store
     from ocr_agent_spark.sources.warc import read_warc
+    from ocr_agent_spark.streaming.ingest import _claim_replay
 
     store = extraction_store(output_root)
-    lstore = lineage_store(output_root)
     committed_now: list[str] = []
 
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     manifests = reader.load(manifest_dir)
-
-    def ensure_lineage(run_id: str, run_dir: str) -> None:
-        lmanifest = lstore.latest_manifest()
-        if lmanifest is not None and run_id in lmanifest["runs"]:
-            return
-        ldir = os.path.join(lstore.data_dir, run_id)
-        if os.path.exists(ldir):
-            shutil.rmtree(ldir)  # crash between lineage write and publish
-        committed = spark.read.parquet(run_dir)
-        lstore.commit(lineage_from_extracted(committed, run_id), run_id=run_id)
 
     def commit_batch(paths_df, batch_id: int) -> None:
         # The batch frame holds PATH STRINGS only — collecting it moves
@@ -81,16 +65,11 @@ def run_streaming_warc_extraction(
         if not paths:
             return
         run_id = f"warc{batch_id:08d}"
-        run_dir = os.path.join(store.data_dir, run_id)
-        manifest = store.latest_manifest()
-        if manifest is not None and run_id in manifest["runs"]:
-            ensure_lineage(run_id, run_dir)  # replay: repair lineage only
+        if not _claim_replay(store, run_id):
             return
-        if os.path.exists(run_dir):
-            shutil.rmtree(run_dir)  # crash between write and publish
         pages = read_warc(spark, paths, num_partitions=num_partitions)
-        store.commit(extract_pages_fused(pages), run_id=run_id)
-        ensure_lineage(run_id, run_dir)
+        commit_run(spark, store, run_id,
+                   lambda counter: extract_pages_fused(pages, counter=counter))
         committed_now.append(run_id)
 
     query = (

@@ -26,22 +26,28 @@ def test_cli_lifecycle(spark, tmp_path, capsys):
     assert main(["status", "--job-root", job_root]) == 0
     out = capsys.readouterr().out
     assert "completed:" in out and "progress: 100.00%" in out
+    run_lines = [ln for ln in out.splitlines() if ln.startswith("run ")]
+    assert len(run_lines) == 1, out
 
     # resume: second run processes nothing
     assert main(["run", "--job-root", job_root]) == 0
     assert "processed=0 skipped=30" in capsys.readouterr().out
 
-    # compact folds both stores to one run dir each; status + resume
-    # semantics unchanged afterwards
+    # compact folds the table (and the run's lineage, which lives in its
+    # run dir) into one run dir; status + resume semantics unchanged
+    # afterwards, and the lineage keeps the original run_id
     assert main(["compact", "--job-root", job_root, "--expire",
                  "--num-files", "1"]) == 0
     out = capsys.readouterr().out
-    assert "extracted: compacted ->" in out and "lineage: compacted ->" in out
+    assert "extracted: compacted ->" in out and "lineage:" not in out
     assert len(os.listdir(os.path.join(job_root, "extracted", "data"))) == 1
+    assert not os.path.exists(os.path.join(job_root, "lineage"))
     assert main(["run", "--job-root", job_root]) == 0
     assert "processed=0 skipped=30" in capsys.readouterr().out
     assert main(["status", "--job-root", job_root]) == 0
-    assert "progress: 100.00%" in capsys.readouterr().out
+    out = capsys.readouterr().out
+    assert "progress: 100.00%" in out
+    assert run_lines[0] in out.splitlines()  # same run_id, same figures
 
     # reset requires confirmation, then empties the store
     assert main(["reset", "--job-root", job_root]) == 1

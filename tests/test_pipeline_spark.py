@@ -116,6 +116,140 @@ def test_lineage_rows(spark, completed_root):
     assert all(r["run_id"] == "r1" for r in rows)
 
 
+def _assert_lineage_equals_data(spark, root, run_id):
+    """Per partition_id, the run's lineage row == count, sum(doc_bytes)
+    and max(part_wall_ms) over the rows the run committed."""
+    from ocr_agent_spark.pipeline import extraction_store
+
+    data = {
+        r["partition_id"]: (r["n"], r["b"], r["w"])
+        for r in spark.read.parquet(
+            os.path.join(extraction_store(root).data_dir, run_id)
+        )
+        .groupBy("partition_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("doc_bytes").alias("b"),
+             F.max("part_wall_ms").alias("w"))
+        .collect()
+    }
+    lineage = {
+        r["partition_id"]: (r["doc_count"], r["byte_count"], r["wall_time_ms"])
+        for r in read_lineage(spark, root).filter(F.col("run_id") == run_id)
+        .collect()
+    }
+    assert data and lineage == data
+
+
+def test_lineage_equals_data_fused(spark, completed_root):
+    _assert_lineage_equals_data(spark, completed_root, "r1")
+
+
+def test_lineage_equals_data_staged_giant_pdf(spark, tmp_path):
+    """A run whose giant PDF takes the staged explode+shuffle path is
+    counted by both extraction kernels (fused and staged tasks)."""
+    from ocr_agent_spark.kernel.minipdf import build_pdf
+    from ocr_agent_spark.operators.extract import extract_pages_auto
+    from ocr_agent_spark.pipeline import commit_run, extraction_store
+
+    giant = build_pdf([[f"PAGE_{p}_MARK"] for p in range(40)])
+    records = generate_pages(20)
+    df = spark.createDataFrame(
+        [(r.url, r.warc_ts, r.html) for r in records]
+        + [("https://big.example/doc", None, giant)],
+        "url string, warc_ts timestamp, html binary",
+    )
+    root = str(tmp_path / "giant")
+    commit_run(
+        spark, extraction_store(root), "g",
+        lambda counter: extract_pages_auto(
+            df, giant_bytes=len(giant), counter=counter),
+    )
+    ext = read_extracted(spark, root)
+    giant_parts = {r["partition_id"] for r in
+                   ext.filter(F.col("url") == "https://big.example/doc").collect()}
+    assert len(giant_parts) > 1  # the staged shuffle spread its pages
+    _assert_lineage_equals_data(spark, root, "g")
+
+
+def test_run_commit_is_atomic(spark, corpus, tmp_path, monkeypatch):
+    """A run killed after its data and lineage are written but before the
+    manifest publish leaves nothing visible; the re-run commits the same
+    rows and exactly one lineage set; a zero-pending re-run publishes no
+    manifest."""
+    from ocr_agent_spark.pipeline import extraction_store
+    from ocr_agent_spark.sources.snapshot import LINEAGE_FILE, SnapshotStore
+
+    pages = corpus.limit(25)
+    root = str(tmp_path / "crash")
+
+    def killed(self, manifest, seq):
+        raise RuntimeError("killed before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_publish", killed)
+        with pytest.raises(RuntimeError, match="killed before publish"):
+            run_extraction_job(spark, pages, root, run_id="crashed")
+    store = extraction_store(root)
+    assert os.path.exists(os.path.join(store.data_dir, "crashed", LINEAGE_FILE))
+    assert read_extracted(spark, root) is None
+    assert read_lineage(spark, root) is None
+
+    result = run_extraction_job(spark, pages, root, run_id="rerun")
+    assert result.pages_skipped_committed == 0
+    clean = str(tmp_path / "clean")
+    run_extraction_job(spark, pages, clean, run_id="rerun")
+
+    def rows(r):
+        return sorted(
+            (x["url"], x["page_index"], x["status"], x["text"])
+            for x in read_extracted(spark, r).collect()
+        )
+
+    assert rows(root) == rows(clean)
+    lineage = read_lineage(spark, root)
+    assert {r["run_id"] for r in lineage.collect()} == {"rerun"}
+    _assert_lineage_equals_data(spark, root, "rerun")
+
+    n_manifests = len(store.snapshots())
+    again = run_extraction_job(spark, pages, root, run_id="noop")
+    assert again.pages_processed == 0
+    assert len(store.snapshots()) == n_manifests
+
+
+def test_read_lineage_legacy_root(spark, corpus, tmp_path):
+    """A root written before lineage moved into the run dirs keeps its
+    separate lineage table; read_lineage returns its rows together with
+    the sidecar rows of a new run, and the new run writes nothing there."""
+    from ocr_agent_spark.operators.extract import extract_pages_fused
+    from ocr_agent_spark.pipeline import extraction_store, lineage_store
+
+    root = str(tmp_path / "legacy")
+    store = extraction_store(root)
+    store.commit(extract_pages_fused(corpus.limit(10)), run_id="old")
+    old_rows = spark.read.parquet(os.path.join(store.data_dir, "old"))
+    # the pre-sidecar lineage table, as such roots carry it
+    lineage_store(root).commit(
+        old_rows.groupBy("partition_id").agg(
+            F.count(F.lit(1)).alias("doc_count"),
+            F.sum("doc_bytes").alias("byte_count"),
+            F.max("part_wall_ms").alias("wall_time_ms"),
+        ).select(F.lit("old").alias("run_id"), "partition_id", "doc_count",
+                 "byte_count", "wall_time_ms",
+                 F.current_timestamp().alias("committed_ts")),
+        run_id="old",
+    )
+
+    result = run_extraction_job(spark, corpus, root, run_id="new")
+    assert result.pages_skipped_committed == 10
+    lineage = read_lineage(spark, root)
+    docs = {}
+    for r in lineage.collect():
+        docs[r["run_id"]] = docs.get(r["run_id"], 0) + r["doc_count"]
+    assert docs == {"old": old_rows.count(),
+                    "new": read_extracted(spark, root).count() - old_rows.count()}
+    assert len(lineage_store(root).snapshots()) == 1  # nothing new written
+    _assert_lineage_equals_data(spark, root, "new")
+
+
 def test_merge_parallelism_invariance(spark, completed_root):
     """The merge's range partition count comes from Spark conf (shuffle
     parallelism caps it, the advisory partition size divides the plan

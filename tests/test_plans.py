@@ -41,26 +41,40 @@ def test_column_pruning_excludes_binary_payload(spark, pages_path):
         assert "html" not in scan_cols, scan_cols
 
 
-def test_pending_stats_agg_prunes_payload(spark, pages_path):
-    """run_extraction_job's pending-stats aggregate (count + giant-PDF
-    bit) must be metadata-only when ingest persisted doc_bytes/is_pdf:
-    its ReadSchema excludes html (VERDICT r2 'what's wrong' #1 — the
+def test_pending_stats_agg_prunes_payload(spark, pages_path, tmp_path,
+                                          monkeypatch):
+    """The aggregate run_extraction_job actually runs (total, pending
+    count, giant-PDF bit) must be metadata-only when ingest persisted
+    doc_bytes/is_pdf: its ReadSchema excludes html, on a fresh root and
+    on a resumed root (pages left-joined to the committed urls), whose
+    committed side reads url only (VERDICT r2 'what's wrong' #1 — the
     fallback for raw 5-column inputs reads the payload once, but the
     fixture/ingest corpus must never pay a second payload scan)."""
-    from ocr_agent_spark.operators.extract import giant_pdf_predicate
+    from ocr_agent_spark import pipeline
     from ocr_agent_spark.operators.ingest import has_doc_meta
 
     pages = spark.read.parquet(pages_path)
     assert has_doc_meta(pages)
-    stats = pages.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(giant_pdf_predicate(use_meta=True).cast("int")).alias("g"),
-    )
-    scans = read_schema_columns(stats)
-    assert scans, "expected at least one parquet scan in the stats plan"
-    for scan_cols in scans:
-        assert "html" not in scan_cols, scan_cols
-        assert "text" not in scan_cols, scan_cols
+    seen = []
+    real = pipeline._run_stats
+
+    def spy(*args):
+        seen.append(real(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(pipeline, "_run_stats", spy)
+    root = str(tmp_path / "job")
+    pipeline.run_extraction_job(spark, pages.limit(10), root, run_id="a")
+    pipeline.run_extraction_job(spark, pages, root, run_id="b")
+    fresh, resumed = seen
+    assert "Join" not in fresh._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftOuter" in resumed._jdf.queryExecution().optimizedPlan().toString()
+    for stats in (fresh, resumed):
+        scans = read_schema_columns(stats)
+        assert scans, "expected at least one parquet scan in the stats plan"
+        for scan_cols in scans:
+            assert "html" not in scan_cols, scan_cols
+            assert "text" not in scan_cols, scan_cols
 
 
 def test_job_results_identical_with_and_without_meta(spark, tmp_path):

@@ -5,6 +5,7 @@ the live table into one run (same rows, same resume semantics, history
 preserved) and expire_snapshots() reclaims unreferenced dirs.
 """
 
+import json
 import os
 
 import pytest
@@ -40,6 +41,33 @@ def test_compact_same_rows_fewer_dirs(spark, multi_run_store):
     # history preserved: pre-compaction snapshot still readable
     assert store.read(spark, as_of_seq=3).count() == 20
     assert store.latest_manifest()["compacted_from"] == ["r0", "r1", "r2", "r3"]
+
+
+def test_compact_carries_lineage_sidecars(spark, tmp_path):
+    """The compacted run dir carries the union of the folded runs'
+    lineage sidecars, each row under its original run_id; data reads
+    never see the sidecar."""
+    from ocr_agent_spark.sources.snapshot import LINEAGE_FILE
+
+    store = SnapshotStore(str(tmp_path / "t"))
+    for i in range(3):
+        rows = [{"run_id": f"r{i}", "partition_id": p, "doc_count": i + p}
+                for p in range(2)]
+        store.commit(
+            spark.createDataFrame([(i * 10 + j,) for j in range(5)], "id long"),
+            run_id=f"r{i}",
+            lineage=(lambda rows=rows: rows) if i != 1 else None,
+        )
+    before = store.lineage()
+    assert [r["run_id"] for r in before] == ["r0", "r0", "r2", "r2"]
+
+    run_id = store.compact(spark, num_files=1)
+    with open(os.path.join(store.data_dir, run_id, LINEAGE_FILE)) as fh:
+        assert json.load(fh) == before
+    store.expire_snapshots(keep_latest=1)
+    assert store.lineage() == before
+    assert store.read(spark).columns == ["id"]
+    assert store.read(spark).count() == 15
 
 
 def test_resume_still_exact_after_compaction(spark, tmp_path):

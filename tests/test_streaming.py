@@ -160,46 +160,39 @@ def test_streaming_snapshot_committed_sink(spark, tmp_path):
     assert merged.startswith("# Extracted Output")
 
 
-def test_committed_streaming_repairs_missing_lineage(spark, tmp_path):
-    """ADVICE r2 (medium): a crash landing between the extraction-manifest
-    publish and the lineage publish must not leave that batch's lineage
-    missing forever — the next drain repairs it from the committed run
-    dir, even though the extraction manifest already lists the run."""
-    import shutil
-
-    from ocr_agent_spark.fixtures import generate_pages
-    from ocr_agent_spark.pipeline import lineage_store, read_lineage
+def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
+    """Each micro-batch publishes its rows and their lineage in one
+    manifest, so there is no window where a run is committed without
+    lineage. A drain replayed with a fresh checkpoint redelivers every
+    batch: it commits nothing, every committed run still has exactly its
+    lineage, and no row is duplicated."""
+    from ocr_agent_spark.pipeline import (
+        extraction_store,
+        read_extracted,
+        read_lineage,
+    )
     from ocr_agent_spark.streaming.ingest import (
         run_streaming_extraction_committed,
     )
 
     inbox = str(tmp_path / "inbox")
     root = str(tmp_path / "job")
-    ckpt = str(tmp_path / "ckpt")
     records = generate_pages(12)
     _write_batch(f"{inbox}/b0.parquet", records)
 
-    runs = run_streaming_extraction_committed(spark, inbox, root, ckpt)
+    runs = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt"))
     assert len(runs) >= 1
+    assert not os.path.exists(os.path.join(root, "lineage"))
 
-    # Simulate the crash window: extraction manifest committed, lineage
-    # manifest missing for the last run (wipe lineage store entirely —
-    # strictly worse than the real window).
-    lstore = lineage_store(root)
-    shutil.rmtree(lstore.root)
-
-    # Replay the drain with a FRESH checkpoint so foreachBatch redelivers
-    # batch 0; the extraction manifest already lists the run_id, so the
-    # early return path must now repair lineage before returning.
-    ckpt2 = str(tmp_path / "ckpt2")
-    replay_runs = run_streaming_extraction_committed(spark, inbox, root, ckpt2)
+    replay_runs = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt2"))
     assert replay_runs == []  # no new extraction commits (exactly-once)
 
-    lineage = read_lineage(spark, root)
-    assert lineage is not None
-    run_ids = {r["run_id"] for r in lineage.select("run_id").distinct().collect()}
-    assert set(runs) <= run_ids
-    # extraction table unchanged (no dup rows from the replay)
-    from ocr_agent_spark.pipeline import read_extracted
     ext = read_extracted(spark, root)
     assert ext.count() == ext.select("url", "page_index").distinct().count()
+    docs = {}
+    for r in read_lineage(spark, root).collect():
+        docs[r["run_id"]] = docs.get(r["run_id"], 0) + r["doc_count"]
+    assert set(docs) == set(extraction_store(root).latest_manifest()["runs"])
+    assert sum(docs.values()) == ext.count()
