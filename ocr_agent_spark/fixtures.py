@@ -153,11 +153,12 @@ def write_pages_parquet(path: str, n: int, seed: int = 42,
                         with_meta: bool = True) -> None:
     """Materialize the corpus as parquet via pyarrow (no Spark needed).
 
-    Files and row groups are kept small (5k rows/file, 512 rows/group ≈
-    2 MB) so the Spark scan actually splits: one huge row group makes
-    the whole source read a single task regardless of cluster size. At
-    real scale the same rule holds in reverse — row groups sized so
-    `spark.sql.files.maxPartitionBytes` yields ≥ 2-3 tasks per core.
+    Row groups are kept small (512 rows/group ≈ 2 MB) so the Spark scan
+    can split a file: a split is a range of row groups, and one huge
+    row group makes the whole source read a single task regardless of
+    cluster size. Spark packs whole files into splits by its
+    bytes-per-core rule (see ``session``), so a small ``rows_per_file``
+    writes many small files that still read as about one split per core.
 
     ``with_meta`` persists the ingest-time slim routing columns
     (``doc_bytes``, ``is_pdf`` — see ``operators.ingest.with_doc_meta``)

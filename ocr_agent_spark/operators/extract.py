@@ -2,12 +2,17 @@
 
 Spark translation of the reference's scheduler loop + per-task OCR
 (cli.py:222-244 → deepseek_ocr2_runner.py:122-177): instead of one row
-at a time in one thread, tasks are hash-partitioned by
-``xxhash64(url, page_index)`` (including page_index spreads a giant
-PDF's pages across partitions — key-level skew handling; host-level
-skew never arises because we partition on full url hash, not host) and
-each partition flows through ``mapInPandas`` — one Python invocation
-per Arrow batch, thousands of docs per call, no per-row Python.
+at a time in one thread, each partition flows through ``mapInPandas`` —
+one Python invocation per Arrow batch, thousands of docs per call, no
+per-row Python.
+
+A fused task (``extract_pages_fused``, the job's path) is one scan
+split of the pages table, sized by Spark's bytes-per-core rule (see
+``session``): no shuffle, and host-level skew cannot concentrate because
+nothing is keyed by host. Only the staged branch (``extract_tasks``,
+which ``extract_pages_auto`` uses for giant PDFs) hash-partitions by
+``xxhash64(url, page_index)``, so one giant PDF's pages spread across
+partitions.
 
 Failure contract (design rule D2, cli.py:239-243): a document that
 fails to parse becomes a row with ``status='failed'`` and

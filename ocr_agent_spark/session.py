@@ -5,6 +5,23 @@ AQE on (runtime re-plan + skew-join splitting), Arrow on with batches
 sized to "thousands of documents per invocation" (BASELINE north_star),
 Python worker reuse so kernel module state loads once per worker, UTC
 session timezone for deterministic timestamp round-trips.
+
+There is deliberately no scan-split override: splits follow Spark's own
+bytes-per-core rule, ``min(maxPartitionBytes, max(openCostInBytes,
+totalBytes / defaultParallelism))``, where ``totalBytes`` charges each
+file its open cost. That packs a small corpus into about one split per
+core, so the fused extraction (one Python task per split) runs as one
+wave. A Python task has a fixed cost of about 0.2 s on a 4-vCPU host
+before any program code runs, mostly pyspark's per-task
+``importlib.invalidate_caches()``, which makes every ``zipimporter`` on
+``pyspark.zip`` re-read the zip's directory. A smaller split cap buys
+extra waves of that cost, not parallelism. A deployment that wants
+another split size sets Spark's ``spark.sql.files.maxPartitionBytes``
+through ``extra_conf`` or its Spark defaults.
+
+``cores`` defaults to ``SPARK_GRAFT_CPUS`` or else to the CPUs this
+process may run on (its affinity mask, not the machine's count), since
+``local[N]``'s N is the size of that wave.
 """
 
 from __future__ import annotations
@@ -24,7 +41,7 @@ def build_spark(
 ) -> SparkSession:
     if cores is None:
         cores_env = os.environ.get("SPARK_GRAFT_CPUS")
-        cores = int(cores_env) if cores_env else (os.cpu_count() or 8)
+        cores = int(cores_env) if cores_env else len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
 
@@ -52,16 +69,6 @@ def build_spark(
         # to 1 (fail fast); set the cluster default explicitly so tests
         # exercise the same retry semantics a real cluster has.
         .config("spark.task.maxFailures", "4")
-        # Scan-split sizing: small enough that this sandbox's ~4-20 MB
-        # fixture files split into 2+ ranges each, so a 40-file corpus
-        # does not schedule exactly 40 tasks on 32 cores (a 2-wave tail
-        # that idles a quarter of the machine — guide §2.6). At 100 TB
-        # with ~1 GB files raise toward the 128 MB default via the env
-        # knob — the invariant is tasks-per-core, not the byte value.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

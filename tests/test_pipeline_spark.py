@@ -170,6 +170,27 @@ def test_lineage_equals_data_staged_giant_pdf(spark, tmp_path):
     _assert_lineage_equals_data(spark, root, "g")
 
 
+def test_many_small_files_extract_in_one_wave(spark, tmp_path):
+    """A corpus of ~2 small files per core is packed into at most one
+    scan split per core, so the fused extraction runs one wave of Python
+    tasks (one lineage row per task) rather than one task per file."""
+    from ocr_agent_spark.fixtures import write_pages_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "pages")
+    write_pages_parquet(src, N_DOCS, rows_per_file=max(1, N_DOCS // (2 * cores)))
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) > cores
+
+    root = str(tmp_path / "job")
+    run_extraction_job(spark, spark.read.parquet(src), root, run_id="w")
+    n_parts = read_lineage(spark, root).filter(F.col("run_id") == "w").count()
+    assert 1 < n_parts <= cores
+    _assert_lineage_equals_data(spark, root, "w")
+    got = {(r["url"], r["page_index"]): r["text"]
+           for r in read_extracted(spark, root).collect()}
+    assert got == _expected_rows()
+
+
 def test_run_commit_is_atomic(spark, corpus, tmp_path, monkeypatch):
     """A run killed after its data and lineage are written but before the
     manifest publish leaves nothing visible; the re-run commits the same
