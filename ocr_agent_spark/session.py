@@ -3,8 +3,10 @@
 Single place where execution knobs live so tests, bench and jobs agree:
 AQE on (runtime re-plan + skew-join splitting), Arrow on with batches
 sized to "thousands of documents per invocation" (BASELINE north_star),
-Python worker reuse so kernel module state loads once per worker, UTC
-session timezone for deterministic timestamp round-trips.
+Python worker reuse so kernel module state loads once per worker, a
+worker daemon (``worker_daemon``) that loads it before forking so a new
+worker does not import it inside its first task, UTC session timezone
+for deterministic timestamp round-trips.
 
 There is deliberately no scan-split override: splits follow Spark's own
 bytes-per-core rule, ``min(maxPartitionBytes, max(openCostInBytes,
@@ -58,6 +60,7 @@ def build_spark(
             str(DEFAULT_ARROW_BATCH_ROWS),
         )
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", "ocr_agent_spark.worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         # Transient-failure retry: the reference retries SQLite connects
         # with backoff (queue_store.py:205-227 in the reference repo);

@@ -191,6 +191,29 @@ def test_many_small_files_extract_in_one_wave(spark, tmp_path):
     assert got == _expected_rows()
 
 
+def test_python_workers_fork_from_the_preloading_daemon(spark):
+    """Every Python worker is forked from ``worker_daemon``, which has
+    imported the extraction stack, so a task that imports nothing itself
+    finds that stack loaded."""
+    from ocr_agent_spark.worker_daemon import PRELOAD
+
+    def worker_state(_):
+        import os
+        import sys
+
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as fh:
+            parent = fh.read().replace(b"\0", b" ").decode()
+        yield parent, [name for name in PRELOAD if name not in sys.modules]
+
+    cores = spark.sparkContext.defaultParallelism
+    states = (spark.sparkContext.parallelize(range(cores), cores)
+              .mapPartitions(worker_state).collect())
+    assert len(states) == cores
+    for parent, missing in states:
+        assert "-m ocr_agent_spark.worker_daemon" in parent
+        assert missing == []
+
+
 def test_run_commit_is_atomic(spark, corpus, tmp_path, monkeypatch):
     """A run killed after its data and lineage are written but before the
     manifest publish leaves nothing visible; the re-run commits the same
