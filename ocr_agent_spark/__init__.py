@@ -11,11 +11,19 @@ resume; the ordered markdown merge becomes a range-partitioned sort +
 two-phase concat.
 
 Layout:
-- ``kernel/``     pure-Python, Spark-free extraction kernels (unit-testable)
-- ``operators/``  Spark DataFrame operators (ingest, extract, merge, resume)
-- ``sources/``    readers/writers incl. the snapshot store
-- ``functions/``  column-level helpers (scalar function library)
+- ``kernel/``     pure-Python, Spark-free kernels: HTML and PDF extraction,
+                  math rewrite, merge rendering, WARC, robots.txt, sitemaps
+- ``operators/``  Spark DataFrame operators (ingest, extract, merge, metrics,
+                  triage, skew)
+- ``sources/``    the snapshot store and the WARC/WET readers and writers
+- ``functions/``  the crawl delta, robots gate and politeness frontier behind
+                  ``cli schedule``, and the content fingerprint
 - ``streaming/``  Structured Streaming ingestion (inbox-watcher analogue)
+- ``pipeline``    the resumable job; ``cli`` (``python -m ocr_agent_spark``)
+                  drives it, ``worker_daemon`` preloads Spark's Python workers
+
+Every module is reachable from ``__main__``, ``pipeline``,
+``worker_daemon`` or ``streaming`` (``tests/test_package_reachable.py``).
 """
 
 from ocr_agent_spark.cache import (  # noqa: F401
