@@ -2,9 +2,9 @@
 
 robots.txt discovery → sitemap frontier → politeness gate → WARC
 archive "fetch" → CDX-indexed read equality → fused extraction →
-snapshot commit → re-crawl delta → next politeness schedule. Each module has
-its own suite; this test pins the SEAMS — schemas, url forms, and
-error contracts agreeing across the whole pipeline.
+snapshot commit → re-crawl delta → next cycle's fetch schedule. Each
+module has its own suite; this test pins the SEAMS — schemas, url
+forms, and error contracts agreeing across the whole pipeline.
 """
 
 from __future__ import annotations

@@ -68,10 +68,8 @@ def _reachable(modules: dict[str, Path], roots) -> set[str]:
         if name in seen or name not in modules:
             continue
         seen.add(name)
-        for imported in _imported_names(name, modules[name]):
-            parts = imported.split(".")
-            # a.b.c imports a, a.b and a.b.c
-            stack.extend(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+        stack.extend(_imported_names(name, modules[name]))
+        # importing a.b.c runs a/__init__ and a/b/__init__ first
         parts = name.split(".")
         stack.extend(".".join(parts[:i]) for i in range(1, len(parts)))
     return seen
