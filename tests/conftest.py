@@ -27,9 +27,9 @@ def _stable_session_conf():
     the shared test session, which APPLIES the new builder configs to
     the live session — e.g. ``spark.sql.shuffle.partitions`` jumps from
     8 to 2×host-cores and every later plan assertion that reads the
-    session's parallelism (the ordered merge caps its range partition
-    count at ``spark.sql.shuffle.partitions``) sees the leaked value.
-    Runtime-conf hygiene, not a per-test concern, so it lives here.
+    session's parallelism (``widen_if_narrow`` targets) sees the leaked
+    value. Runtime-conf hygiene, not a per-test concern, so it lives
+    here.
     """
     yield
     from pyspark.sql import SparkSession
