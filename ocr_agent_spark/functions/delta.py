@@ -5,7 +5,9 @@ which urls are new, which disappeared, which changed content, which
 are byte-identical (and can skip re-extraction / re-dedup / re-index
 entirely). One full-outer join on the url key + a fingerprint compare
 — pure JVM, one shuffle per side on the slim (key, fingerprint)
-projection, payloads never move.
+projection, payloads never move. At 10^12 documents pair it with the
+url-hash bucketed tables (sources/bucketed.py): co-bucketed snapshots
+make even that shuffle disappear.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ The engine's scale guarantees are plan properties — filters reaching
 the parquet scan, projections pruning the fat binary column, payload
 stages staying shuffle-free, Python confined to Arrow-vectorized
 operators. These helpers turn those properties into assertions so they
-are *tested*, not just intended (see test_plans.py).
+are *tested*, not just intended (see tests/test_plans.py).
 """
 
 from __future__ import annotations
