@@ -103,6 +103,148 @@ def test_pdf_document_total_on_arbitrary_bytes(data):
         pass  # typed data faults → failure rows upstream
 
 
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(1, 12), st.integers(1, 12),
+    st.sampled_from([0, 2, 4, 6]),
+    st.lists(st.integers(0, 4), min_size=12, max_size=12),
+    st.binary(min_size=0, max_size=256),
+)
+def test_png_decode_inverts_arbitrary_per_row_filters(w, h, color_type,
+                                                      row_filters, pix_seed):
+    """PNG filters are PER-ROW: an image whose every row picked a
+    different filter must still decode to the exact pixels. Encoder is
+    written here (independent of build_png) so decoder bugs can't be
+    mirrored by the fixture."""
+    import struct
+    import zlib
+
+    from ocr_agent_spark.kernel.imagemeta import (
+        PNG_MAGIC,
+        _paeth,
+        decode_png_luminance,
+    )
+
+    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
+    stride = w * ch
+    # arbitrary pixels from the seed bytes (cycled)
+    seed = pix_seed or b"\x00"
+    flat = bytes(seed[i % len(seed)] for i in range(h * stride))
+    rows = [flat[y * stride:(y + 1) * stride] for y in range(h)]
+
+    raw = bytearray()
+    prev = bytes(stride)
+    for y, cur in enumerate(rows):
+        f = row_filters[y % len(row_filters)]
+        raw.append(f)
+        for x in range(stride):
+            a = cur[x - ch] if x >= ch else 0
+            b = prev[x]
+            c = prev[x - ch] if x >= ch else 0
+            pred = (0, a, b, (a + b) // 2, _paeth(a, b, c))[f]
+            raw.append((cur[x] - pred) & 0xFF)
+        prev = cur
+
+    def chunk(tag, body):
+        return (struct.pack(">I", len(body)) + tag + body
+                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
+
+    png = (PNG_MAGIC
+           + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0))
+           + chunk(b"IDAT", zlib.compress(bytes(raw)))
+           + chunk(b"IEND", b""))
+
+    dw, dh, lum = decode_png_luminance(png)
+    assert (dw, dh) == (w, h)
+    # expected luminance from the known pixels
+    exp = bytearray()
+    for i in range(w * h):
+        px = flat[i * ch:(i + 1) * ch]
+        if color_type in (0, 4):
+            exp.append(px[0])
+        else:
+            exp.append((299 * px[0] + 587 * px[1] + 114 * px[2]) // 1000)
+    assert bytes(lum) == bytes(exp)
+
+
+# -- WAV / AVI parser totality (hypothesis) ---------------------------------
+#
+# Media parsers see arbitrary crawl bytes inside executor batches; the
+# multimodal stage maps AudioFormatError/VideoFormatError to failure
+# rows and the Unsupported* subclasses to fake-feature fallbacks — any
+# OTHER exception (struct.error, IndexError, numpy ValueError) would
+# fail the whole Spark task. So "typed errors only" is the property.
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=2048))
+def test_wav_parser_typed_errors_on_arbitrary_bytes(data):
+    from ocr_agent_spark.kernel.wavaudio import AudioFormatError, audio_feature_vector
+
+    try:
+        feats, meta = audio_feature_vector(data)
+    except AudioFormatError:
+        return
+    assert len(feats) == 16
+    assert meta["duration_ms"] >= 0
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=2048))
+def test_avi_parser_typed_errors_on_arbitrary_bytes(data):
+    from ocr_agent_spark.kernel.avivideo import VideoFormatError, video_feature_vector
+
+    try:
+        feats, _meta = video_feature_vector(data, every_ms=100)
+    except VideoFormatError:
+        return
+    assert len(feats) == 16
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_wav_mutated_valid_container_typed_errors(data):
+    """Start from a VALID WAV and corrupt a few bytes — the parser must
+    still only raise the typed hierarchy (or succeed)."""
+    from ocr_agent_spark.kernel.wavaudio import (
+        AudioFormatError,
+        audio_feature_vector,
+        build_wav,
+    )
+
+    base = bytearray(build_wav(duration_ms=60, seed=5))
+    n_mut = data.draw(st.integers(1, 6))
+    for _ in range(n_mut):
+        pos = data.draw(st.integers(0, len(base) - 1))
+        base[pos] = data.draw(st.integers(0, 255))
+    try:
+        feats, _ = audio_feature_vector(bytes(base))
+        assert len(feats) == 16
+    except AudioFormatError:
+        pass
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_avi_mutated_valid_container_typed_errors(data):
+    from ocr_agent_spark.kernel.avivideo import (
+        VideoFormatError,
+        build_avi,
+        video_feature_vector,
+    )
+
+    base = bytearray(build_avi(width=16, height=8, n_frames=3, seed=5))
+    n_mut = data.draw(st.integers(1, 6))
+    for _ in range(n_mut):
+        pos = data.draw(st.integers(0, len(base) - 1))
+        base[pos] = data.draw(st.integers(0, 255))
+    try:
+        feats, _ = video_feature_vector(bytes(base), every_ms=100)
+        assert len(feats) == 16
+    except VideoFormatError:
+        pass
+
+
 @settings(max_examples=300, deadline=None)
 @given(st.binary(max_size=4096))
 def test_warc_parser_typed_errors_on_arbitrary_bytes(data):
@@ -154,3 +296,111 @@ def test_sitemap_parser_typed_errors_on_arbitrary_bytes(data):
         assert doc["kind"] in ("urlset", "index")
     except SitemapFormatError:
         pass
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=2048), st.sampled_from(
+    ["https://e.com/", "https://e.com/a/b.html", "http://x.y:8080/p?q=1"]))
+def test_link_extractor_total_on_arbitrary_bytes(data, page_url):
+    from ocr_agent_spark.kernel.links import extract_links
+
+    links = extract_links(data, page_url)
+    assert all(u.startswith(("http://", "https://")) for u in links)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(1, 40), st.integers(1, 40), st.integers(1, 50),
+       st.integers(1, 50), st.integers(0, 1000))
+def test_resize_luminance_dims_and_value_domain(w, h, tw, th, seed):
+    """Resize always yields exactly tw*th pixels drawn FROM the source
+    value set (nearest-neighbor never invents values)."""
+    import random
+
+    from ocr_agent_spark.kernel.imagemeta import resize_luminance
+
+    rng = random.Random(seed)
+    src = bytes(rng.randrange(256) for _ in range(w * h))
+    out = resize_luminance(w, h, src, tw, th)
+    assert len(out) == tw * th
+    assert set(out) <= set(src)
+
+
+# -- r7 kernels ----------------------------------------------------------------
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=600_000),   # duration_ms
+    st.sampled_from([44100, 48000]),
+    st.integers(min_value=1, max_value=8),
+    st.sampled_from(["vorbis", "opus"]),
+)
+def test_ogg_roundtrip_property(duration_ms, sr, ch, codec):
+    from ocr_agent_spark.kernel.mediacontainer import build_ogg, parse_ogg
+
+    m = parse_ogg(build_ogg(duration_ms=duration_ms, sample_rate=sr,
+                            channels=ch, codec=codec))
+    assert m["codec"] == codec and m["channels"] == ch
+    assert m["sample_rate"] == sr
+    assert abs(m["duration_ms"] - duration_ms) <= 1
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=600_000),
+    st.integers(min_value=1, max_value=(1 << 20) - 1),  # 20-bit field
+    st.integers(min_value=1, max_value=8),
+    st.integers(min_value=4, max_value=32),
+)
+def test_flac_roundtrip_property(duration_ms, sr, ch, bits):
+    from ocr_agent_spark.kernel.mediacontainer import build_flac, parse_flac
+
+    m = parse_flac(build_flac(duration_ms=duration_ms, sample_rate=sr,
+                              channels=ch, bits_per_sample=bits))
+    assert m["sample_rate"] == sr and m["channels"] == ch
+    # duration re-quantizes through total_samples (half a sample each
+    # way): error ≤ 500/sr ms, +1 for the two roundings
+    if round(duration_ms * sr / 1000) < (1 << 36):
+        assert abs(m["duration_ms"] - duration_ms) <= 500 / sr + 1
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=1024))
+def test_ogg_flac_parsers_never_hang_or_crash_wrongly(data):
+    # parsers must be total: any bytes either parse or raise the
+    # module's own taxonomy — never an IndexError/struct.error escape
+    from ocr_agent_spark.kernel.mediacontainer import (
+        MediaContainerError,
+        parse_flac,
+        parse_ogg,
+    )
+
+    for parser, magic in ((parse_ogg, b"OggS"), (parse_flac, b"fLaC")):
+        try:
+            parser(magic + data)
+        except MediaContainerError:
+            pass
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.text(min_size=1, max_size=40), min_size=1,
+                max_size=60, unique=True))
+def test_bloom_reference_no_false_negatives_property(urls):
+    # pure-python mirror of the Spark expressions (pinned equal by
+    # tests/test_urlseen.py): inserted keys always probe positive
+    import hashlib
+
+    n_bits, k = 1 << 12, 5
+    words: dict[int, int] = {}
+    for u in urls:
+        d = hashlib.md5(u.encode()).hexdigest()
+        h1, h2 = int(d[:8], 16), int(d[8:16], 16)
+        for i in range(k):
+            pos = (h1 + i * h2) % n_bits
+            words[pos // 64] = words.get(pos // 64, 0) | (1 << (pos % 64))
+    for u in urls:
+        d = hashlib.md5(u.encode()).hexdigest()
+        h1, h2 = int(d[:8], 16), int(d[8:16], 16)
+        for i in range(k):
+            pos = (h1 + i * h2) % n_bits
+            assert words.get(pos // 64, 0) & (1 << (pos % 64))
