@@ -1,3 +1,3 @@
-"""Column-level helpers: the crawl delta, robots rules and politeness
-frontier behind ``cli schedule``, and the content fingerprint streaming
-dedup uses."""
+from ocr_agent_spark.functions import dedup, multimodal, similarity, text
+
+__all__ = ["text", "dedup", "similarity", "multimodal"]

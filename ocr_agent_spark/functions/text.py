@@ -1,13 +1,193 @@
-"""Content fingerprint column for exact-duplicate detection.
+"""Text-analysis column builders for large-scale training-data pipelines.
 
-The expression is JVM-side ``pyspark.sql.functions`` only, so it stays
-inside WholeStageCodegen and composes into any plan.
+All hot-path expressions are JVM-side ``pyspark.sql.functions`` (stay
+inside WholeStageCodegen); the only Python here is the rolling-hash
+fingerprint variant, which is an Arrow-batched pandas UDF. Each builder
+returns a Column so it composes into any plan with full Catalyst
+pushdown/pruning.
+
+Oracle parity: every function in this module is designed to have an
+exactly-equivalent ANSI-SQL form (DuckDB) — e.g. fingerprints use md5
+(identical across engines) rather than engine-local hash functions.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Tiny per-language stopword inventories for the n-gram/stopword
+# language-ID heuristic. Deliberately small + frozen: the heuristic must
+# be reproducible in plain SQL for the oracle.
+STOPWORDS = {
+    "en": ["the", "and", "of", "to", "a", "in", "is", "that", "it", "for"],
+    "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "sich", "auf"],
+    "ja": ["no", "wa", "ni", "wo", "ga", "de", "to", "mo", "desu", "masu"],
+}
+
+
+def tokens(col: str | Column = "text") -> Column:
+    """Whitespace tokenization; empty/blank text → empty array."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.split(F.trim(c), r"\s+")
+
+
+def token_count(col: str | Column = "text") -> Column:
+    c = F.col(col) if isinstance(col, str) else col
+    return F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
+        F.size(tokens(c))
+    ).cast("int")
+
+
+def bpe_ish_token_count(col: str | Column = "text") -> Column:
+    """Sub-word-ish token count: split on word/number/punct boundaries
+    (a BPE-flavored regex proxy; ~chars/4 is the other common proxy)."""
+    c = F.col(col) if isinstance(col, str) else col
+    pieces = F.regexp_extract_all(
+        c, F.lit(r"[A-Za-z]{1,4}|[0-9]{1,3}|[^A-Za-z0-9\s]"), F.lit(0)
+    )
+    return F.size(pieces).cast("int")
+
+
+def char_count(col: str | Column = "text") -> Column:
+    c = F.col(col) if isinstance(col, str) else col
+    return F.length(c).cast("int")
+
+
+def alpha_ratio(col: str | Column = "text") -> Column:
+    """Fraction of characters that are ASCII letters (quality signal)."""
+    c = F.col(col) if isinstance(col, str) else col
+    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
+    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
+        alpha / F.length(c)
+    ).cast("double")
+
+
+def punct_ratio(col: str | Column = "text") -> Column:
+    c = F.col(col) if isinstance(col, str) else col
+    punct = F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?'\"()\[\]-]", ""))
+    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
+        punct / F.length(c)
+    ).cast("double")
+
+
+def stopword_ratio(col: str | Column = "text", lang: str = "en") -> Column:
+    """Fraction of tokens that are (lang) stopwords."""
+    c = F.col(col) if isinstance(col, str) else col
+    toks = tokens(F.lower(c))
+    hits = F.size(
+        F.filter(toks, lambda t: t.isin(*STOPWORDS[lang]))
+    )
+    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
+        hits / F.size(toks)
+    ).cast("double")
+
+
+def quality_score(col: str | Column = "text") -> Column:
+    """Composite quality in [0,1]: length band + alpha ratio + stopword
+    presence − punctuation excess. A C4/Gopher-rule-flavored scalar."""
+    c = F.col(col) if isinstance(col, str) else col
+    length_ok = F.when(
+        (token_count(c) >= 10) & (token_count(c) <= 100000), F.lit(0.4)
+    ).otherwise(F.lit(0.0))
+    alpha_part = F.least(alpha_ratio(c), F.lit(0.8)) * F.lit(0.5)
+    stop_part = F.when(stopword_ratio(c, "en") > 0.01, F.lit(0.1)).otherwise(F.lit(0.0))
+    return F.round(length_ok + alpha_part + stop_part, 6).cast("double")
+
+
+def lang_id(col: str | Column = "text") -> Column:
+    """Stopword-vote language ID over the frozen inventories.
+
+    Ties break by fixed language order (de < en < ja alphabetical via
+    greatest-chain below); zero votes → 'und'.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    toks = tokens(F.lower(c))
+
+    def vote(words: list[str]) -> Column:
+        # NB: the F.filter lambda must be single-arg — a second param
+        # (even defaulted) makes Spark pass the element index into it.
+        return F.size(F.filter(toks, lambda t: t.isin(*words)))
+
+    votes = {lang: vote(words) for lang, words in STOPWORDS.items()}
+    best = F.greatest(*votes.values())
+    result = F.lit("und")
+    # Reverse-alphabetical chain so earlier (alphabetical) langs win ties.
+    for lang in sorted(votes, reverse=True):
+        result = F.when(votes[lang] == best, F.lit(lang)).otherwise(result)
+    return F.when(best == 0, F.lit("und")).otherwise(result)
+
+
+def text_profile(docs, text_col: str = "text"):
+    """All text-quality signals in one pass, with shared subexpressions
+    PROJECTED between stages (DataFrame-level fast path).
+
+    The Column builders above compose freely but re-evaluate their
+    token arrays at every reference — Catalyst inlines subexpressions
+    into higher-order-function lambdas instead of CSE-ing them (same
+    effect measured 7× on shingling, 2× on lang_id). This transformer
+    tokenizes once, projects the per-language vote counts once, and
+    derives lang/quality/token counts from those columns. Semantics are
+    identical to the Column forms (asserted in tests).
+
+    Adds: n_tokens, n_bpe_tokens, n_chars, alpha_ratio, quality,
+    predicted_lang.
+    """
+    from ocr_agent_spark.partitioning import widen_if_narrow
+
+    c = F.col(text_col)
+    # Widen-if-narrow before the tokenize: a single-row-group parquet
+    # input otherwise runs every profiling regex in one scan task
+    # (guide §2.5). Row values are untouched; no-op on parallel inputs.
+    toksed = widen_if_narrow(docs).withColumn(
+        "_toks", F.split(F.lower(F.trim(c)), r"\s+")
+    )
+    toks = F.col("_toks")
+
+    def vote(words: list[str]) -> Column:
+        # single-arg lambda (a 2nd param would receive the element index)
+        return F.size(F.filter(toks, lambda t: t.isin(*words)))
+
+    voted = toksed.withColumns(
+        {
+            "_n_toks_raw": F.size(toks),
+            "_alpha": F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
+                F.length(F.regexp_replace(c, r"[^A-Za-z]", "")) / F.length(c)
+            ).cast("double"),
+            **{f"_v_{lang}": vote(words) for lang, words in STOPWORDS.items()},
+        }
+    )
+    n_tokens = F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
+        F.col("_n_toks_raw")
+    ).cast("int")
+    best = F.greatest(*[F.col(f"_v_{lang}") for lang in STOPWORDS])
+    lang = F.lit("und")
+    for lg in sorted(STOPWORDS, reverse=True):
+        lang = F.when(F.col(f"_v_{lg}") == best, F.lit(lg)).otherwise(lang)
+    lang = F.when(best == 0, F.lit("und")).otherwise(lang)
+
+    profiled = voted.withColumns(
+        {
+            "n_tokens": n_tokens,
+            "n_bpe_tokens": bpe_ish_token_count(c),
+            "n_chars": F.length(c).cast("int"),
+            "alpha_ratio": F.col("_alpha"),
+            "predicted_lang": lang,
+        }
+    )
+    stop_ratio = F.when(F.col("_n_toks_raw") == 0, F.lit(0.0)).otherwise(
+        F.col("_v_en") / F.col("_n_toks_raw")
+    )
+    quality = F.round(
+        F.when(F.col("n_tokens").between(10, 100000), F.lit(0.4)).otherwise(0.0)
+        + F.least(F.col("_alpha"), F.lit(0.8)) * F.lit(0.5)
+        + F.when(stop_ratio > 0.01, F.lit(0.1)).otherwise(0.0),
+        6,
+    ).cast("double")
+    drop = ["_toks", "_n_toks_raw", "_alpha"] + [f"_v_{lg}" for lg in STOPWORDS]
+    return profiled.withColumn("quality", quality).drop(*drop)
 
 
 def doc_fingerprint(col: str | Column = "text") -> Column:
@@ -19,3 +199,166 @@ def doc_fingerprint(col: str | Column = "text") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     normalized = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
     return F.md5(normalized)
+
+
+RESULT_KEY_PRIORITY = ("markdown", "text", "result", "output", "response")
+
+
+def normalize_result_column(result_map: Column) -> Column:
+    """F15 — normalize a model's raw result map to one markdown string.
+
+    The reference probes a dict for the first string under the key
+    priority markdown → text → result → output → response, falling back
+    to ``str(dict)`` (deepseek_ocr2_runner.py:37-52,
+    ``_normalize_infer_result_to_markdown``). Spark form: the raw result
+    travels as ``map<string,string>``; ``element_at`` per key +
+    ``coalesce`` is the whole probe, JVM-side, with ``to_json`` as the
+    render-the-whole-thing fallback.
+    """
+    candidates = [F.element_at(result_map, k) for k in RESULT_KEY_PRIORITY]
+    return F.coalesce(*candidates, F.to_json(result_map))
+
+
+def math_rewrite_udf(style: str = "dollar"):
+    """Fence-aware LaTeX-math delimiter rewrite as a Series→Series
+    pandas UDF (U4) — the canonical stateful per-document text
+    transform that native SQL regex cannot express. One Python call per
+    Arrow batch; the pure kernel maps across the Series."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import StringType
+
+    from ocr_agent_spark.kernel.mathdown import convert_math_delimiters
+
+    @pandas_udf(StringType())
+    def _udf(texts: pd.Series) -> pd.Series:
+        return texts.map(
+            lambda t: None if t is None else convert_math_delimiters(t, style)
+        )
+
+    return _udf
+
+
+def rolling_fingerprint_udf():
+    """Karp–Rabin rolling-hash fingerprint (Series→Series pandas UDF).
+
+    The non-SQL variant: 64-bit polynomial rolling hash over the
+    normalized text, window 64 chars, fingerprint = min window hash
+    (winnowing-style). Python, but Arrow-batched.
+    """
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import LongType
+
+    MOD = (1 << 61) - 1
+    BASE = 257
+    WINDOW = 64
+
+    def fingerprint(s: str | None) -> int | None:
+        if s is None:
+            return None
+        t = " ".join(s.lower().split())
+        if not t:
+            return 0
+        data = t.encode("utf-8")
+        if len(data) <= WINDOW:
+            h = 0
+            for b in data:
+                h = (h * BASE + b) % MOD
+            return h
+        h = 0
+        for b in data[:WINDOW]:
+            h = (h * BASE + b) % MOD
+        top = pow(BASE, WINDOW - 1, MOD)
+        best = h
+        for i in range(WINDOW, len(data)):
+            h = ((h - data[i - WINDOW] * top) * BASE + data[i]) % MOD
+            if h < best:
+                best = h
+        return best
+
+    @pandas_udf(LongType())
+    def _udf(texts: pd.Series) -> pd.Series:
+        return texts.map(fingerprint)
+
+    return _udf
+
+
+# PII patterns chosen to be ENGINE-PORTABLE: no backreferences or
+# lookaround, so Java regex (Spark) and RE2 (DuckDB) agree — the same
+# property doc_fingerprint gets from md5. Order matters: emails before
+# the bare-domain-ish phone pattern can touch their digits.
+PII_PATTERNS = (
+    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
+    (r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "<IP>"),
+    (r"\+?\d{1,3}[-. ]\d{3}[-. ]\d{3,4}[-. ]\d{3,4}\b", "<PHONE>"),
+)
+
+
+def redact_pii(col: str | Column = "text") -> Column:
+    """Replace emails / IPv4s / phone-shaped numbers with typed tags.
+
+    The scrubbing pass a training-data pipeline runs before publishing
+    a corpus. Pure JVM regexp_replace chain (whole-stage codegen, no
+    Python); patterns are RE2-compatible so the DuckDB oracle applies
+    the identical chain. Deliberately conservative — recall over
+    precision is a policy knob, and at 100 TB a second pass with a
+    different pattern set is just another column expression.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    for pattern, tag in PII_PATTERNS:
+        c = F.regexp_replace(c, pattern, tag)
+    return c
+
+
+def benchmark_contamination(docs, bench, n: int = 3,
+                            min_common: int = 2,
+                            id_col: str = "doc_id",
+                            text_col: str = "text"):
+    """Docs sharing ≥ ``min_common`` distinct n-gram shingles with any
+    benchmark document — the decontamination check run before a corpus
+    ships (benchmark questions leaking into training data inflate
+    scores silently).
+
+    Plan: both sides explode to (id, shingle) via the shared
+    ``dedup.shingle_table``; the join is shingle-keyed (benchmark side
+    is tiny → AQE broadcasts it), then one partial-agg groupBy counts
+    distinct shared shingles per (doc, bench) pair. Nothing all-pairs:
+    cost is linear in shingles + collisions, same shape as the jaccard
+    verify stage. Output: (doc_id, bench_id, common_shingles).
+    """
+    from ocr_agent_spark.functions.dedup import shingle_table
+
+    doc_sh = shingle_table(docs, id_col, text_col, n)
+    bench_sh = (
+        shingle_table(bench, id_col, text_col, n)
+        .withColumnRenamed("doc_id", "bench_id")
+    )
+    return (
+        doc_sh.join(bench_sh, "shingle")
+        .groupBy("doc_id", "bench_id")
+        .agg(F.count_distinct("shingle").alias("common_shingles"))
+        .filter(F.col("common_shingles") >= min_common)
+    )
+
+
+def unicode_normalize_udf(form: str = "NFC"):
+    """Arrow-vectorized Unicode normalization (NFC/NFKC/NFD/NFKD).
+
+    Training-data hygiene: crawls mix precomposed and decomposed forms
+    of the same text ('é' vs 'e'+U+0301), which defeats exact dedup and
+    splits shingle/fingerprint identities. Spark has no built-in
+    normalizer, so this is a pandas UDF — ``str.normalize`` runs
+    vectorized over each Arrow batch, one Python call per batch, not
+    per row. Verified cross-engine: the ``unicode_nfc`` driver query
+    hash-matches DuckDB's independent ``nfc_normalize`` implementation
+    on planted decomposed/compatibility forms.
+    """
+    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
+        raise ValueError(f"unknown normalization form {form!r}")
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import StringType
+
+    @pandas_udf(StringType())
+    def norm(s: pd.Series) -> pd.Series:
+        return s.str.normalize(form)
+
+    return norm

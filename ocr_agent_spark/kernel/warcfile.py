@@ -612,7 +612,8 @@ def iter_fetch_log(stream) -> Iterator[
     ``response`` record — the crawl's fetch log, without transcoding
     or payload copies. ``status`` is None for bare-payload records
     (some crawls store responses without the HTTP envelope);
-    ``location`` carries redirect targets."""
+    ``location`` carries redirect targets for
+    functions/redirects.resolve_redirects."""
     for headers, body in iter_warc_records(stream):
         if headers.get("warc-type") != "response":
             continue

@@ -483,9 +483,10 @@ def read_fetch_log(spark: SparkSession, paths: list[str],
 
 
 def redirect_edges(fetch_log: DataFrame) -> DataFrame:
-    """Fetch log → (src, dst) redirect edges. Latest fetch per url wins,
-    so each src has one target (a url refetched with a different target
-    would otherwise be an ambiguous src)."""
+    """Fetch log → (src, dst) redirect edges for
+    functions/redirects.resolve_redirects. Latest fetch per url wins
+    (a url refetched with a different target would otherwise be an
+    ambiguous src — resolve_redirects raises on those by design)."""
     from pyspark.sql import Window
 
     redirects = fetch_log.filter(

@@ -1,14 +1,18 @@
 """Streaming exact dedup for a crawl ingest stream.
 
-A continuous crawl wants duplicates suppressed AS PAGES ARRIVE, with
-bounded state. This is Spark's ``dropDuplicatesWithinWatermark`` shape:
-keep the first row per content fingerprint, remember fingerprints only
-for the watermark horizon (state is garbage-collected past it), so a
-re-post of the same page within the horizon is suppressed while storage
-stays O(rows-per-horizon) — the correct contract for revisit-heavy
-crawl streams where "dedup forever" would grow state without bound.
-This operator is the in-flight guard that keeps the stream (and every
-downstream stateful stage) from paying for the duplicate storm.
+Batch dedup (functions/dedup.py) needs the whole corpus; a continuous
+crawl wants duplicates suppressed AS PAGES ARRIVE, with bounded state.
+This is Spark's ``dropDuplicatesWithinWatermark`` shape: keep the
+first row per content fingerprint, remember fingerprints only for the
+watermark horizon (state is garbage-collected past it), so a re-post
+of the same page within the horizon is suppressed while storage stays
+O(rows-per-horizon) — the correct contract for revisit-heavy crawl
+streams where "dedup forever" would grow state without bound.
+
+For global exactly-once-per-content over all time, run the batch
+``dedup_exact`` over the committed snapshot instead; this operator is
+the in-flight guard that keeps the stream (and every downstream
+stateful stage) from paying for the duplicate storm first.
 """
 
 from __future__ import annotations
@@ -23,11 +27,11 @@ def dedup_stream_exact(pages: DataFrame, ts_col: str = "warc_ts",
                        watermark: str = "1 hour") -> DataFrame:
     """Streaming DataFrame → same rows minus within-horizon duplicates.
 
-    A ``fingerprint`` column (``functions.text.doc_fingerprint``, the
-    normalized md5) is attached and rows are deduplicated on it within
-    the event-time watermark. The fingerprint column is kept in the
-    output so a later batch pass can compose (e.g. global dedup over
-    commits).
+    A ``fingerprint`` column (normalized md5 — identical to the batch
+    tier's, so batch and stream agree on what "duplicate" means) is
+    attached and rows are deduplicated on it within the event-time
+    watermark. The fingerprint column is kept in the output so a later
+    batch pass can compose (e.g. global dedup over commits).
     """
     with_fp = pages.withColumn("fingerprint", doc_fingerprint(text_col))
     return with_fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(

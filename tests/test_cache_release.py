@@ -44,6 +44,20 @@ def test_assign_order_key_caches_released(spark):
     assert _n_cached(spark) == baseline
 
 
+def test_minhash_caches_released(spark):
+    from ocr_agent_spark.functions.dedup import minhash_near_duplicates
+
+    release_caches()
+    baseline = _n_cached(spark)
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta {i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    minhash_near_duplicates(docs, threshold=0.3).count()
+    release_caches()
+    assert _n_cached(spark) == baseline
+
+
 def test_cache_scope_releases_only_inner_persists(spark):
     """ADVICE r2: a job must not unpersist caches its caller still
     depends on — cache_scope releases exactly what was persisted inside

@@ -2,9 +2,9 @@
 
 robots.txt discovery → sitemap frontier → politeness gate → WARC
 archive "fetch" → CDX-indexed read equality → fused extraction →
-snapshot commit → re-crawl delta → next cycle's fetch schedule. Each
-module has its own suite; this test pins the SEAMS — schemas, url
-forms, and error contracts agreeing across the whole pipeline.
+snapshot commit → web-graph edges → re-crawl delta. Each module has
+its own suite; this test pins the SEAMS — schemas, url forms, and
+error contracts agreeing across the whole pipeline.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ def _page_html(url: str, gen: int) -> bytes:
 
 def test_full_crawl_arc(spark, tmp_path):
     from ocr_agent_spark.functions.delta import crawl_delta
+    from ocr_agent_spark.functions.links import extract_link_edges, host_graph
     from ocr_agent_spark.functions.robots import (
         evaluate_allowed,
         robots_rules_table,
@@ -98,7 +99,14 @@ def test_full_crawl_arc(spark, tmp_path):
     assert gen1.filter("status = 'completed'").count() == 6
     assert all("stable content" in r["text"] for r in gen1.collect())
 
-    # 7. re-crawl: doc/1 changes, doc/5 disappears, doc/6 appears
+    # 7. web graph from the fetched pages
+    hg = {(r["src_host"], r["dst_host"]): r["n_links"]
+          for r in host_graph(extract_link_edges(seq)).collect()}
+    assert set(hg) == {("h0.example.com", "h1.example.com"),
+                       ("h1.example.com", "h0.example.com")}
+    assert sum(hg.values()) == 6
+
+    # 8. re-crawl: doc/1 changes, doc/5 disappears, doc/6 appears
     gen2_urls = [u for u in fetch_list if not u.endswith("/5")]
     gen2_urls.append("https://h0.example.com/doc/6")
     arc2 = str(tmp_path / "crawl-2.warc.gz")
@@ -114,7 +122,7 @@ def test_full_crawl_arc(spark, tmp_path):
     assert delta["https://h0.example.com/doc/6"] == "new"
     assert sum(1 for s in delta.values() if s == "unchanged") == 4
 
-    # 8. the loop closes: delta + robots + sitemap lastmods compose into
+    # 9. the loop closes: delta + robots + sitemap lastmods compose into
     # the NEXT cycle's per-host rate-bounded fetch schedule
     from ocr_agent_spark.functions.frontier import politeness_frontier
 

@@ -3,6 +3,7 @@
 import datetime
 import io
 
+from ocr_agent_spark.functions.redirects import resolve_redirects
 from ocr_agent_spark.kernel.warcfile import (
     iter_fetch_log,
     iter_warc_pages,
@@ -50,8 +51,8 @@ def test_redirect_statuses_not_pages():
     assert len(list(iter_fetch_log(buf))) == 1
 
 
-def test_warc_fetch_log_to_redirect_edges(spark, tmp_path):
-    # archives -> fetch log -> one (src, dst) edge per redirect
+def test_warc_to_resolved_redirects_end_to_end(spark, tmp_path):
+    # the full arc: archives -> fetch log -> edges -> final targets
     p = str(tmp_path / "crawl.warc.gz")
     with open(p, "wb") as fh:
         write_warc_record(fh, "http://old", TS, b"", status=301,
@@ -65,13 +66,11 @@ def test_warc_fetch_log_to_redirect_edges(spark, tmp_path):
                           location="http://loop1")
     log = read_fetch_log(spark, [p])
     assert log.count() == 5
-    edges = {(r["src"], r["dst"]) for r in redirect_edges(log).collect()}
-    assert edges == {
-        ("http://old", "http://mid"),
-        ("http://mid", "http://final"),
-        ("http://loop1", "http://loop2"),
-        ("http://loop2", "http://loop1"),
-    }
+    edges = redirect_edges(log)
+    out = {r["src"]: r for r in resolve_redirects(edges).collect()}
+    assert out["http://old"]["final_url"] == "http://final"
+    assert out["http://old"]["hops"] == 2
+    assert out["http://loop1"]["status"] == "unresolved"
 
 
 def test_redirect_edges_latest_fetch_wins(spark, tmp_path):

@@ -166,29 +166,3 @@ def test_delta_priority_mapping(spark):
     got = {r["status"]: r["p"] for r in df.collect()}
     assert got == {STATUS_NEW: 3, STATUS_CHANGED: 2, STATUS_UNCHANGED: 1,
                    STATUS_GONE: None}
-
-
-def test_frontier_schedule_deterministic_and_rate_bounded(spark):
-    import random
-
-    rng = random.Random("frontier-inv")
-    statuses = ["new", "changed", "unchanged", "gone"]
-    delta = spark.createDataFrame(
-        [(f"http://h{rng.randint(0, 9)}.example/p{i}", rng.choice(statuses))
-         for i in range(400)],
-        "url string, status string",
-    )
-    start = datetime.datetime(2026, 3, 1)
-    s1 = frontier.politeness_frontier(delta, start, per_host_delay_sec=7, host_budget=20)
-    s2 = frontier.politeness_frontier(delta, start, per_host_delay_sec=7, host_budget=20)
-    r1 = sorted(map(tuple, s1.collect()))
-    r2 = sorted(map(tuple, s2.collect()))
-    assert r1 == r2  # D1: identical input ⇒ identical schedule
-    per_host = {}
-    for host, url, status, prio, rank, ts in r1:
-        assert status != "gone"
-        assert 1 <= rank <= 20
-        assert ts == start + datetime.timedelta(seconds=7 * (rank - 1))
-        per_host.setdefault(host, set()).add(rank)
-    for host, ranks in per_host.items():
-        assert ranks == set(range(1, len(ranks) + 1)), host  # dense ranks

@@ -42,6 +42,37 @@ def test_kernel_total_on_hostile_input():
         assert isinstance(extract_links(blob, "https://e.com/"), list)
 
 
+def test_spark_edges_and_host_graph(spark):
+    from ocr_agent_spark.functions.links import extract_link_edges, host_graph
+
+    pages = spark.createDataFrame(
+        [
+            ("https://a.com/1",
+             b'<a href="https://b.com/x">1</a><a href="/local">2</a>'),
+            ("https://a.com/2", b'<a href="https://b.com/x">1</a>'),
+            ("https://b.com/1", b'<a href="https://a.com/">back</a>'),
+            ("https://c.com/none", b"plain text"),
+            ("https://d.com/null", None),
+        ],
+        "url string, html binary",
+    )
+    edges = extract_link_edges(pages)
+    got = {(r["src"], r["dst"]) for r in edges.collect()}
+    assert got == {
+        ("https://a.com/1", "https://b.com/x"),
+        ("https://a.com/1", "https://a.com/local"),
+        ("https://a.com/2", "https://b.com/x"),
+        ("https://b.com/1", "https://a.com/"),
+    }
+    hg = {(r["src_host"], r["dst_host"]): r["n_links"]
+          for r in host_graph(edges).collect()}
+    # the a.com self-link is filtered; the two a->b edges aggregate
+    assert hg == {("a.com", "b.com"): 2, ("b.com", "a.com"): 1}
+    # graph aggregation is JVM-only after the edge pass
+    plan = host_graph(edges.cache())._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+
+
 def test_data_href_does_not_shadow_real_href():
     """(code-review r4d, reproduced) attributes ENDING in 'href'
     (data-href trackers) must not displace the genuine edge."""

@@ -74,45 +74,3 @@ def test_block_runs_before_inline():
     # block result (reference order: markdown_merge.py:135-136).
     out = convert_math_delimiters(r"\[ \( x \) \]")
     assert out == "$$\n $x$ \n$$"
-
-
-def test_mathdown_fast_paths_byte_identical():
-    from ocr_agent_spark.kernel import mathdown as m
-
-    def reference(text):
-        # The pre-r8 per-line scan, reproduced verbatim.
-        out, plain_buf, fence_char = [], [], None
-
-        def drain():
-            if plain_buf:
-                out.append(m._rewrite_plain_segment("".join(plain_buf)))
-                plain_buf.clear()
-
-        for line in text.splitlines(keepends=True):
-            mt = m._RE_FENCE.match(line)
-            if not (mt is not None and mt.group(1).strip() == ""):
-                (out if fence_char else plain_buf).append(line)
-                continue
-            marker = mt.group(2)
-            if fence_char is None:
-                drain()
-                fence_char = marker[0]
-                out.append(line)
-            elif marker[0] == fence_char:
-                fence_char = None
-                out.append(line)
-            else:
-                out.append(line)
-        drain()
-        return "".join(out)
-
-    import random
-
-    rng = random.Random(88)
-    pieces = ["\\(x+y\\)", "\\[ E=mc^2 \\]", "plain", "```", "~~~", "```py",
-              "  ```", "\\(", "\\]", "$$", "word " * 3, "\n", "\r\n",
-              "\\[m\nl\\]", "tail"]
-    for _ in range(3000):
-        t = "".join(rng.choice(pieces) + rng.choice(["", "\n", " "])
-                    for _ in range(rng.randint(0, 10)))
-        assert m.convert_math_delimiters(t) == reference(t)

@@ -62,34 +62,3 @@ def test_math_rewrite_applied_per_style():
 
 def test_empty_input_is_title_only():
     assert render_merged_markdown([]) == "# Extracted Output\n"
-
-
-def test_partition_blocks_matches_render_row_block():
-    import pandas as pd
-
-    from ocr_agent_spark.kernel.merge import MergeRow, render_row_block
-    from ocr_agent_spark.operators.merge import _partition_blocks
-
-    rows = [
-        ("u1", "html", None, None, "plain text body"),
-        ("u2", "pdf_page", 0, 3, "page body with \\(x\\) math"),
-        ("u3", "pdf_page", 2, 3, "last page"),
-        ("u4", "html", None, None, ""),            # skipped: empty
-        ("u5", "html", None, None, "   \t\n"),     # skipped: whitespace
-        ("u6", "html", None, None, " "),      # unicode whitespace
-        ("u7", "pdf_page", None, 5, "pdf page with no index"),
-        ("u8", "html", None, None, "fence\n```\n\\[keep\\]\n```\ndone"),
-    ]
-    batch = pd.DataFrame(
-        rows, columns=["url", "kind", "page_index", "total_pages", "text"]
-    )
-    for style in ("dollar", "brackets"):
-        fast = _partition_blocks(iter([batch]), style)
-        slow = []
-        for url, kind, pi, tp, text in rows:
-            block = render_row_block(
-                MergeRow(url=url, kind=kind, page_index=pi,
-                         total_pages=tp, text=text), style)
-            if block is not None:
-                slow.append(block)
-        assert fast == slow, f"render drift at style={style}"

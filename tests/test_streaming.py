@@ -196,26 +196,3 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
         docs[r["run_id"]] = docs.get(r["run_id"], 0) + r["doc_count"]
     assert set(docs) == set(extraction_store(root).latest_manifest()["runs"])
     assert sum(docs.values()) == ext.count()
-
-
-def test_pre_drain_rowcount_falls_back_when_files_vanished(spark, tmp_path):
-    """ADVICE r4: the streaming remote-footer fallback re-reads the
-    pre-drain file list via Spark; if those files were removed
-    (compaction mid-drain), it must fall back to the pre-paid count
-    instead of throwing after a successful drain."""
-    import pytest as _pytest
-
-    from ocr_agent_spark.streaming.ingest import _pre_drain_rowcount
-
-    gone = {str(tmp_path / "vanished" / "part-0.parquet")}
-    assert _pre_drain_rowcount(spark, gone, before_count=7) == 7
-    with _pytest.raises(Exception):
-        _pre_drain_rowcount(spark, gone, before_count=None)
-    # readable paths still count exactly (no premature fallback)
-    live_dir = str(tmp_path / "live")
-    spark.range(5).coalesce(1).write.parquet(live_dir)
-    import glob as _glob
-
-    live = set(_glob.glob(live_dir + "/part-*.parquet"))
-    assert _pre_drain_rowcount(spark, live, before_count=999) == 5
-    assert _pre_drain_rowcount(spark, set(), before_count=None) == 0

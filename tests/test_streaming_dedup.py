@@ -105,21 +105,3 @@ def test_streaming_dedup_suppresses_within_horizon(spark, tmp_path):
         "_fp2", doc_fingerprint("text")
     )
     assert batch.filter(F.col("fingerprint") != F.col("_fp2")).count() == 0
-
-
-def test_fingerprint_normalization(spark):
-    from ocr_agent_spark.functions.text import doc_fingerprint
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    docs = spark.createDataFrame(
-        [
-            (0, base),
-            (1, base),                                   # exact dup of 0
-            (2, base.replace("today", "tomorrow")),      # near dup of 0
-            (5, "THE  QUICK   brown fox jumps over the lazy dog near the river bank today"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["fp"] for r in docs.select("doc_id", doc_fingerprint("text").alias("fp")).collect()}
-    assert got[0] == got[1] == got[5]  # case/whitespace-insensitive
-    assert got[0] != got[2]

@@ -140,10 +140,13 @@ def test_session_windows_merge_and_close_on_watermark(spark, tmp_path):
 
 def test_session_window_gap_boundary_agrees_with_batch(spark):
     """F.session_window merges an event exactly `gap` after the
-    previous one (measured: touching windows DO merge), a strict-`>`
-    split; one microsecond past the gap splits. Pinned so the boundary
-    contract that ``session_window_counts`` relies on is explicit."""
+    previous one (measured: touching windows DO merge), matching the
+    batch sessionizer's strict-`>` split (functions/sessions.py); one
+    microsecond past the gap splits in both. Pinned so the shared
+    boundary contract is explicit."""
     from pyspark.sql import functions as F
+
+    from ocr_agent_spark.functions.sessions import sessionize
 
     def native_sessions(df):
         return sorted(
@@ -161,6 +164,10 @@ def test_session_window_gap_boundary_agrees_with_batch(spark):
         "event_id long, ts timestamp, user_id long, value double",
     )
     assert native_sessions(at_gap) == [2]  # one merged session
+    assert {
+        r["session_seq"] for r in sessionize(at_gap, gap_seconds=600)
+        .collect()
+    } == {1}
 
     past_gap = spark.createDataFrame(
         [
@@ -170,3 +177,7 @@ def test_session_window_gap_boundary_agrees_with_batch(spark):
         "event_id long, ts timestamp, user_id long, value double",
     )
     assert native_sessions(past_gap) == [1, 1]  # split
+    assert {
+        r["session_seq"] for r in sessionize(past_gap, gap_seconds=600)
+        .collect()
+    } == {1, 2}

@@ -458,31 +458,3 @@ def test_sitemap_damaged_gzip_and_null_payload_are_skipped(spark):
     got = read_sitemaps(df).collect()
     # the escaped ampersand url round-trips; damaged rows vanish
     assert [r["url"] for r in got] == ["https://e.com/ok?a=1&b=2"]
-
-
-def test_warc_nonascii_location_roundtrip():
-    from ocr_agent_spark.kernel.warcfile import (
-        parse_http_response,
-        write_warc_record,
-    )
-
-    url = "https://exämple.jp/start"
-    loc = "https://exämple.jp/ziel"
-    buf = io.BytesIO()
-    write_warc_record(buf, url, TS, b"", status=301, location=loc)
-    buf.seek(0)
-    [(headers, body)] = list(iter_warc_records(buf))
-    assert headers["warc-target-uri"] == url
-    http = parse_http_response(body)
-    assert http is not None
-    assert http[0]["location"] == loc
-
-
-def test_legacy_latin1_header_still_parses():
-    # raw 8-bit (non-UTF-8) header bytes fall back to latin-1
-    from ocr_agent_spark.kernel.warcfile import parse_http_response
-
-    raw = b"HTTP/1.1 200 OK\r\nX-Legacy: caf\xe9\r\n\r\nbody"
-    headers, body = parse_http_response(raw)
-    assert headers["x-legacy"] == "café"
-    assert body == b"body"

@@ -94,13 +94,3 @@ def test_empty_partitions_yield_no_shards(spark, tmp_path):
     assert sorted(os.listdir(out)) == [
         os.path.basename(manifest[0]["path"])
     ]
-
-
-def test_wet_nonascii_url_roundtrip():
-    url = "https://exämple.jp/ページ?q=naïve"
-    buf = io.BytesIO()
-    write_wet_record(buf, url, TS, "body text")
-    buf.seek(0)
-    [(got_url, _ts, got_text)] = list(iter_wet_texts(buf))
-    assert got_url == url
-    assert got_text == "body text"
