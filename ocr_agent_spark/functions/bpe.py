@@ -9,9 +9,9 @@ module carries the real thing, GPT-2-shaped but self-contained:
 - :func:`learn_bpe_merges` — the classic Sennrich et al. 2016 trainer
   (count adjacent symbol pairs over a word-frequency table, merge the
   most frequent, repeat). Deterministic: ties break to the
-  lexicographically smallest pair. Used once by
-  ``tools/build_bpe_merges.py`` to produce the FROZEN vendored table
-  in ``bpe_merges.py`` (built from the deterministic synthetic corpus
+  lexicographically smallest pair. Used once (by a generator script
+  since retired with the query driver) to produce the FROZEN vendored
+  table in ``bpe_merges.py`` (built from the deterministic synthetic corpus
   — nothing downloaded).
 - :func:`bpe_encode` — the GPT-2 merge loop: repeatedly merge every
   occurrence of the lowest-rank adjacent pair until none applies.

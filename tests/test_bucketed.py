@@ -9,7 +9,7 @@ on either side.
 import pyspark.sql.functions as F
 import pytest
 
-from ocr_agent_spark.plans.inspect import count_exchanges, executed_plan_str
+from plan_inspect import count_exchanges, executed_plan_str
 from ocr_agent_spark.sources.bucketed import read_table, write_bucketed_by_url
 
 BUCKETS = 8

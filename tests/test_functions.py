@@ -431,7 +431,7 @@ def test_bucket_cap_is_antijoin_not_window(spark):
     (minhash, simhash, embedding LSH) contain a broadcast left-anti
     join and NO Window node."""
     from ocr_agent_spark.functions import similarity
-    from ocr_agent_spark.plans.inspect import executed_plan_str
+    from plan_inspect import executed_plan_str
 
     docs = spark.createDataFrame(
         [(i, f"document body number {i} with shared template words")
@@ -1082,7 +1082,7 @@ def test_ivf_persisted_index_matches_inline_and_prunes(spark, embeddings, tmp_pa
     probed clusters' partition directories."""
     import os
 
-    from ocr_agent_spark.plans.inspect import executed_plan_str
+    from plan_inspect import executed_plan_str
 
     qvec = [1.0 if i % 3 == 0 else (-0.5 if i % 3 == 1 else 0.25)
             for i in range(len(embeddings.first()["embedding"]))]

@@ -67,7 +67,7 @@ def test_auto_routing_diverts_giant_pdf(spark):
     assert len(small_rows) == 3
 
     # no giants -> plan IS the fused plan (zero shuffles)
-    from ocr_agent_spark.plans.inspect import count_exchanges
+    from plan_inspect import count_exchanges
 
     small_only = df.filter(~df.url.contains("big"))
     auto_plan = extract_pages_auto(small_only, giant_bytes=10**9)

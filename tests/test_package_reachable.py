@@ -5,6 +5,11 @@ and the Python worker daemon Spark loads by name. A module that none of
 those imports, directly or through other modules, is dead code; this
 test names it so it is deleted (or wired in) rather than left to grow.
 
+The one exception is ``RETIRED``: the query library that only the
+retired round-8 driver (``__spark_entry__.py``) called. Those modules
+still have their own tests and go one family at a time; the list may
+only shrink, and no script outside ``tests/`` may import from it again.
+
 The walk is static: it parses every module with ``ast`` and follows
 ``import`` / ``from ... import`` statements anywhere in the file,
 including the lazy imports inside functions. Importing ``a.b.c`` also
@@ -18,7 +23,8 @@ import ast
 from pathlib import Path
 
 PACKAGE = "ocr_agent_spark"
-PACKAGE_DIR = Path(__file__).resolve().parent.parent / PACKAGE
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE_DIR = REPO / PACKAGE
 
 # ``worker_daemon`` is never imported by the package: Spark starts it
 # by name through ``spark.python.daemon.module`` (see ``session.py``).
@@ -26,6 +32,60 @@ ROOTS = (
     f"{PACKAGE}.__main__",
     f"{PACKAGE}.pipeline",
     f"{PACKAGE}.worker_daemon",
+)
+
+# Reached only from their own tests. Delete a family (and its tests)
+# or wire a module into the job, then take its names off this list.
+RETIRED = frozenset(
+    f"{PACKAGE}.{name}"
+    for name in (
+        "corpus",
+        "sources.bucketed",
+        "sources.sized_writer",
+        # media and link kernels
+        "kernel.avivideo",
+        "kernel.imagemeta",
+        "kernel.jpegdecode",
+        "kernel.links",
+        "kernel.mediacontainer",
+        "kernel.riff",
+        "kernel.tiffimage",
+        "kernel.wavaudio",
+        # the query functions
+        "functions.asof",
+        "functions.bpe",
+        "functions.bpe_merges",
+        "functions.budget",
+        "functions.chunking",
+        "functions.dedup_index",
+        "functions.drift",
+        "functions.dsir",
+        "functions.embed",
+        "functions.extracteval",
+        "functions.imagededup",
+        "functions.linededup",
+        "functions.links",
+        "functions.lmscore",
+        "functions.metadata",
+        "functions.mirrors",
+        "functions.mojibake",
+        "functions.multimodal",
+        "functions.packing",
+        "functions.pagerank",
+        "functions.paragraphs",
+        "functions.qualityclf",
+        "functions.redirects",
+        "functions.retrieval",
+        "functions.sampling",
+        "functions.sessions",
+        "functions.similarity",
+        "functions.spandedup",
+        "functions.tfidf",
+        "functions.urlfilter",
+        "functions.urlnorm",
+        "functions.urlseen",
+        "functions.webquality",
+    )
 )
 
 
@@ -75,13 +135,46 @@ def _reachable(modules: dict[str, Path], roots) -> set[str]:
     return seen
 
 
-def test_every_package_module_is_reachable_from_an_entry_point():
-    modules = _package_modules()
+def _entry_point_reach(modules: dict[str, Path]) -> set[str]:
     streaming = [m for m in modules if m.startswith(f"{PACKAGE}.streaming")]
     roots = [*ROOTS, *streaming]
     assert all(r in modules for r in roots), sorted(set(roots) - set(modules))
-    unreached = sorted(set(modules) - _reachable(modules, roots))
+    return _reachable(modules, roots)
+
+
+def _scripts() -> list[Path]:
+    """Every Python file in the repo outside the package and the tests."""
+    return [
+        path
+        for path in REPO.rglob("*.py")
+        if not path.is_relative_to(PACKAGE_DIR)
+        and not path.is_relative_to(REPO / "tests")
+        and not any(part.startswith(".") for part in path.relative_to(REPO).parts)
+    ]
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    modules = _package_modules()
+    unreached = sorted(set(modules) - _entry_point_reach(modules) - RETIRED)
     assert not unreached, (
         f"{len(unreached)} package module(s) are imported by no entry point "
         f"({', '.join(ROOTS)}, {PACKAGE}.streaming.*): {unreached}"
     )
+
+
+def test_retired_list_names_only_unreached_modules():
+    modules = _package_modules()
+    gone = sorted(RETIRED - set(modules))
+    assert not gone, f"deleted, take off RETIRED: {gone}"
+    wired = sorted(RETIRED & _entry_point_reach(modules))
+    assert not wired, f"reached from an entry point, take off RETIRED: {wired}"
+
+
+def test_no_script_imports_a_retired_module():
+    modules = _package_modules()
+    callers = {}
+    for path in _scripts():
+        imported = _imported_names(path.stem, path)
+        for name in sorted(_reachable(modules, imported) & RETIRED):
+            callers.setdefault(name, str(path.relative_to(REPO)))
+    assert not callers, f"retired module(s) imported outside tests/: {callers}"

@@ -5,7 +5,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from ocr_agent_spark.plans.inspect import (
+from plan_inspect import (
     count_exchanges,
     pushed_filters,
     python_eval_operators,
@@ -136,7 +136,7 @@ def test_staged_probe_masks_html_payload(spark, pages_path):
     would probe as a broken PDF classifies as html and must come out as
     ONE html task row, proving the probe never saw its bytes."""
     from ocr_agent_spark.operators.ingest import build_task_table
-    from ocr_agent_spark.plans.inspect import executed_plan_str
+    from plan_inspect import executed_plan_str
 
     pages = spark.read.parquet(pages_path)
     tasks = build_task_table(pages)
@@ -162,7 +162,7 @@ def test_broadcast_join_in_staged_key_attach(spark, pages_path):
     """Small key set → the staged path's key-attach join must be a
     broadcast hash join (no payload shuffle)."""
     from ocr_agent_spark.operators.ingest import build_task_table
-    from ocr_agent_spark.plans.inspect import executed_plan_str
+    from plan_inspect import executed_plan_str
 
     pages = spark.read.parquet(pages_path)
     tasks = build_task_table(pages)
@@ -175,7 +175,7 @@ def test_shuffle_join_fallback_over_key_limit(spark, pages_path):
     shuffle join on (url, page_index), with results identical to the
     broadcast path."""
     from ocr_agent_spark.operators.ingest import build_task_table
-    from ocr_agent_spark.plans.inspect import executed_plan_str
+    from plan_inspect import executed_plan_str
 
     pages = spark.read.parquet(pages_path)
     tasks = build_task_table(pages, broadcast_key_limit=0)

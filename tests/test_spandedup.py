@@ -84,7 +84,7 @@ def test_duplicate_span_stats(spark):
 
 
 def test_span_pipeline_stays_jvm(spark):
-    from ocr_agent_spark.plans.inspect import python_eval_operators
+    from plan_inspect import python_eval_operators
 
     d = _docs(spark, [(0, SHARED), (1, SHARED + " more words here")])
     assert python_eval_operators(
