@@ -23,7 +23,10 @@ Layout:
                   drives it, ``worker_daemon`` preloads Spark's Python workers
 
 Every module is reachable from ``__main__``, ``pipeline``,
-``worker_daemon`` or ``streaming`` (``tests/test_package_reachable.py``).
+``worker_daemon`` or ``streaming`` (``tests/test_package_reachable.py``),
+except the retired round-8 query library that test lists in ``RETIRED``:
+the rest of ``functions/``, the media and link kernels,
+``sources/{bucketed,sized_writer}`` and ``corpus``.
 """
 
 from ocr_agent_spark.cache import (  # noqa: F401
