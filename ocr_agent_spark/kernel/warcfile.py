@@ -164,8 +164,8 @@ def _hdr_decode(value: bytes) -> str:
 
     The writers in this module encode WARC-Target-URI / Location as
     UTF-8; decoding everything as latin-1 would mojibake non-ASCII URLs
-    through the WET/fetch-log round trips (url read back != url
-    written), silently breaking joins against the original url column.
+    through the WET round trip (url read back != url written),
+    silently breaking joins against the original url column.
     Legacy archives with raw 8-bit header bytes still parse via the
     latin-1 fallback (which never fails)."""
     try:
@@ -421,8 +421,8 @@ def write_warc_record(out, url: str, ts: _dt.datetime, payload: bytes,
 
     Defaults (status=200, no location) write byte-identical records to
     the historical form — the golden roundtrip contracts are
-    unaffected. ``status``/``location`` exist for fetch-log realism
-    (redirects, errors)."""
+    unaffected. ``status``/``location`` write redirect and error
+    responses."""
     if chunked:
         http_body = (
             b"%x\r\n" % len(payload) + payload + b"\r\n0\r\n\r\n"
@@ -599,37 +599,3 @@ def iter_wet_texts(stream) -> Iterator[tuple[str, _dt.datetime, str]]:
         url = headers.get("warc-target-uri", "")
         ts = _parse_warc_date(headers.get("warc-date", ""))
         yield url, ts, body.decode("utf-8", "replace")
-
-
-# -- fetch log: the WAT-adjacent response-metadata view ----------------------
-
-_STATUS_RE = re.compile(rb"^HTTP/\d\.\d[ \t]+(\d{3})")
-
-
-def iter_fetch_log(stream) -> Iterator[
-        tuple[str, _dt.datetime, int | None, str | None, str | None, int]]:
-    """(url, ts, status, content_type, location, n_payload_bytes) per
-    ``response`` record — the crawl's fetch log, without transcoding
-    or payload copies. ``status`` is None for bare-payload records
-    (some crawls store responses without the HTTP envelope);
-    ``location`` carries redirect targets for
-    functions/redirects.resolve_redirects."""
-    for headers, body in iter_warc_records(stream):
-        if headers.get("warc-type") != "response":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        ts = _parse_warc_date(headers.get("warc-date", ""))
-        status = ctype = loc = None
-        n = len(body)
-        m = _STATUS_RE.match(body)
-        if m:
-            status = int(m.group(1))
-            http = parse_http_response(body)
-            if http is not None:
-                http_headers, payload = http
-                ctype = http_headers.get("content-type")
-                loc = http_headers.get("location")
-                n = len(payload)
-        yield url, ts, status, ctype, loc, n

@@ -13,13 +13,18 @@ bytes-per-core rule, ``min(maxPartitionBytes, max(openCostInBytes,
 totalBytes / defaultParallelism))``, where ``totalBytes`` charges each
 file its open cost. That packs a small corpus into about one split per
 core, so the fused extraction (one Python task per split) runs as one
-wave. A Python task has a fixed cost of about 0.2 s on a 4-vCPU host
-before any program code runs, mostly pyspark's per-task
-``importlib.invalidate_caches()``, which makes every ``zipimporter`` on
-``pyspark.zip`` re-read the zip's directory. A smaller split cap buys
-extra waves of that cost, not parallelism. A deployment that wants
-another split size sets Spark's ``spark.sql.files.maxPartitionBytes``
-through ``extra_conf`` or its Spark defaults.
+wave. A Python task has a fixed cost before any program code runs.
+With pyspark's stock daemon it was 0.15-0.26 s on a 4-vCPU host,
+nearly all of it pyspark's per-task ``importlib.invalidate_caches()``,
+which makes every ``zipimporter`` re-read its archive's directory
+(``pyspark.zip``, and the ``spark-core`` jar Spark puts on the
+workers' ``PYTHONPATH``). ``worker_daemon`` skips the re-read of an
+unchanged archive, so that call takes about 0.2 ms and a trivial
+3-task Python job about 0.2 s in place of 0.6 s. The cost left still
+makes extra waves of Python tasks a loss, so a smaller split cap buys
+overhead, not parallelism. A deployment that wants another split size
+sets Spark's ``spark.sql.files.maxPartitionBytes`` through
+``extra_conf`` or its Spark defaults.
 
 ``cores`` defaults to ``SPARK_GRAFT_CPUS`` or else to the CPUs this
 process may run on (its affinity mask, not the machine's count), since

@@ -437,65 +437,3 @@ def read_wet(spark: SparkSession, paths: list[str],
     return _paths_df(spark, paths, num_partitions).mapInPandas(
         _read_wet_archives, WET_DDL
     )
-
-
-# -- fetch log: response metadata without payloads ---------------------------
-
-FETCH_LOG_DDL = ("path string, url string, warc_ts timestamp, status int, "
-                 "content_type string, location string, n_bytes long")
-
-_REDIRECT_STATUSES = (301, 302, 303, 307, 308)
-
-
-def _read_fetch_logs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_agent_spark.kernel.warcfile import iter_fetch_log
-
-    cols = ("path", "url", "warc_ts", "status", "content_type",
-            "location", "n_bytes")
-    for batch in batches:
-        rows: dict[str, list] = {c: [] for c in cols}
-        for path in batch["path"]:
-            with open(path, "rb") as fh:
-                for url, ts, status, ctype, loc, n in iter_fetch_log(fh):
-                    rows["path"].append(path)
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["status"].append(status)
-                    rows["content_type"].append(ctype)
-                    rows["location"].append(loc)
-                    rows["n_bytes"].append(n)
-                    if len(rows["url"]) >= _OUT_BATCH_ROWS:
-                        yield pd.DataFrame(rows)
-                        rows = {c: [] for c in cols}
-        if rows["url"]:
-            yield pd.DataFrame(rows)
-
-
-def read_fetch_log(spark: SparkSession, paths: list[str],
-                   num_partitions: int | None = None) -> DataFrame:
-    """WARC archives → per-response fetch log (url, ts, status,
-    content_type, location, n_bytes) — the WAT-adjacent metadata view:
-    no payload copies, no transcoding, so a triage/redirect pass over
-    an archive costs header parsing only."""
-    return _paths_df(spark, paths, num_partitions).mapInPandas(
-        _read_fetch_logs, FETCH_LOG_DDL
-    )
-
-
-def redirect_edges(fetch_log: DataFrame) -> DataFrame:
-    """Fetch log → (src, dst) redirect edges for
-    functions/redirects.resolve_redirects. Latest fetch per url wins
-    (a url refetched with a different target would otherwise be an
-    ambiguous src — resolve_redirects raises on those by design)."""
-    from pyspark.sql import Window
-
-    redirects = fetch_log.filter(
-        F.col("status").isin(*_REDIRECT_STATUSES)
-        & F.col("location").isNotNull()
-    )
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    return (
-        redirects.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(F.col("url").alias("src"), F.col("location").alias("dst"))
-    )

@@ -194,24 +194,43 @@ def test_many_small_files_extract_in_one_wave(spark, tmp_path):
 def test_python_workers_fork_from_the_preloading_daemon(spark):
     """Every Python worker is forked from ``worker_daemon``, which has
     imported the extraction stack, so a task that imports nothing itself
-    finds that stack loaded."""
+    finds that stack loaded; and the workers inherit its stat-checked
+    ``zipimporter.invalidate_caches``, so a task's
+    ``importlib.invalidate_caches()`` keeps every unchanged archive's
+    cached directory instead of re-reading it."""
     from ocr_agent_spark.worker_daemon import PRELOAD
 
     def worker_state(_):
+        import importlib
         import os
         import sys
+        import zipimport
 
         with open(f"/proc/{os.getppid()}/cmdline", "rb") as fh:
             parent = fh.read().replace(b"\0", b" ").decode()
-        yield parent, [name for name in PRELOAD if name not in sys.modules]
+        invalidate = zipimport.zipimporter.invalidate_caches
+        before = dict(zipimport._zip_directory_cache)
+        importlib.invalidate_caches()
+        after = zipimport._zip_directory_cache
+        reread = sorted(a for a, files in before.items() if after.get(a) is not files)
+        yield (
+            parent,
+            [name for name in PRELOAD if name not in sys.modules],
+            getattr(invalidate, "stat_checked", False),
+            len(before),
+            reread,
+        )
 
     cores = spark.sparkContext.defaultParallelism
     states = (spark.sparkContext.parallelize(range(cores), cores)
               .mapPartitions(worker_state).collect())
     assert len(states) == cores
-    for parent, missing in states:
+    for parent, missing, stat_checked, archives, reread in states:
         assert "-m ocr_agent_spark.worker_daemon" in parent
         assert missing == []
+        assert stat_checked
+        assert archives > 0
+        assert reread == []
 
 
 def test_run_commit_is_atomic(spark, corpus, tmp_path, monkeypatch):

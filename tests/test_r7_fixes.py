@@ -8,7 +8,7 @@
 - similarity.py: zero-norm embeddings make cosine NaN; Spark orders
   NaN above every number, so an unguarded `>= threshold` pairs a
   degenerate vector with everything.
-- kernel/warcfile.py: UTF-8 URLs written by the WET/fetch-log writers
+- kernel/warcfile.py: UTF-8 URLs written by the WET and WARC writers
   must read back byte-identical (reader used to decode latin-1).
 - kernel/links.py: extract_anchors/extract_links share one <a href>
   detection regex, and unclosed anchors scan a bounded window instead

@@ -17,6 +17,7 @@ from ocr_agent_spark.kernel.warcfile import (
     iter_warc_pages,
     iter_warc_records,
     sniff_charset,
+    write_warc_record,
 )
 
 TS = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
@@ -54,7 +55,8 @@ def test_warc_whole_file_gzip():
 
 def test_warc_skips_non_response_records():
     """request/metadata records interleaved with responses are skipped
-    (a real crawl stores all three per fetch)."""
+    (a real crawl stores all three per fetch), and so is a redirect
+    response with an empty body."""
     resp = build_warc(_pages(3), compress=False)
     req = (
         b"WARC/1.0\r\nWARC-Type: request\r\n"
@@ -62,7 +64,11 @@ def test_warc_skips_non_response_records():
         b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
         b"Content-Length: 4\r\n\r\nGET \r\n\r\n"
     )
-    got = list(iter_warc_pages(io.BytesIO(req + resp + req)))
+    redirect = io.BytesIO()
+    write_warc_record(redirect, "https://example.com/old", TS, b"",
+                      compress=False, status=301,
+                      location="https://example.com/p/0")
+    got = list(iter_warc_pages(io.BytesIO(req + resp + redirect.getvalue() + req)))
     assert len(got) == 3
 
 
