@@ -19,11 +19,11 @@ nearly all of it pyspark's per-task ``importlib.invalidate_caches()``,
 which makes every ``zipimporter`` re-read its archive's directory
 (``pyspark.zip``, and the ``spark-core`` jar Spark puts on the
 workers' ``PYTHONPATH``). ``worker_daemon`` skips the re-read of an
-unchanged archive, so that call takes about 0.2 ms and a trivial
-3-task Python job about 0.2 s in place of 0.6 s. The cost left still
-makes extra waves of Python tasks a loss, so a smaller split cap buys
-overhead, not parallelism. A deployment that wants another split size
-sets Spark's ``spark.sql.files.maxPartitionBytes`` through
+unchanged archive, so that call takes 0.2-0.5 ms and a warm trivial
+3-task Python job 0.16-0.19 s in place of about 0.53 s. Each extra
+wave of Python tasks still costs wall time, so a smaller split cap
+buys overhead, not parallelism. A deployment that wants another split
+size sets Spark's ``spark.sql.files.maxPartitionBytes`` through
 ``extra_conf`` or its Spark defaults.
 
 ``cores`` defaults to ``SPARK_GRAFT_CPUS`` or else to the CPUs this

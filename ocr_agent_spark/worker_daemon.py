@@ -27,7 +27,7 @@ Before the preload the daemon replaces ``zipimporter.invalidate_caches``
 with ``invalidate_if_changed``, which re-reads an archive only when its
 stat stamp moved, and after the preload it reads each archive once to
 record the stamps; the forked workers inherit both, and a per-task
-invalidation falls to about 0.2 ms. An archive that is replaced, added
+invalidation falls to 0.2-0.5 ms. An archive that is replaced, added
 or deleted is seen exactly as before. The driver and user processes
 keep the stock method.
 """
