@@ -61,26 +61,31 @@ def _inputs_manifest(job_root: str) -> str:
     return os.path.join(job_root, "inputs.json")
 
 
+def _split_inputs(paths: list[str]) -> tuple[list[str], list[str]]:
+    """Manifest paths → (parquet bundles, WARC crawl archives)."""
+    warc = [p for p in paths if p.lower().endswith((".warc", ".warc.gz"))]
+    warc_set = set(warc)
+    return [p for p in paths if p not in warc_set], warc
+
+
 def _load_pages(spark, paths: list[str]):
     """Manifest paths → one pages DataFrame. Parquet bundles and WARC
     crawl archives mix freely in a job; WARC rows are normalized to the
     same input-hint schema at the source (sources/warc.py)."""
-    warc = [p for p in paths
-            if p.lower().endswith((".warc", ".warc.gz"))]
-    warc_set = set(warc)
-    parquet = [p for p in paths if p not in warc_set]
+    from ocr_agent_spark.operators.ingest import has_doc_meta, with_doc_meta
+
+    parquet, warc = _split_inputs(paths)
     frames = []
     if parquet:
         frames.append(spark.read.parquet(*parquet))
     if warc:
-        from ocr_agent_spark.operators.ingest import with_doc_meta
         from ocr_agent_spark.sources.warc import read_warc
 
-        # WARC rows get the same ingest-time routing metadata
-        # (doc_bytes/is_pdf) the parquet writer persists, so mixed
-        # manifests union cleanly and the giant-PDF router still
-        # prunes to slim columns.
-        frames.append(with_doc_meta(read_warc(spark, warc)))
+        frames.append(read_warc(spark, warc))
+    # Every frame gets the ingest-time routing metadata (doc_bytes,
+    # is_pdf): a frame without it would union to NULLs, which the
+    # giant-PDF router reads as "not giant".
+    frames = [f if has_doc_meta(f) else with_doc_meta(f) for f in frames]
     df = frames[0]
     for other in frames[1:]:
         df = df.unionByName(other, allowMissingColumns=True)
@@ -118,9 +123,7 @@ def cmd_enqueue(args) -> int:
     # transcode) — enqueueing 100 archives must not pay a full parse
     # that `run` immediately repeats (code-review r4 finding). The
     # triage pass also surfaces corrupt archives before run time.
-    warc_paths = [p for p in paths if p.lower().endswith((".warc", ".warc.gz"))]
-    warc_set = set(warc_paths)
-    pq_paths = [p for p in paths if p not in warc_set]
+    pq_paths, warc_paths = _split_inputs(paths)
     n = 0
     if pq_paths:
         n += spark.read.parquet(*pq_paths).count()

@@ -746,8 +746,7 @@ class PdfDocument:
     document while keeping per-page error isolation (a page that fails
     to render fails alone). ``page_text(i)`` equals
     ``extract_pdf_page_text(data, i)`` exactly (tested); the per-page
-    function stays for the staged path, whose rows arrive one page at a
-    time.
+    function stays as the reference those tests compare against.
     """
 
     __slots__ = ("_objects", "_pages")

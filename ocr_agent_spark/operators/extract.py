@@ -9,10 +9,11 @@ per-row Python.
 A fused task (``extract_pages_fused``, the job's path) is one scan
 split of the pages table, sized by Spark's bytes-per-core rule (see
 ``session``): no shuffle, and host-level skew cannot concentrate because
-nothing is keyed by host. Only the staged branch (``extract_tasks``,
-which ``extract_pages_auto`` uses for giant PDFs) hash-partitions by
-``xxhash64(url, page_index)``, so one giant PDF's pages spread across
-partitions.
+nothing is keyed by host. Only giant PDFs are shuffled
+(``extract_pages_auto``): each is copied to one shard per core and
+hash-partitioned by (url, shard), and each shard parses the document
+once and renders every ``shards``-th page, so one giant PDF's pages
+spread across the cluster.
 
 Failure contract (design rule D2, cli.py:239-243): a document that
 fails to parse becomes a row with ``status='failed'`` and
@@ -34,6 +35,7 @@ import time
 from collections.abc import Iterator
 from datetime import datetime, timezone
 from functools import partial
+from itertools import repeat
 
 import pandas as pd
 
@@ -43,13 +45,6 @@ from pyspark.sql import functions as F
 
 STATUS_COMPLETED = "completed"
 STATUS_FAILED = "failed"
-
-EXTRACTED_SCHEMA = (
-    "order_key long, kind string, url string, page_index int, total_pages int, "
-    "created_ts timestamp, text string, status string, error string, "
-    "doc_bytes long, partition_id int, part_wall_ms long"
-)
-
 
 class _LineageParam(AccumulatorParam):
     """``partition_id -> (doc_count, byte_count, wall_ms)``. A later
@@ -78,67 +73,6 @@ def _report(counter: Accumulator | None, partition_id: int, rows: int,
         counter.add({partition_id: (rows, nbytes, wall_ms)})
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame],
-                     counter: Accumulator | None = None) -> Iterator[pd.DataFrame]:
-    """Partition iterator → extracted rows (runs on executors)."""
-    # Lazy heavyweight-init idiom (runner.py:78-94 analogue): kernels are
-    # module-level imports cached per Python worker, loaded once — not
-    # per batch — thanks to spark.python.worker.reuse.
-    from pyspark import TaskContext
-
-    from ocr_agent_spark.kernel.html_extract import extract_html_text
-    from ocr_agent_spark.kernel.minipdf import extract_pdf_page_text
-
-    ctx = TaskContext.get()
-    partition_id = ctx.partitionId() if ctx is not None else -1
-    t0 = time.monotonic()
-    rows = nbytes = wall_ms = 0
-
-    for batch in batches:
-        texts: list[str | None] = []
-        statuses: list[str] = []
-        errors: list[str | None] = []
-        for kind, payload, page_index in zip(
-            batch["kind"], batch["html"], batch["page_index"]
-        ):
-            try:
-                data = bytes(payload)
-                if kind == "pdf_page":
-                    text = extract_pdf_page_text(data, int(page_index))
-                    text = text.rstrip() + "\n" if text.strip() else ""
-                else:
-                    text = extract_html_text(data)
-                texts.append(text)
-                statuses.append(STATUS_COMPLETED)
-                errors.append(None)
-            except Exception as exc:  # data fault → failure row (D2)
-                texts.append(None)
-                statuses.append(STATUS_FAILED)
-                errors.append(repr(exc))
-        doc_bytes = batch["html"].map(len)
-        if len(batch):
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            rows += len(batch)
-            nbytes += int(doc_bytes.sum())
-        yield pd.DataFrame(
-            {
-                "order_key": batch["order_key"],
-                "kind": batch["kind"],
-                "url": batch["url"],
-                "page_index": batch["page_index"],
-                "total_pages": batch["total_pages"],
-                "created_ts": batch["created_ts"],
-                "text": texts,
-                "status": statuses,
-                "error": errors,
-                "doc_bytes": doc_bytes,
-                "partition_id": partition_id,
-                "part_wall_ms": wall_ms,
-            }
-        )
-    _report(counter, partition_id, rows, nbytes, wall_ms)
-
-
 # Max rows buffered before a fused output batch is flushed. Bounds the
 # per-task Python-side memory independently of the INPUT batch shape:
 # without it, a single low-byte/high-page PDF (bytes are the routing
@@ -155,8 +89,8 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
 
     One Arrow trip: the raw payload enters Python exactly once; page
     counting, pdf page fan-out (1→N row emission) and extraction all
-    happen inside the same batch. Emits the same row shape as the
-    staged path minus order_key (attached afterward on slim columns).
+    happen inside the same batch. No order_key: it is attached
+    afterwards on slim columns (``pipeline.attach_order_key``).
 
     Output batches are flushed every ``FUSED_OUT_BATCH_ROWS`` emitted
     rows — including mid-document, so one degenerate PDF's fan-out
@@ -164,6 +98,11 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
     running clock per task, so ``max()`` per partition is still that
     partition's total wall time; ``counter`` receives exactly those
     values once the last batch is out.
+
+    A batch with ``shard``/``shards`` columns (the giant-PDF branch of
+    ``extract_pages_auto``) renders only pages ``p % shards == shard``
+    of each row; a document's one-row outcome (a failed parse, a
+    zero-page PDF) comes from shard 0 alone.
     """
     from pyspark import TaskContext
 
@@ -208,9 +147,14 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
         return df
 
     for batch in batches:
-        for url, created_ts, payload in zip(
-            batch["url"], batch["warc_ts"], batch["html"]
+        sharded = "shard" in batch
+        for url, created_ts, payload, shard, shards in zip(
+            batch["url"], batch["warc_ts"], batch["html"],
+            batch["shard"] if sharded else repeat(0),
+            batch["shards"] if sharded else repeat(1),
         ):
+            if shard and (payload is None or not is_pdf_payload(payload)):
+                continue  # a document's one-row outcome comes from shard 0
             if payload is None:  # data fault → failure row, never a crash (D2)
                 emit("html", url, 0, None, created_ts, None, STATUS_FAILED,
                      "TypeError('null html payload')", 0)
@@ -226,21 +170,22 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
                          None, STATUS_FAILED, repr(exc), n)
             else:
                 try:
-                    # One object-table parse per document, shared by the
-                    # count and every page render (the per-page function
-                    # would re-parse per page — measured on multi-page docs).
+                    # One object-table parse per document (per shard),
+                    # shared by the count and every page render (the
+                    # per-page function would re-parse per page).
                     doc = PdfDocument(data)
                     total = doc.page_count
+                    error = None if total > 0 else (
+                        "IndexError('page_index 0 out of range "
+                        f"for {total}-page PDF')")
                 except Exception as exc:
-                    emit("pdf_page", url, 0, -1, created_ts,
-                         None, STATUS_FAILED, repr(exc), n)
+                    total, error = -1, repr(exc)
+                if error is not None:  # the document fails whole: one row
+                    if not shard:
+                        emit("pdf_page", url, 0, total, created_ts, None,
+                             STATUS_FAILED, error, n)
                     continue
-                if total <= 0:
-                    emit("pdf_page", url, 0, total, created_ts, None,
-                         STATUS_FAILED, "IndexError('page_index 0 out of range "
-                         f"for {total}-page PDF')", n)
-                    continue
-                for p in range(total):
+                for p in range(shard, total, shards):
                     try:
                         text = doc.page_text(p, columns=pdf_columns)
                         text = text.rstrip() + "\n" if text.strip() else ""
@@ -275,21 +220,17 @@ def extract_pages_fused(pages: DataFrame, pdf_columns: bool = False,
     golden byte-equality contract against the reference fixtures pins
     the plain line-order render.
 
-    The staged path (build_task_table → extract_tasks) mirrors the
-    reference's enqueue/run phases and materializes the queue table
-    with its dense ``order_key``; this fused path is what a 100 TB
-    production run uses: the binary column is scanned once, crosses
-    into Python once, and is never shuffled or joined. No order_key
-    column — enqueue order IS the natural key (url, page_index)
-    (design rule D1: order is data); the dense sequence is derivable
-    any time via ``assign_order_key`` on the committed (payload-free)
-    output.
+    The binary column is scanned once, crosses into Python once, and is
+    never shuffled or joined. No order_key column — enqueue order IS
+    the natural key (url, page_index) (design rule D1: order is data);
+    the dense sequence is derivable any time via
+    ``pipeline.attach_order_key`` on the committed (payload-free) output.
 
     Skew note: a PDF's pages are all emitted by the scan partition that
     holds the PDF (fan-out happens in-batch). Typical web corpora
-    (pages ≤ tens) are fine; a corpus of 10k-page PDFs should instead
-    take the staged path, whose explode + shuffle spreads pages across
-    the cluster before the per-page extraction.
+    (pages ≤ tens) are fine; giant PDFs go through
+    ``extract_pages_auto``, which spreads each one's pages over one
+    shard per core.
 
     ``counter`` (from ``lineage_counter``) collects each task's lineage
     values while the plan runs.
@@ -334,35 +275,36 @@ def extract_pages_auto(pages: DataFrame,
                        giant_bytes: int = GIANT_PDF_BYTES,
                        has_giant: bool | None = None,
                        counter: Accumulator | None = None) -> DataFrame:
-    """Fused extraction with automatic giant-PDF diversion.
+    """Fused extraction with giant PDFs spread across the cluster.
 
     The fused path's one skew hazard: a PDF's pages are all emitted by
     the scan partition holding the payload, so a 10k-page PDF pins one
-    task while its siblings finish. Instead of a docstring warning
-    (round 1), the corpus is SPLIT by a pure-JVM predicate — PDF magic
-    AND payload ≥ ``giant_bytes`` — and only the giant slice takes the
-    staged explode+shuffle path, whose hash(url, page_index)
-    repartition spreads the pages across the cluster before per-page
-    extraction. Everything else keeps the zero-shuffle fused plan.
+    task while its siblings finish. So the corpus is SPLIT by a
+    pure-JVM predicate — PDF magic AND payload ≥ ``giant_bytes`` — and
+    only the giant slice is spread: each giant row is copied to
+    K = ``defaultParallelism`` shards, hash-partitioned by (url, shard)
+    into K partitions, and the same fused kernel renders the pages
+    ``p % K == shard`` from one parse per shard. The spread follows the
+    cluster's size, not ``spark.sql.shuffle.partitions``. Everything
+    else keeps the zero-shuffle fused plan.
 
     The byte threshold is deliberately a scan-time expression (no probe
     UDF pass over the whole corpus): page count correlates with payload
-    size, and a false positive merely routes one modest PDF through the
-    staged path — same rows either way (tested).
+    size, and a false positive merely spreads one modest PDF — same
+    rows either way (tested).
 
-    Output schema = FUSED_SCHEMA for both branches (the staged branch
-    drops its dense order_key; order is data — (url, page_index)).
-    ``counter`` is handed to both branches' extraction tasks.
+    Both branches emit FUSED_SCHEMA; ``counter`` is handed to both
+    branches' extraction tasks.
     """
     from ocr_agent_spark.operators.ingest import has_doc_meta
 
     # When ingest persisted slim routing metadata, both the probe and
     # the branch split read (is_pdf, doc_bytes) instead of the payload
-    # — the giant-only staged branch's filter then pushes down to
-    # parquet row-group stats and never decodes non-giant payloads.
+    # — the giant-only branch's filter then pushes down to parquet
+    # row-group stats and never decodes non-giant payloads.
     is_giant = giant_pdf_predicate(giant_bytes, use_meta=has_doc_meta(pages))
     # Existence check first: the common no-giants corpus keeps the pure
-    # fused plan — no split, no staged machinery. Callers that already
+    # fused plan — no split, no shuffle. Callers that already
     # aggregate over the input (run_extraction_job's pending count)
     # pass ``has_giant`` from that same pass so no extra scan happens;
     # standalone callers fall back to a slim (or JVM-only) limit(1) probe.
@@ -372,35 +314,17 @@ def extract_pages_auto(pages: DataFrame,
         return extract_pages_fused(pages, counter=counter)
 
     fused_out = extract_pages_fused(pages.filter(~is_giant), counter=counter)
-    from ocr_agent_spark.operators.ingest import build_task_table
-
-    staged_out = extract_tasks(
-        build_task_table(pages.filter(is_giant)), counter=counter
-    ).select(*[f.split(" ")[0] for f in FUSED_SCHEMA.split(", ")])
-    return fused_out.unionByName(staged_out)
-
-
-def extract_tasks(tasks: DataFrame, num_partitions: int | None = None,
-                  repartition: bool = True,
-                  counter: Accumulator | None = None) -> DataFrame:
-    """tasks → extracted (one completed-or-failed row per task).
-
-    Pass ``repartition=False`` when the input is already hash-
-    partitioned by (url, page_index) — e.g. straight out of
-    ``build_task_table``'s key-attach join or the resume anti-join —
-    to avoid re-shuffling the fat payload column.
-    """
-    if repartition:
-        spark = tasks.sparkSession
-        if num_partitions is None:
-            num_partitions = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-        tasks = tasks.repartition(
-            num_partitions, F.xxhash64(F.col("url"), F.col("page_index"))
-        )
-    return tasks.mapInPandas(partial(_extract_batches, counter=counter),
-                             schema=EXTRACTED_SCHEMA)
+    shards = pages.sparkSession.sparkContext.defaultParallelism
+    spread = pages.filter(is_giant).select(
+        "url", "warc_ts", "html",
+        F.explode(F.sequence(F.lit(0), F.lit(shards - 1))).alias("shard"),
+        F.lit(shards).alias("shards"),
+    ).repartition(shards, "url", "shard")
+    giant_out = spread.mapInPandas(
+        partial(_extract_pages_fused_batches, counter=counter),
+        schema=FUSED_SCHEMA,
+    )
+    return fused_out.unionByName(giant_out)
 
 
 def lineage_from_extracted(counts: dict, run_id: str) -> list[dict]:

@@ -1,34 +1,22 @@
-"""Ingestion: pages table → ordered task table (the queue analogue).
+"""Ingestion helpers: routing metadata and the dense order key.
 
-Reference lifecycle being re-expressed (SURVEY §3.1): discover →
-classify → split image/pdf → per-pdf page probe → page fan-out → ordered
-enqueue. Here it is one declarative plan:
+- ``with_doc_meta`` adds slim routing metadata (``doc_bytes``,
+  ``is_pdf``) from the payload once, at ingest time, so the job's
+  giant-PDF routing reads two fixed-width columns instead of the
+  payload.
+- ``assign_order_key`` is the deterministic ``order_key`` replacing the
+  reference's AUTOINCREMENT task_id (W1): assigned from content order
+  (url, page_index), never from arrival or partition order, so it is
+  identical under any parallelism (design rule D1).
+  ``pipeline.attach_order_key`` applies it to committed output.
 
-- classify by payload magic (``%PDF``) — the extension predicate S3
-  generalized to content sniffing;
-- PDF page counts via a Series→Series pandas UDF (S6) touching only the
-  pdf slice (predicate keeps the HTML majority off the Python path);
-- fan-out via ``explode(sequence(0, total_pages-1))`` (S8/U3) — a pure
-  JVM generator, no Python in the 1→N row expansion;
-- deterministic ``order_key`` replacing the AUTOINCREMENT task_id (W1):
-  assigned from content order (url, page_index), never from arrival or
-  partition order, so output is byte-identical under any parallelism
-  (design rule D1).
-
-Scale notes:
-
-- ``assign_order_key``: a naive ``row_number().over(Window.orderBy())``
-  collapses the whole table into ONE partition. We instead
-  range-partition by the sort key, enumerate per-partition inside
-  ``mapInPandas`` (vectorized arange — no second shuffle, unlike a
-  window over the partition id), and add per-partition offsets from a
-  tiny count aggregate (two-phase global sequence). Only one count per
-  partition ever reaches a broadcast.
-- ``build_task_table`` never shuffles the fat ``html`` payload for key
-  assignment: keys are computed on a slim (url, page_index) projection
-  and attached with ONE hash join — whose output partitioning
-  (hash(url, page_index)) is exactly what the extraction stage needs,
-  so the payload is shuffled once end-to-end.
+Scale note: a naive ``row_number().over(Window.orderBy())`` collapses
+the whole table into ONE partition. ``assign_order_key`` instead
+range-partitions by the sort key, enumerates per-partition inside
+``mapInPandas`` (vectorized arange — no second shuffle, unlike a window
+over the partition id), and adds per-partition offsets from a tiny count
+aggregate (two-phase global sequence). Only one count per partition
+ever reaches a broadcast.
 """
 
 from __future__ import annotations
@@ -37,38 +25,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
-
-KIND_HTML = "html"
-KIND_PDF = "pdf"
-KIND_PDF_PAGE = "pdf_page"
-
-
-@pandas_udf(IntegerType())
-def _pdf_page_count_udf(payload: pd.Series) -> pd.Series:
-    from ocr_agent_spark.kernel.minipdf import pdf_page_count
-
-    def probe(data) -> int:
-        if data is None:
-            return 1  # non-PDF row: payload was masked out JVM-side
-        try:
-            return pdf_page_count(bytes(data))
-        except Exception:
-            return -1  # malformed payload → failure row downstream (D2)
-
-    return payload.map(probe)
-
-
-def classify_pages(pages: DataFrame) -> DataFrame:
-    """Add ``kind`` from payload magic bytes (content-based S3/P1)."""
-    return pages.withColumn(
-        "kind",
-        F.when(
-            F.substring(F.col("html"), 1, 4).cast("string") == "%PDF", F.lit(KIND_PDF)
-        ).otherwise(F.lit(KIND_HTML)),
-    )
-
 
 DOC_META_COLS = ("doc_bytes", "is_pdf")
 
@@ -79,10 +35,10 @@ def with_doc_meta(pages: DataFrame) -> DataFrame:
     Apply ONCE at ingest time (when the corpus lands in the table) and
     persist the columns. Every later job decision that only needs
     payload *shape* — the pending-stats aggregate's giant-PDF bit, the
-    fused/staged router split — then prunes to these two slim columns
+    router's giant-PDF split — then prunes to these two slim columns
     instead of re-materializing the fattest column in the table, and
-    the giant-only staged branch's filter pushes down to parquet
-    row-group stats. At 100 TB this is the difference between a
+    the giant-only branch's filter pushes down to parquet row-group
+    stats. At 100 TB this is the difference between a
     metadata-only routing pass and a second full payload scan per run.
 
     NULL-safe: a NULL payload gets ``doc_bytes=0`` / ``is_pdf=false``
@@ -106,76 +62,6 @@ def has_doc_meta(df: DataFrame) -> bool:
 
 
 BROADCAST_KEY_LIMIT = 5_000_000
-
-
-def build_task_table(pages: DataFrame, order_partitions: int | None = None,
-                     broadcast_key_limit: int = BROADCAST_KEY_LIMIT) -> DataFrame:
-    """pages → tasks: one row per HTML doc, one row per PDF page.
-
-    Output schema: ``order_key bigint, kind string, url string,
-    page_index int, total_pages int, created_ts timestamp, html binary``.
-    HTML rows get page_index=0 / total_pages NULL; malformed PDFs get
-    page_index=0 / total_pages=-1 and flow through as failure rows (D2),
-    mirroring the reference's keep-failed-rows contract (cli.py:239-243).
-
-    Assumes (url, page_index) is unique in the input snapshot — the
-    same invariant the resume anti-join keys on. De-duplicate upstream
-    (e.g. latest ``warc_ts`` wins) if a crawl carries url revisits.
-    """
-    # Single-scan plan: no filter/union branches (each branch would
-    # re-scan the source per pass). The probe UDF's input is MASKED
-    # JVM-side to the PDF slice (CASE WHEN kind='pdf' THEN html END):
-    # the HTML-majority payload reaches the Arrow batch as NULLs — a
-    # validity bitmap, zero payload bytes — instead of round-tripping
-    # the full binary column into Python just to fail a 4-byte magic
-    # check. The fan-out stays one explode: html → 1 row, good pdf →
-    # total_pages rows, bad pdf → 1 failure row (total_pages<=0, D2).
-    probed = classify_pages(pages).withColumn(
-        "_probe",
-        _pdf_page_count_udf(F.when(F.col("kind") == KIND_PDF, F.col("html"))),
-    )
-    n_rows = (
-        F.when(F.col("kind") == KIND_HTML, F.lit(1))
-        .when(F.col("_probe") <= 0, F.lit(1))
-        .otherwise(F.col("_probe"))
-    )
-    tasks_raw = probed.select(
-        F.when(F.col("kind") == KIND_HTML, F.lit(KIND_HTML))
-        .otherwise(F.lit(KIND_PDF_PAGE))
-        .alias("kind"),
-        "url",
-        F.explode(F.sequence(F.lit(0), n_rows - F.lit(1))).alias("page_index"),
-        F.when(F.col("kind") == KIND_HTML, F.lit(None).cast("int"))
-        .otherwise(F.col("_probe"))
-        .alias("total_pages"),
-        F.col("warc_ts").alias("created_ts"),
-        "html",
-    )
-
-    # Key assignment on a slim projection: the fat html column never
-    # enters the order-key shuffles. The slim keys are persisted so the
-    # range-partitioner's sampling pass and the numbering pass don't
-    # each re-run the scan+probe lineage. (Tracked: callers release via
-    # ocr_agent_spark.release_caches() after their terminal action.)
-    from ocr_agent_spark.cache import persist_tracked
-
-    slim = persist_tracked(tasks_raw.select("url", "page_index"))
-    n_keys = slim.count()
-    keyed = assign_order_key(slim, order_partitions=order_partitions)
-
-    # Attach strategy by key cardinality:
-    # - small key set (≲ broadcast_key_limit rows ≈ a few hundred MB):
-    #   BROADCAST the keyed table — the fat payload is then shuffled
-    #   ZERO times end-to-end; extraction consumes scan partitions
-    #   directly (map-side only). Shuffling ~4 KB payloads is the
-    #   single most expensive byte-movement in the job, and on a real
-    #   cluster it is also the network bottleneck.
-    # - huge key set (10^12-doc scale): shuffle hash join on
-    #   (url, page_index); the join's partitioning then doubles as the
-    #   extraction partitioning, so the payload still moves only once.
-    if n_keys <= broadcast_key_limit:
-        return tasks_raw.join(F.broadcast(keyed), ["url", "page_index"])
-    return tasks_raw.join(keyed, ["url", "page_index"])
 
 
 def assign_order_key(

@@ -24,8 +24,7 @@ raises (exit-code-2 guard, cli.py:187-192 / A3).
 
 Order contract (D1): enqueue order is the natural key
 (url, page_index); the merge sorts by it. The dense ``order_key`` of
-the reference's task table lives in the staged path
-(``build_task_table``) and is derivable from committed output via
+the reference's task table is derived from committed output by
 ``attach_order_key`` — order is data, never execution order.
 """
 
@@ -155,8 +154,8 @@ def _run_extraction_job(
 
     pending = store.anti_join_committed(pages, RESUME_KEYS, spark)
     # Auto-routed: fused single-pass extraction, with giant PDFs (the
-    # one fused-path skew hazard) diverted to the staged explode+shuffle
-    # path so their pages spread across the cluster.
+    # one fused-path skew hazard) sharded over the cores so their pages
+    # spread across the cluster.
     commit_run(
         spark, store, run_id,
         lambda counter: extract_pages_auto(
@@ -202,8 +201,8 @@ def read_extracted(spark: SparkSession, output_root: str) -> DataFrame | None:
 def attach_order_key(extracted: DataFrame) -> DataFrame:
     """Dense 1..N order_key over committed output (payload-free).
 
-    Derivable data: the key follows (url, page_index) exactly as the
-    staged queue table's AUTOINCREMENT analogue. Broadcast-attached
+    Derivable data: the key follows (url, page_index), the analogue of
+    the reference queue's AUTOINCREMENT task_id. Broadcast-attached
     when small; slim shuffle join otherwise.
     """
     from ocr_agent_spark.cache import persist_tracked

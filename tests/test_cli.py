@@ -246,3 +246,28 @@ def test_cli_warc_error_report_bounded(spark, tmp_path, capsys):
     n_warn = err.count("pages before:")
     assert n_warn == 20  # bounded head
     assert f"and {n_bad - 20} more" in err and f"({n_bad} total)" in err
+
+
+def test_load_pages_gives_every_frame_routing_meta(spark, tmp_path):
+    """A raw parquet bundle (no doc_bytes/is_pdf) mixed with a WARC gets
+    the routing metadata too: none of it is NULL after the union, so the
+    giant-PDF router sees the parquet's PDFs as PDFs."""
+    from ocr_agent_spark.cli import _load_pages
+    from ocr_agent_spark.fixtures import generate_pages
+    from ocr_agent_spark.sources.warc import write_pages_warc
+
+    pq = str(tmp_path / "pages")
+    write_pages_parquet(pq, 30, with_meta=False)
+    warc = str(tmp_path / "crawl-00.warc.gz")
+    n_warc = write_pages_warc(
+        [(p.url, p.warc_ts, p.html) for p in generate_pages(40)[30:]
+         if p.html[:5] != b"%PDF-"],
+        warc,
+    )
+
+    rows = _load_pages(spark, [pq, warc]).select("html", "doc_bytes", "is_pdf").collect()
+    assert len(rows) == 30 + n_warc
+    assert all(r["doc_bytes"] is not None and r["is_pdf"] is not None for r in rows)
+    pdfs = [r for r in rows if bytes(r["html"])[:4] == b"%PDF"]
+    assert pdfs and all(r["is_pdf"] for r in pdfs)
+    assert all(r["doc_bytes"] == len(r["html"]) for r in rows)

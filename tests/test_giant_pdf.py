@@ -1,9 +1,16 @@
 """Giant-PDF fan-out: both paths handle a 300-page payload correctly."""
 
+import re
+
 from ocr_agent_spark.kernel.minipdf import build_pdf
+
+UNSHARDED = ["kind", "url", "page_index", "total_pages", "created_ts", "text",
+             "status", "error", "doc_bytes"]
 
 
 def test_300_page_pdf_both_paths(spark):
+    """The fused kernel and the sharded giant-PDF branch of
+    ``extract_pages_auto`` emit the same rows for a 300-page PDF."""
     pages = [[f"PAGE_{p}_MARK", f"line two of page {p}"] for p in range(300)]
     payload = build_pdf(pages)
     df = spark.createDataFrame(
@@ -11,8 +18,10 @@ def test_300_page_pdf_both_paths(spark):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
 
-    from ocr_agent_spark.operators.extract import extract_pages_fused, extract_tasks
-    from ocr_agent_spark.operators.ingest import build_task_table
+    from ocr_agent_spark.operators.extract import (
+        extract_pages_auto,
+        extract_pages_fused,
+    )
 
     fused = extract_pages_fused(df).collect()
     assert len(fused) == 300
@@ -21,16 +30,79 @@ def test_300_page_pdf_both_paths(spark):
     by_page = {r["page_index"]: r["text"] for r in fused}
     assert "PAGE_0_MARK" in by_page[0] and "PAGE_299_MARK" in by_page[299]
 
-    staged = extract_tasks(build_task_table(df), repartition=False).collect()
-    assert {(r["page_index"], r["text"]) for r in staged} == {
-        (r["page_index"], r["text"]) for r in fused
-    }
+    sharded = extract_pages_auto(df, giant_bytes=len(payload) // 2).collect()
+    assert sorted(tuple(r[c] for c in UNSHARDED) for r in sharded) == sorted(
+        tuple(r[c] for c in UNSHARDED) for r in fused
+    )
+
+
+def test_sharded_fused_batches(monkeypatch):
+    """Spark-free: batches carrying (shard, shards) split one document's
+    pages between shards, each shard parsing the document once."""
+    import pandas as pd
+
+    from ocr_agent_spark.kernel import minipdf
+    from ocr_agent_spark.operators.extract import _extract_pages_fused_batches
+
+    built = []
+
+    class CountingPdfDocument(minipdf.PdfDocument):
+        def __init__(self, data):
+            built.append(len(data))
+            super().__init__(data)
+
+    monkeypatch.setattr(minipdf, "PdfDocument", CountingPdfDocument)
+
+    class Counter:
+        def __init__(self):
+            self.updates = []
+
+        def add(self, value):
+            self.updates.append(value)
+
+    def run(payload, shard=None, shards=3, counter=None):
+        batch = pd.DataFrame({"url": ["https://big.example/doc"],
+                              "warc_ts": [None], "html": [payload]})
+        if shard is not None:
+            batch["shard"] = shard
+            batch["shards"] = shards
+        outs = list(_extract_pages_fused_batches(iter([batch]), counter=counter))
+        if not outs:
+            return pd.DataFrame(columns=UNSHARDED)
+        out = pd.concat(outs, ignore_index=True)[UNSHARDED]
+        return out.sort_values("page_index", ignore_index=True)
+
+    payload = build_pdf([[f"PAGE_{p}_MARK"] for p in range(10)])
+    whole = run(payload)
+    assert len(whole) == 10
+    built.clear()
+    parts = [run(payload, shard) for shard in range(3)]
+    assert built == [len(payload)] * 3  # one parse per shard, not per page
+    assert [list(p["page_index"]) for p in parts] == [
+        [0, 3, 6, 9], [1, 4, 7], [2, 5, 8]]
+    union = pd.concat(parts).sort_values("page_index", ignore_index=True)
+    pd.testing.assert_frame_equal(union, whole)
+
+    garbage = pd.concat([run(b"%PDF-garbage", shard) for shard in range(3)])
+    assert len(garbage) == 1
+    assert garbage["status"].iloc[0] == "failed"
+    # a row that is no PDF at all (inconsistent is_pdf metadata) still
+    # comes out once
+    html = pd.concat([run(b"<p>not a pdf</p>", shard) for shard in range(3)])
+    assert list(html["kind"]) == ["html"]
+
+    counter = Counter()
+    two_pages = build_pdf([["page one"], ["page two"]])
+    assert run(two_pages, shard=2, counter=counter).empty
+    assert counter.updates == []
+    assert len(run(two_pages, shard=1, counter=counter)) == 1
+    assert len(counter.updates) == 1
 
 
 def test_auto_routing_diverts_giant_pdf(spark):
-    """extract_pages_auto routes a giant PDF to the staged explode path
-    (its pages spread across many tasks — skew balance, not just
-    equality) while small payloads keep the fused plan."""
+    """extract_pages_auto shards a giant PDF over the cores (its pages
+    spread across several tasks, at most one per core — skew balance,
+    not just equality) while small payloads keep the fused plan."""
     from ocr_agent_spark.operators.extract import (
         extract_pages_auto,
         extract_pages_fused,
@@ -56,15 +128,22 @@ def test_auto_routing_diverts_giant_pdf(spark):
     assert key(rows) == key(fused_rows)  # identical output either way
     assert routed.columns == extract_pages_fused(df).columns  # same schema
 
-    # skew balance: the giant PDF's 300 pages must NOT sit in one task
+    # skew balance: the giant PDF's 300 pages must NOT sit in one task,
+    # and its branch runs one shard per core at most
+    cores = spark.sparkContext.defaultParallelism
     giant_parts = {
         r["partition_id"] for r in rows if r["url"] == "https://big.example/doc"
     }
-    assert len(giant_parts) > 1, giant_parts
-    # the small payloads kept the fused plan's partitioning (one scan
-    # partition here), i.e. they were not dragged through the staged path
+    assert 1 < len(giant_parts) <= cores, giant_parts
+    from plan_inspect import executed_plan_str
+
+    spreads = re.findall(r"hashpartitioning\(url#\d+, shard#\d+, (\d+)\)",
+                         executed_plan_str(routed))
+    assert spreads and set(spreads) == {str(cores)}
+    # the small payloads kept the fused plan (not sharded)
     small_rows = [r for r in rows if r["url"] != "https://big.example/doc"]
     assert len(small_rows) == 3
+    assert all(r["partition_id"] not in giant_parts for r in small_rows)
 
     # no giants -> plan IS the fused plan (zero shuffles)
     from plan_inspect import count_exchanges

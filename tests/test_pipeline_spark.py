@@ -77,15 +77,6 @@ def _assert_dense_order(rows):
     )
 
 
-def test_order_key_contract_staged(spark, corpus):
-    # Staged queue path: order_key is a dense 1..N sequence following
-    # (url, page_index) — the AUTOINCREMENT task_id analogue (W1/D1).
-    from ocr_agent_spark.operators.ingest import build_task_table
-
-    rows = build_task_table(corpus).select("order_key", "url", "page_index").collect()
-    _assert_dense_order(rows)
-
-
 def test_order_key_derivable_from_committed(spark, completed_root):
     from ocr_agent_spark.pipeline import attach_order_key
 
@@ -143,9 +134,9 @@ def test_lineage_equals_data_fused(spark, completed_root):
     _assert_lineage_equals_data(spark, completed_root, "r1")
 
 
-def test_lineage_equals_data_staged_giant_pdf(spark, tmp_path):
-    """A run whose giant PDF takes the staged explode+shuffle path is
-    counted by both extraction kernels (fused and staged tasks)."""
+def test_lineage_equals_data_sharded_giant_pdf(spark, tmp_path):
+    """A run whose giant PDF is sharded over the cores is counted by the
+    tasks of both branches (fused scan splits and giant-PDF shards)."""
     from ocr_agent_spark.kernel.minipdf import build_pdf
     from ocr_agent_spark.operators.extract import extract_pages_auto
     from ocr_agent_spark.pipeline import commit_run, extraction_store
@@ -166,7 +157,7 @@ def test_lineage_equals_data_staged_giant_pdf(spark, tmp_path):
     ext = read_extracted(spark, root)
     giant_parts = {r["partition_id"] for r in
                    ext.filter(F.col("url") == "https://big.example/doc").collect()}
-    assert len(giant_parts) > 1  # the staged shuffle spread its pages
+    assert len(giant_parts) > 1  # the shards spread its pages
     _assert_lineage_equals_data(spark, root, "g")
 
 
@@ -491,14 +482,14 @@ def test_salted_host_counts_equals_direct(spark, corpus):
 
 
 def test_extraction_plan_is_vectorized(spark, corpus):
-    """BASELINE 'no per-row Python': plan shows only Arrow-vectorized
-    Python operators (MapInPandas / ArrowEvalPython), never BatchEvalPython."""
-    from ocr_agent_spark.operators.extract import extract_tasks
-    from ocr_agent_spark.operators.ingest import build_task_table
+    """BASELINE 'no per-row Python': with every PDF sharded as a giant,
+    both branches of the plan are Arrow-vectorized MapInPandas, never
+    BatchEvalPython."""
+    from ocr_agent_spark.operators.extract import extract_pages_auto
 
-    plan = extract_tasks(build_task_table(corpus))._jdf.queryExecution().executedPlan().toString()
+    plan = extract_pages_auto(corpus, giant_bytes=1)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert plan.count("MapInPandas") == 2
 
 
 def test_fused_plan_single_pass_no_shuffle(spark, corpus):
@@ -513,17 +504,21 @@ def test_fused_plan_single_pass_no_shuffle(spark, corpus):
 
 
 def test_fused_equals_staged(spark, corpus):
-    """Fused single-pass output == staged queue-path output, row for row."""
-    from ocr_agent_spark.operators.extract import extract_pages_fused, extract_tasks
-    from ocr_agent_spark.operators.ingest import build_task_table
+    """Fused single-pass output == the sharded giant-PDF branch's output
+    (every PDF forced through it), row for row."""
+    from ocr_agent_spark.operators.extract import (
+        extract_pages_auto,
+        extract_pages_fused,
+    )
 
-    fused = {
-        (r["url"], r["page_index"]): (r["kind"], r["total_pages"], r["text"], r["status"])
-        for r in extract_pages_fused(corpus).collect()
-    }
-    staged = {
-        (r["url"], r["page_index"]): (r["kind"], r["total_pages"], r["text"], r["status"])
-        for r in extract_tasks(build_task_table(corpus), repartition=False).collect()
-    }
-    # staged html rows carry total_pages NULL; fused ditto — comparable.
-    assert fused == staged
+    def rows(df):
+        got = [
+            ((r["url"], r["page_index"]),
+             (r["kind"], r["total_pages"], r["text"], r["status"], r["doc_bytes"]))
+            for r in df.collect()
+        ]
+        assert len(got) == len(dict(got))  # no (url, page_index) twice
+        return dict(got)
+
+    assert rows(extract_pages_fused(corpus)) == rows(
+        extract_pages_auto(corpus, giant_bytes=1))
