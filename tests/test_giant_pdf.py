@@ -4,8 +4,9 @@ import re
 
 from ocr_agent_spark.kernel.minipdf import build_pdf
 
-UNSHARDED = ["kind", "url", "page_index", "total_pages", "created_ts", "text",
-             "status", "error", "doc_bytes"]
+# every output column but the per-task lineage ones
+DATA_COLUMNS = ["kind", "url", "page_index", "total_pages", "created_ts", "text",
+                "status", "error", "doc_bytes"]
 
 
 def test_300_page_pdf_both_paths(spark):
@@ -31,8 +32,8 @@ def test_300_page_pdf_both_paths(spark):
     assert "PAGE_0_MARK" in by_page[0] and "PAGE_299_MARK" in by_page[299]
 
     sharded = extract_pages_auto(df, giant_bytes=len(payload) // 2).collect()
-    assert sorted(tuple(r[c] for c in UNSHARDED) for r in sharded) == sorted(
-        tuple(r[c] for c in UNSHARDED) for r in fused
+    assert sorted(tuple(r[c] for c in DATA_COLUMNS) for r in sharded) == sorted(
+        tuple(r[c] for c in DATA_COLUMNS) for r in fused
     )
 
 
@@ -68,8 +69,8 @@ def test_sharded_fused_batches(monkeypatch):
             batch["shards"] = shards
         outs = list(_extract_pages_fused_batches(iter([batch]), counter=counter))
         if not outs:
-            return pd.DataFrame(columns=UNSHARDED)
-        out = pd.concat(outs, ignore_index=True)[UNSHARDED]
+            return pd.DataFrame(columns=DATA_COLUMNS)
+        out = pd.concat(outs, ignore_index=True)[DATA_COLUMNS]
         return out.sort_values("page_index", ignore_index=True)
 
     payload = build_pdf([[f"PAGE_{p}_MARK"] for p in range(10)])
