@@ -3,7 +3,7 @@
 A brand-new engine with the query/data-processing capabilities of the
 reference ``takuto-NA/ocr-agent`` (a single-process OCR queue app),
 re-expressed Spark-first: an ordered document queue becomes a parquet
-table with a persisted ``order_key``; the per-row OCR black box becomes
+table keyed by ``(url, page_index)``; the per-row OCR black box becomes
 an Arrow-vectorized extraction kernel (HTML boilerplate removal +
 mini-PDF layout reconstruction) running inside ``mapInPandas``; the
 SQLite status machine becomes snapshot-manifest commits with anti-join

@@ -3,8 +3,9 @@
 Reproduces the reference's merge semantics
 (/root/reference/src/ocr_agent/markdown_merge.py:18-47):
 
-- rows rendered strictly in ``order_key`` order (order is *data*, never
-  execution order — design rule D1);
+- rows rendered strictly in ``(url, page_index)`` order, the order the
+  Spark merge sorts by (order is *data*, never execution order — design
+  rule D1);
 - rows with NULL or whitespace-only text are silently skipped (failed
   rows stay in the table but never reach the artifact — D2);
 - per-row section: ``## <url>`` (+ `` (page N/M)`` for pdf pages,

@@ -11,9 +11,10 @@ split of the pages table, sized by Spark's bytes-per-core rule (see
 ``session``): no shuffle, and host-level skew cannot concentrate because
 nothing is keyed by host. Only giant PDFs are shuffled
 (``extract_pages_auto``): each is copied to one shard per core and
-hash-partitioned by (url, shard), and each shard parses the document
-once and renders every ``shards``-th page, so one giant PDF's pages
-spread across the cluster.
+range-partitioned on the shard number, so shard s of every document
+lands on partition s, and each shard parses the document once and
+renders every ``shards``-th page, so one giant PDF's pages spread over
+every core.
 
 Failure contract (design rule D2, cli.py:239-243): a document that
 fails to parse becomes a row with ``status='failed'`` and
@@ -282,11 +283,14 @@ def extract_pages_auto(pages: DataFrame,
     task while its siblings finish. So the corpus is SPLIT by a
     pure-JVM predicate — PDF magic AND payload ≥ ``giant_bytes`` — and
     only the giant slice is spread: each giant row is copied to
-    K = ``defaultParallelism`` shards, hash-partitioned by (url, shard)
-    into K partitions, and the same fused kernel renders the pages
+    K = ``defaultParallelism`` shards, range-partitioned on ``shard``
+    into K partitions so that partition s holds shard s of every
+    document (a hash of (url, shard) lets shards collide and idles
+    cores), and the same fused kernel renders the pages
     ``p % K == shard`` from one parse per shard. The spread follows the
-    cluster's size, not ``spark.sql.shuffle.partitions``. Everything
-    else keeps the zero-shuffle fused plan.
+    cluster's size, not ``spark.sql.shuffle.partitions``; the range
+    bounds cost one JVM-only sampling job over the giant slice.
+    Everything else keeps the zero-shuffle fused plan.
 
     The byte threshold is deliberately a scan-time expression (no probe
     UDF pass over the whole corpus): page count correlates with payload
@@ -319,7 +323,7 @@ def extract_pages_auto(pages: DataFrame,
         "url", "warc_ts", "html",
         F.explode(F.sequence(F.lit(0), F.lit(shards - 1))).alias("shard"),
         F.lit(shards).alias("shards"),
-    ).repartition(shards, "url", "shard")
+    ).repartitionByRange(shards, "shard")
     giant_out = spread.mapInPandas(
         partial(_extract_pages_fused_batches, counter=counter),
         schema=FUSED_SCHEMA,

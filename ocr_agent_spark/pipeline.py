@@ -40,7 +40,6 @@ from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_agent_spark.cache import cache_scope
 from ocr_agent_spark.operators.extract import (
     extract_pages_auto,
     giant_pdf_predicate,
@@ -120,22 +119,6 @@ def commit_run(
 
 
 def run_extraction_job(
-    spark: SparkSession,
-    pages: DataFrame,
-    output_root: str,
-    run_id: str | None = None,
-    settings: dict | None = None,
-) -> RunResult:
-    # cache_scope: release only the intermediates THIS job persisted —
-    # a caller's own tracked caches (e.g. an unmaterialized dedup
-    # result) survive the job (ADVICE r2).
-    with cache_scope():
-        return _run_extraction_job(
-            spark, pages, output_root, run_id, settings
-        )
-
-
-def _run_extraction_job(
     spark: SparkSession,
     pages: DataFrame,
     output_root: str,

@@ -2,206 +2,83 @@
 
 The reference polls an inbox every second and claims ready bundles with
 filesystem markers (/root/reference/gui/src-tauri/src/watch_folder.rs:
-135-241). Structured Streaming replaces every part of that machinery:
+135-241). Structured Streaming replaces that machinery, and every
+stream drains through one loop, ``_drain_into_store``, into the job's
+snapshot table:
 
 - poll loop (ST1)        → micro-batch trigger; ``Trigger.AvailableNow``
                             drains the backlog then stops (batch-friendly)
 - ``.ready`` marker (ST2) → the file source only sees fully-written
                             files (atomic rename is the writer contract)
-- ``.processing`` lock (ST3) → checkpointed source offsets: a file is
-                            consumed exactly once across restarts
-- ``.processed``/``.failed`` markers (ST4) → status/error columns in the
-                            output rows (failure rows, never aborts)
+- ``.processing`` lock (ST3) → checkpointed source offsets, and a run_id
+                            derived from the batch id: a replayed batch
+                            already in the manifest is skipped, a run dir
+                            stranded between write and publish is rewritten
+- ``.processed``/``.failed`` markers (ST4) → the batch's rows (status/error
+                            columns, failure rows never abort) and lineage,
+                            published together by ``pipeline.commit_run``
 
-The transformation is the SAME vectorized extraction as the batch path
-(one code path, two drivers) — mapInPandas works unchanged on a
-streaming DataFrame.
+The transformation is the SAME fused extraction as the batch job, so
+streamed and batch output share one table, one resume contract and one
+merge/status surface.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ocr_agent_spark.fixtures import PAGES_ARROW_SCHEMA_DDL
 from ocr_agent_spark.operators.extract import extract_pages_fused
+from ocr_agent_spark.pipeline import commit_run, extraction_store
 
 
-def _count_output_rows(spark: SparkSession, output_dir: str) -> int:
-    if not os.path.exists(output_dir):
-        return 0
-    try:
-        return spark.read.parquet(output_dir).count()
-    except Exception:
-        return 0  # directory exists but holds no committed files yet
-
-
-def _sink_committed_paths(output_dir: str) -> set[str] | None:
-    """Files committed by the parquet streaming sink, from its
-    ``_spark_metadata`` manifest log (tiny JSON files — O(#batches) to
-    read, never touches the data). None if no log exists yet."""
-    import json
-
-    meta = os.path.join(output_dir, "_spark_metadata")
-    if not os.path.isdir(meta):
-        return None
-    paths: set[str] = set()
-    for name in os.listdir(meta):
-        base = name[:-8] if name.endswith(".compact") else name
-        if not base.isdigit():
-            continue
-        try:
-            with open(os.path.join(meta, name)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line or line.startswith("v"):
-                        continue
-                    entry = json.loads(line)
-                    if entry.get("action", "add") == "add" and "path" in entry:
-                        paths.add(entry["path"])
-        except (OSError, ValueError):
-            return None  # malformed log → let the caller fall back
-    return paths
-
-
-def _rows_in_files(uris: set[str]) -> int | None:
-    """Row counts from parquet footers only (no data pages read).
-
-    Returns None when any footer is unreadable — e.g. the sink lives on
-    a filesystem this process can't open directly — so the caller falls
-    back to the pre/post full-count delta instead of crashing after a
-    successful drain (ADVICE r2). Remote schemes are opened through
-    ``pyarrow.fs.FileSystem.from_uri``; bare paths stay local.
-    """
-    import pyarrow.parquet as pq
-
-    total = 0
-    for uri in uris:
-        try:
-            if "://" in uri:
-                from pyarrow import fs as pafs
-
-                filesystem, path = pafs.FileSystem.from_uri(uri)
-                with filesystem.open_input_file(path) as f:
-                    total += pq.ParquetFile(f).metadata.num_rows
-            else:
-                total += pq.ParquetFile(uri).metadata.num_rows
-        except Exception:
-            return None
-    return total
-
-
-def _pre_drain_rowcount(spark: SparkSession, before_paths: set[str],
-                        before_count: int | None) -> int:
-    """Pre-drain row total when footers weren't readable in-process.
-
-    Reads the pre-drain file list through Spark (which has the remote
-    filesystem connectors). Files may ALSO be unreadable because they
-    no longer exist — compaction mid-drain is one of the stated causes
-    of the footer fallback — so a failed Spark read falls back to the
-    pre-paid ``before_count`` instead of throwing after an otherwise
-    successful drain (ADVICE r3). Raises only when there is genuinely
-    no pre-drain evidence left.
-    """
-    try:
-        return (
-            spark.read.parquet(*sorted(before_paths)).count()
-            if before_paths else 0
-        )
-    except Exception:
-        if before_count is None:
-            raise
-        return before_count
-
-
-def run_streaming_extraction(
+def _drain_into_store(
     spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
+    source: DataFrame,
+    output_root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> int:
-    """Drain all unprocessed page files from ``input_dir`` → extracted
-    parquet under ``output_dir``; returns rows written BY THIS drain
-    (a re-drain with no new files returns 0).
+    run_prefix: str,
+    to_pages: Callable[[DataFrame], DataFrame | None],
+) -> list[str]:
+    """Drain ``source`` (AvailableNow) into ``output_root``'s snapshot
+    table; returns the run_ids this drain committed (``[]`` on a no-op).
 
-    Drain accounting reads the sink's ``_spark_metadata`` commit log
-    and the NEW files' parquet footers only — O(rows written this
-    drain), not O(total historical output), so a long-lived watcher's
-    bookkeeping stays flat as the output grows. (Falls back to a full
-    pre/post count only if the sink log is unreadable.)
-
-    Exactly-once per input file via the checkpoint; re-running after new
-    files arrive processes only the new files (the streaming twin of the
-    batch snapshot resume).
-
-    The transformation is the SAME fused kernel as the batch hot path
-    (probe + pdf page fan-out + extract inside one mapInPandas batch),
-    so a multi-page PDF arriving on the stream yields ALL its pages —
-    identical rows to a batch run over the same payload.
-
-    Note: the streaming path assigns no global ``order_key`` (a global
-    sort is meaningless on an unbounded source). Order remains data —
-    (url, page_index) — and the merge job sorts when the artifact is
-    built, exactly like the batch path.
+    Each micro-batch becomes run ``<run_prefix><batch_id:08d>``: its
+    pages (``to_pages(batch)``; ``None`` commits nothing) are extracted
+    and committed, data and lineage in one manifest publish. Source
+    offsets live in ``checkpoint_dir``; after a failure ``foreachBatch``
+    re-delivers the same ``batch_id``, so a run_id already in the
+    manifest is skipped and a run dir left by a crash before its
+    publish is discarded and rewritten.
     """
-    before_paths = _sink_committed_paths(output_dir)
-    before_count = None
-    if before_paths is None and os.path.exists(output_dir):
-        before_count = _count_output_rows(spark, output_dir)
-    elif before_paths:
-        # Pre-pay the fallback: if the sink log becomes unreadable
-        # DURING the drain (compaction, new format), the post-drain path
-        # below needs the pre-drain row count — footers are cheap now,
-        # and without this the final branch would report the TOTAL
-        # historical output as this drain's delta (code-review r3).
-        before_count = _rows_in_files(before_paths)
+    store = extraction_store(output_root)
+    committed: list[str] = []
 
-    reader = (
-        spark.readStream.schema(PAGES_ARROW_SCHEMA_DDL)
-        .format("parquet")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.load(input_dir)
+    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+        run_id = f"{run_prefix}{batch_id:08d}"
+        manifest = store.latest_manifest()
+        if manifest is not None and run_id in manifest["runs"]:
+            return
+        pages = to_pages(batch)
+        if pages is None:
+            return
+        shutil.rmtree(os.path.join(store.data_dir, run_id), ignore_errors=True)
+        commit_run(spark, store, run_id,
+                   lambda counter: extract_pages_fused(pages, counter=counter))
+        committed.append(run_id)
 
-    query = (
-        extract_pages_fused(pages).writeStream.format("parquet")
-        .option("path", output_dir)
+    (
+        source.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    query.awaitTermination()
-
-    after_paths = _sink_committed_paths(output_dir)
-    if after_paths is not None and before_paths is not None:
-        delta = _rows_in_files(after_paths - before_paths)
-        if delta is not None:
-            return delta
-        # Footers unreadable from this process (e.g. remote sink fs):
-        # recover via Spark, which does have the filesystem connectors.
-        pre = _pre_drain_rowcount(spark, before_paths, before_count)
-        return _count_output_rows(spark, output_dir) - pre
-    return _count_output_rows(spark, output_dir) - (before_count or 0)
-
-
-def _claim_replay(store, run_id: str) -> bool:
-    """Idempotent ``foreachBatch`` guard for a stream committing into
-    ``store``: False if ``run_id`` (derived from the batch id) is
-    already published — a replayed batch, skip it; otherwise clear a
-    run dir left by a crash before its publish and return True."""
-    import shutil
-
-    manifest = store.latest_manifest()
-    if manifest is not None and run_id in manifest["runs"]:
-        return False
-    run_dir = os.path.join(store.data_dir, run_id)
-    if os.path.exists(run_dir):
-        shutil.rmtree(run_dir)  # crash between write and publish
-    return True
+    return committed
 
 
 def run_streaming_extraction_committed(
@@ -209,56 +86,20 @@ def run_streaming_extraction_committed(
     input_dir: str,
     output_root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> list[str]:
-    """Streaming drain whose sink is the SNAPSHOT STORE: each micro-batch
-    is extracted and committed through ``pipeline.commit_run`` — data
-    and per-partition lineage in one atomic manifest publish — the
-    streaming twin of ``pipeline.run_extraction_job``, so streamed and
-    batch output share one table, one resume contract, one merge/status
-    surface (ST1–ST4 unified with S14).
+    """Drain every unprocessed pages parquet file in ``input_dir`` into
+    ``output_root``'s snapshot table — the streaming twin of
+    ``pipeline.run_extraction_job``; returns the run_ids committed.
 
-    Exactly-once: source offsets live in the streaming checkpoint;
-    after a failure ``foreachBatch`` re-delivers the same ``batch_id``,
-    and the run_id derives from it — a replayed batch whose run_id is
-    already in the manifest is skipped, and a data directory left by a
-    crash BETWEEN write and manifest publish is discarded and rewritten
-    (the standard idempotent-foreachBatch recipe).
-
-    Maintenance: every micro-batch publishes its own run dir, so a
-    long-lived watcher accumulates files; fold them periodically with
-    ``SnapshotStore.compact`` + ``expire_snapshots`` (CLI:
-    ``python -m ocr_agent_spark compact``) — resume and merge semantics
-    are layout-independent (tested).
-
-    Returns the run_ids committed by this drain (empty on a no-op).
+    A multi-page PDF on the stream yields all its pages, the same rows
+    as a batch run over the same payload. Every micro-batch publishes
+    its own run dir, so a long-lived watcher accumulates files; fold
+    them with ``SnapshotStore.compact`` + ``expire_snapshots`` (CLI:
+    ``python -m ocr_agent_spark compact``).
     """
-    from ocr_agent_spark.pipeline import commit_run, extraction_store
-
-    store = extraction_store(output_root)
-    committed_now: list[str] = []
-
-    reader = (
+    pages = (
         spark.readStream.schema(PAGES_ARROW_SCHEMA_DDL)
-        .format("parquet")
+        .format("parquet").load(input_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.load(input_dir)
-
-    def commit_batch(batch_pages, batch_id: int) -> None:
-        run_id = f"stream{batch_id:08d}"
-        if not _claim_replay(store, run_id):
-            return
-        commit_run(spark, store, run_id,
-                   lambda counter: extract_pages_fused(batch_pages, counter=counter))
-        committed_now.append(run_id)
-
-    query = (
-        pages.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return committed_now
+    return _drain_into_store(spark, pages, output_root, checkpoint_dir,
+                             "stream", lambda batch: batch)

@@ -1500,29 +1500,6 @@ def test_gif_bomb_bound_admits_max_lzw_ratio_and_bmp_core_header_unsupported():
         im.decode_bmp_luminance(core_bmp)
 
 
-def test_pre_drain_rowcount_falls_back_when_files_vanished(spark, tmp_path):
-    """ADVICE r4: the streaming remote-footer fallback re-reads the
-    pre-drain file list via Spark; if those files were removed
-    (compaction mid-drain), it must fall back to the pre-paid count
-    instead of throwing after a successful drain."""
-    import pytest as _pytest
-
-    from ocr_agent_spark.streaming.ingest import _pre_drain_rowcount
-
-    gone = {str(tmp_path / "vanished" / "part-0.parquet")}
-    assert _pre_drain_rowcount(spark, gone, before_count=7) == 7
-    with _pytest.raises(Exception):
-        _pre_drain_rowcount(spark, gone, before_count=None)
-    # readable paths still count exactly (no premature fallback)
-    live_dir = str(tmp_path / "live")
-    spark.range(5).coalesce(1).write.parquet(live_dir)
-    import glob as _glob
-
-    live = set(_glob.glob(live_dir + "/part-*.parquet"))
-    assert _pre_drain_rowcount(spark, live, before_count=999) == 5
-    assert _pre_drain_rowcount(spark, set(), before_count=None) == 0
-
-
 def test_gif_lzw_differential_with_real_compressor():
     """_gif_lzw_decode against an independent table-growing LZW
     compressor (dictionary growth, width increases, KwKwK sequences,

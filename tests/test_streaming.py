@@ -4,9 +4,10 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from ocr_agent_spark.fixtures import generate_pages
-from ocr_agent_spark.streaming import run_streaming_extraction
+from ocr_agent_spark.streaming import run_streaming_extraction_committed
 
 
 def _write_batch(path: str, records) -> None:
@@ -33,26 +34,35 @@ def _write_batch(path: str, records) -> None:
     pq.write_table(table, path)
 
 
+def _drained_rows(spark, root, run_ids) -> int:
+    """Rows a drain committed: its runs' lineage ``doc_count`` sum."""
+    from ocr_agent_spark.pipeline import read_lineage
+
+    lineage = read_lineage(spark, root).collect()
+    return sum(r["doc_count"] for r in lineage if r["run_id"] in run_ids)
+
+
 def test_streaming_drain_and_resume(spark, tmp_path):
+    from ocr_agent_spark.pipeline import read_extracted
+
     inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
+    root = str(tmp_path / "job")
     ckpt = str(tmp_path / "ckpt")
     records = [r for r in generate_pages(40) if r.html[:4] != b"%PDF"]
 
     _write_batch(f"{inbox}/batch-0.parquet", records[:25])
-    n1 = run_streaming_extraction(spark, inbox, out, ckpt)
-    assert n1 == 25
+    runs1 = run_streaming_extraction_committed(spark, inbox, root, ckpt)
+    assert _drained_rows(spark, root, runs1) == 25
 
-    # second drain with no new files: nothing reprocessed (per-drain delta)
-    n2 = run_streaming_extraction(spark, inbox, out, ckpt)
-    assert n2 == 0
+    # second drain with no new files: nothing reprocessed
+    assert run_streaming_extraction_committed(spark, inbox, root, ckpt) == []
 
     # new file arrives → only it is processed (checkpoint resume, ST3)
     _write_batch(f"{inbox}/batch-1.parquet", records[25:])
-    n3 = run_streaming_extraction(spark, inbox, out, ckpt)
-    assert n3 == len(records) - 25
+    runs3 = run_streaming_extraction_committed(spark, inbox, root, ckpt)
+    assert _drained_rows(spark, root, runs3) == len(records) - 25
 
-    ext = spark.read.parquet(out)
+    ext = read_extracted(spark, root)
     assert ext.count() == ext.select("url").distinct().count()  # exactly-once
     assert ext.filter("status = 'completed'").count() == len(records)
 
@@ -65,23 +75,25 @@ def test_streaming_drain_and_resume(spark, tmp_path):
 
 
 def test_streaming_multipage_pdf_fans_out_all_pages(spark, tmp_path):
-    """ADVICE r01 (medium): a multi-page PDF arriving on the stream must
-    yield one row per page — identical to the batch path — not a single
-    page-0 row with the rest silently dropped."""
+    """A multi-page PDF arriving on the stream must yield one row per
+    page — identical to the batch path — not a single page-0 row with
+    the rest silently dropped."""
+    from ocr_agent_spark.pipeline import read_extracted
+
     inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
+    root = str(tmp_path / "job")
     ckpt = str(tmp_path / "ckpt")
 
     pdf_records = [r for r in generate_pages(60) if r.html[:4] == b"%PDF"]
     assert pdf_records
     _write_batch(f"{inbox}/pdfs.parquet", pdf_records)
-    n = run_streaming_extraction(spark, inbox, out, ckpt)
+    runs = run_streaming_extraction_committed(spark, inbox, root, ckpt)
 
     from ocr_agent_spark.kernel.minipdf import pdf_page_count
 
     expected_pages = sum(pdf_page_count(r.html) for r in pdf_records)
-    assert n == expected_pages
-    ext = spark.read.parquet(out)
+    assert _drained_rows(spark, root, runs) == expected_pages
+    ext = read_extracted(spark, root)
     assert ext.count() == expected_pages
     multi = [r for r in pdf_records if pdf_page_count(r.html) > 1]
     assert multi, "fixture must contain at least one multi-page PDF"
@@ -115,9 +127,6 @@ def test_streaming_snapshot_committed_sink(spark, tmp_path):
         read_extracted,
         read_lineage,
         run_extraction_job,
-    )
-    from ocr_agent_spark.streaming.ingest import (
-        run_streaming_extraction_committed,
     )
 
     inbox = str(tmp_path / "inbox")
@@ -171,9 +180,6 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
         read_extracted,
         read_lineage,
     )
-    from ocr_agent_spark.streaming.ingest import (
-        run_streaming_extraction_committed,
-    )
 
     inbox = str(tmp_path / "inbox")
     root = str(tmp_path / "job")
@@ -196,3 +202,34 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
         docs[r["run_id"]] = docs.get(r["run_id"], 0) + r["doc_count"]
     assert set(docs) == set(extraction_store(root).latest_manifest()["runs"])
     assert sum(docs.values()) == ext.count()
+
+
+def test_drain_rewrites_a_run_stranded_before_publish(spark, tmp_path, monkeypatch):
+    """A crash between a micro-batch's write and its manifest publish
+    leaves a run dir no manifest lists. The checkpoint re-delivers the
+    batch, and the drain discards that dir and commits the run once."""
+    from ocr_agent_spark.pipeline import extraction_store, read_extracted
+    from ocr_agent_spark.sources.snapshot import SnapshotStore
+
+    inbox = str(tmp_path / "inbox")
+    root = str(tmp_path / "job")
+    ckpt = str(tmp_path / "ckpt")
+    _write_batch(f"{inbox}/b0.parquet", generate_pages(12))
+
+    def crash(self, manifest, seq):
+        raise RuntimeError("killed before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_publish", crash)
+        with pytest.raises(Exception, match="killed before publish"):
+            run_streaming_extraction_committed(spark, inbox, root, ckpt)
+    store = extraction_store(root)
+    assert store.latest_manifest() is None
+    assert os.path.isdir(os.path.join(store.data_dir, "stream00000000"))
+
+    runs = run_streaming_extraction_committed(spark, inbox, root, ckpt)
+    assert runs == ["stream00000000"]
+    assert store.latest_manifest()["runs"] == ["stream00000000"]
+    ext = read_extracted(spark, root)
+    assert ext.count() == ext.select("url", "page_index").distinct().count()
+    assert _drained_rows(spark, root, runs) == ext.count()
