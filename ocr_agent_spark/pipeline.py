@@ -153,22 +153,30 @@ def _run_stats(pages: DataFrame, committed: DataFrame | None) -> DataFrame:
     whose url is not committed yet, and ``giant`` — whether any pending
     row is a giant PDF (the router's probe, folded into the count).
 
-    On a resumed root ``pages`` is left-joined to the distinct committed
-    urls with a flag. When the input carries ingest-time routing
-    metadata (``with_doc_meta``: doc_bytes, is_pdf — the fixture corpus
-    and any production ingest persist them), the aggregate prunes to
-    slim fixed-width columns and never touches the payload
-    (plan-asserted in tests/test_plans.py); only a raw 5-column
+    On a resumed root each input row is pending unless its url is IN
+    the committed urls; Catalyst plans the IN subquery as an
+    ``ExistenceJoin``, which emits each input row once however many
+    committed rows share its url (a multi-page PDF), so the committed
+    side needs no ``distinct()`` aggregate and shuffle. A NULL url
+    matches nothing and stays pending (the ``coalesce``: SQL's IN is
+    NULL there). The subquery is uncorrelated on purpose: Spark 4.1
+    fails to optimize a correlated EXISTS in a projection over a union
+    input (``PushProjectionThroughUnion``: key not found), and the CLI
+    unions its WARC and parquet inputs. When the input carries
+    ingest-time routing metadata (``with_doc_meta``: doc_bytes, is_pdf —
+    the fixture corpus and any production ingest persist them), the
+    aggregate prunes to slim fixed-width columns and never touches the
+    payload (plan-asserted in tests/test_plans.py); only a raw 5-column
     input-hint-shaped table pays one payload scan here.
     """
     giant = giant_pdf_predicate(use_meta=has_doc_meta(pages))
     if committed is None:
         pending = F.lit(True)
     else:
-        done = committed.select(*RESUME_KEYS).distinct().withColumn(
-            "_committed", F.lit(True))
-        pages = pages.join(done, RESUME_KEYS, "left")
-        pending = F.col("_committed").isNull()
+        (key,) = RESUME_KEYS
+        pages = pages.withColumn("_pending", ~F.coalesce(
+            F.col(key).isin(committed.select(key)), F.lit(False)))
+        pending = F.col("_pending")
     return pages.agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(pending.cast("long")).alias("n_pending"),

@@ -377,15 +377,19 @@ class SnapshotStore:
     def anti_join_committed(
         self, tasks: DataFrame, keys: list[str], spark: SparkSession
     ) -> DataFrame:
-        """Rows of ``tasks`` not yet in any committed snapshot (resume, J2).
+        """Rows of ``tasks`` whose ``keys`` match no row of the latest
+        snapshot (resume, J2).
 
-        ``keys`` must be content-derived (url, page_index) — never file
-        paths or execution-order ids — so resume is correct across
-        repartitioning. The committed side is projected to the join keys
-        only (column pruning keeps the fat ``text`` column out of the
-        shuffle/broadcast).
+        ``keys`` must be content-derived — never file paths or
+        execution-order ids — so resume is correct across repartitioning;
+        the extraction job passes ``["url"]``, since a document's pages
+        are committed together. The committed side is projected to the
+        join keys only (column pruning keeps the fat ``text`` column out
+        of the shuffle/broadcast) and is not de-duplicated: a left-anti
+        join's result does not depend on duplicate keys on its right, so
+        a url with many committed pages costs no aggregate or shuffle.
         """
         committed = self.read(spark)
         if committed is None:
             return tasks
-        return tasks.join(committed.select(*keys).distinct(), on=keys, how="left_anti")
+        return tasks.join(committed.select(*keys), on=keys, how="left_anti")

@@ -12,7 +12,8 @@ snapshot table:
                             files (atomic rename is the writer contract)
 - ``.processing`` lock (ST3) → checkpointed source offsets, and a run_id
                             derived from the batch id: a replayed batch
-                            already in the manifest is skipped, a run dir
+                            already committed (live in the manifest, or
+                            folded by a compaction) is skipped, a run dir
                             stranded between write and publish is rewritten
 - ``.processed``/``.failed`` markers (ST4) → the batch's rows (status/error
                             columns, failure rows never abort) and lineage,
@@ -50,10 +51,13 @@ def _drain_into_store(
     Each micro-batch becomes run ``<run_prefix><batch_id:08d>``: its
     pages (``to_pages(batch)``; ``None`` commits nothing) are extracted
     and committed, data and lineage in one manifest publish. Source
-    offsets live in ``checkpoint_dir``; after a failure ``foreachBatch``
-    re-delivers the same ``batch_id``, so a run_id already in the
-    manifest is skipped and a run dir left by a crash before its
-    publish is discarded and rewritten.
+    offsets live in ``checkpoint_dir``; after a failure, or with a fresh
+    checkpoint, ``foreachBatch`` re-delivers the same ``batch_id``.
+    Replay rule: a run_id that is live in the latest manifest, or that
+    a compaction folded (``SnapshotStore.compact`` keeps each folded
+    run's lineage rows under its run_id), is already committed and is
+    skipped; any other run dir of that name was left by a crash before
+    its publish, so it is discarded and the batch rewritten.
     """
     store = extraction_store(output_root)
     committed: list[str] = []
@@ -61,7 +65,10 @@ def _drain_into_store(
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
         run_id = f"{run_prefix}{batch_id:08d}"
         manifest = store.latest_manifest()
-        if manifest is not None and run_id in manifest["runs"]:
+        if manifest is not None and (
+            run_id in manifest["runs"]
+            or any(r["run_id"] == run_id for r in store.lineage())
+        ):
             return
         pages = to_pages(batch)
         if pages is None:

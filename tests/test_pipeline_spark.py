@@ -408,6 +408,39 @@ def test_resume_processes_only_remainder(spark, corpus, tmp_path):
     assert third.pages_processed == 0
 
 
+def test_resume_counts_exact_with_repeated_urls(spark, tmp_path):
+    """A resumed run counts input rows, once each: a committed PDF's N
+    page rows must not multiply its input row, a url repeated in the
+    input counts per row, and a NULL url is never committed, so it is
+    pending. The input is a union, as the CLI's WARC + parquet input is."""
+    from ocr_agent_spark.kernel.minipdf import build_pdf
+
+    n_pages = 4
+    pdf = ("https://docs.example/manual.pdf",
+           build_pdf([[f"PAGE_{p}_MARK"] for p in range(n_pages)]))
+    html = ("https://www.example/a", b"<html><body><p>Committed.</p></body></html>")
+    new = ("https://www.example/b", b"<html><body><p>New page.</p></body></html>")
+    schema = "url string, warc_ts timestamp, html binary"
+    root = str(tmp_path / "repeat")
+    run_extraction_job(
+        spark,
+        spark.createDataFrame([(u, None, h) for u, h in (pdf, html)], schema),
+        root, run_id="first")
+    committed = read_extracted(spark, root)
+    assert committed.filter(F.col("url") == pdf[0]).count() == n_pages
+
+    rows = [pdf, pdf, html, new, new, (None, new[1])]
+    frames = [spark.createDataFrame([(u, None, h) for u, h in part], schema)
+              for part in (rows[:3], rows[3:])]
+    second = run_extraction_job(
+        spark, frames[0].unionByName(frames[1]), root, run_id="second")
+    done = {pdf[0], html[0]}
+    skipped = sum(u in done for u, _ in rows)
+    assert (second.pages_total, second.pages_processed,
+            second.pages_skipped_committed) == (
+        len(rows), len(rows) - skipped, skipped)
+
+
 def test_failed_rows_retained_and_skipped_in_merge(spark, tmp_path):
     bad = spark.createDataFrame(
         [

@@ -233,3 +233,29 @@ def test_drain_rewrites_a_run_stranded_before_publish(spark, tmp_path, monkeypat
     ext = read_extracted(spark, root)
     assert ext.count() == ext.select("url", "page_index").distinct().count()
     assert _drained_rows(spark, root, runs) == ext.count()
+
+
+def test_drain_skips_a_batch_folded_by_compaction(spark, tmp_path):
+    """``SnapshotStore.compact`` replaces the manifest's runs with one
+    ``compact-*`` run, keeping each folded run's lineage rows under its
+    run_id. A batch replayed after it (a fresh checkpoint re-delivers
+    batch 0) is already committed: the drain must skip it, not rewrite
+    its run dir and commit its rows a second time."""
+    from ocr_agent_spark.pipeline import extraction_store, read_extracted
+
+    inbox = str(tmp_path / "inbox")
+    root = str(tmp_path / "job")
+    _write_batch(f"{inbox}/b0.parquet", generate_pages(12))
+    runs = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt"))
+    assert runs == ["stream00000000"]
+    store = extraction_store(root)
+    store.compact(spark)
+    assert store.latest_manifest()["runs"][0].startswith("compact-")
+
+    replay = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt2"))
+    assert replay == []
+    ext = read_extracted(spark, root)
+    assert ext.count() == ext.select("url", "page_index").distinct().count()
+    assert os.path.isdir(os.path.join(store.data_dir, "stream00000000"))
