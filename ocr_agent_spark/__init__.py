@@ -13,20 +13,25 @@ two-phase concat.
 Layout:
 - ``kernel/``     pure-Python, Spark-free kernels: HTML and PDF extraction,
                   math rewrite, merge rendering, WARC, robots.txt, sitemaps
-- ``operators/``  Spark DataFrame operators (ingest, extract, merge, metrics,
-                  triage, skew)
+- ``operators/``  Spark DataFrame operators (ingest-time routing metadata,
+                  extract, merge, metrics, triage, skew)
 - ``sources/``    the snapshot store and the WARC/WET readers and writers
 - ``functions/``  the crawl delta, robots gate and politeness frontier behind
-                  ``cli schedule``, and the content fingerprint
-- ``streaming/``  Structured Streaming ingestion (inbox-watcher analogue)
+                  ``cli schedule``
+- ``streaming/``  the two Structured Streaming ingest drivers (pages parquet,
+                  WARC manifests; the inbox-watcher analogue)
 - ``pipeline``    the resumable job; ``cli`` (``python -m ocr_agent_spark``)
                   drives it, ``worker_daemon`` preloads Spark's Python workers
 
 Every module is reachable from ``__main__``, ``pipeline``,
-``worker_daemon`` or ``streaming`` (``tests/test_package_reachable.py``),
-except the retired round-8 query library that test lists in ``RETIRED``:
-the rest of ``functions/``, the media and link kernels,
-``sources/{bucketed,sized_writer}`` and ``corpus``.
+``worker_daemon``, ``streaming.ingest`` or ``streaming.warc``
+(``tests/test_package_reachable.py``), except the retired modules that
+test lists in ``RETIRED``: the round-8 query library (the rest of
+``functions/``, the media and link kernels,
+``sources/{bucketed,sized_writer}`` and ``corpus``) and the stream-side
+column helpers (``streaming/{dedup,stateful,windows}``). The same test
+holds every public function of a reached module to a caller outside
+``tests/``; its ``TEST_ONLY`` list names the ones still without one.
 """
 
 from ocr_agent_spark.cache import (  # noqa: F401

@@ -3,9 +3,8 @@
 Spark's ContextCleaner reclaims persisted RDDs only when unreferenced,
 but DataFrame ``persist()`` registers the plan in the CacheManager,
 which holds a reference until an explicit ``unpersist()``. A long-lived
-driver that calls operators which persist intermediates (order-key
-assignment, LSH candidate tables, …) therefore accumulates cached
-blocks until eviction pressure.
+driver that calls operators which persist intermediates (LSH candidate
+tables, …) therefore accumulates cached blocks until eviction pressure.
 
 Every operator in this package that persists an intermediate does so
 through :func:`persist_tracked`. Laziness is why the operators cannot

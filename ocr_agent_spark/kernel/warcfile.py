@@ -468,107 +468,12 @@ def build_warc(pages, compress: bool = True, chunked_every: int = 0) -> bytes:
     return out.getvalue()
 
 
-# -- CDX indexing: the splittability path ------------------------------------
-#
-# One archive per task is the indexless baseline; Common Crawl's actual
-# random-access contract is the CDX index: (url, ts, offset, length)
-# per record, valid because each record is its OWN gzip member — a
-# reader can seek to ``offset``, read ``length`` bytes, and decompress
-# exactly one record. With an index, a 1 GB archive splits across MANY
-# tasks (offset-range assignment) instead of pinning to one.
-
-
-def iter_gzip_members(stream) -> Iterator[tuple[int, int, bytes]]:
-    """Concatenated-gzip stream → (offset, compressed_length,
-    decompressed_bytes) per member. Offsets are absolute file offsets —
-    the foundation of CDX. Holds ONE member decompressed at a time."""
-    offset = 0
-    buf = b""
-    while True:
-        # skip inter-member zero padding (spec-tolerated)
-        while buf and buf[0] == 0:
-            pad = len(buf) - len(buf.lstrip(b"\x00"))
-            offset += pad
-            buf = buf[pad:]
-        if not buf:
-            chunk = stream.read(1 << 16)
-            if not chunk:
-                return
-            buf = chunk
-            continue
-        z = zlib.decompressobj(47)
-        out = []
-        fed = 0
-        try:
-            while not z.eof:
-                if not buf:
-                    chunk = stream.read(1 << 16)
-                    if not chunk:
-                        raise WarcFormatError(
-                            f"truncated gzip member at offset {offset}"
-                        )
-                    buf = chunk
-                out.append(z.decompress(buf))
-                fed += len(buf)
-                buf = b""
-        except zlib.error as exc:
-            raise WarcFormatError(
-                f"corrupt gzip member at offset {offset}: {exc}"
-            ) from exc
-        unused = z.unused_data
-        comp_len = fed - len(unused)
-        yield offset, comp_len, b"".join(out)
-        offset += comp_len
-        buf = unused
-
-
-def build_cdx(stream) -> Iterator[dict]:
-    """Per-record-member WARC stream → CDX rows
-    ``{url, ts, offset, length}`` for each ``response`` record.
-
-    Requires the spec layout (one record per gzip member): a member
-    holding several records — e.g. a whole-file-regzipped mirror copy —
-    raises ``WarcFormatError``, because its offsets could not drive
-    record-granular seeks.
-    """
-    for offset, comp_len, rec in iter_gzip_members(stream):
-        records = list(iter_warc_records(io.BytesIO(rec)))
-        if len(records) != 1:
-            raise WarcFormatError(
-                f"member at offset {offset} holds {len(records)} records; "
-                "CDX needs the one-record-per-member layout"
-            )
-        headers, body = records[0]
-        if headers.get("warc-type") != "response":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        yield {
-            "url": url,
-            "ts": _parse_warc_date(headers.get("warc-date", "")),
-            "offset": offset,
-            "length": comp_len,
-        }
-
-
-def read_record_at(stream, offset: int, length: int):
-    """Seek-read ONE indexed record → (url, ts, utf8_html) or None for
-    a non-response/empty record. The CDX consumer: O(record) IO."""
-    stream.seek(offset)
-    blob = stream.read(length)
-    rec = gzip.decompress(blob)
-    for page in iter_warc_pages(io.BytesIO(rec)):
-        return page
-    return None
-
-
 # -- WET (extracted-text "conversion" records) -------------------------------
 #
 # Common Crawl publishes extracted text as WET sidecars: WARC records
 # with WARC-Type: conversion and a text/plain UTF-8 body, one per
 # source page. Writing each record as its own gzip member keeps the
-# splittability contract identical to the response archives above.
+# layout identical to the response archives above.
 
 
 def write_wet_record(out, url: str, ts: _dt.datetime, text: str,

@@ -83,15 +83,13 @@ FUSED_OUT_BATCH_ROWS = 4096
 
 
 def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
-                                 pdf_columns: bool = False,
                                  counter: Accumulator | None = None,
                                  ) -> Iterator[pd.DataFrame]:
     """Fused probe+fan-out+extract over raw pages (runs on executors).
 
     One Arrow trip: the raw payload enters Python exactly once; page
     counting, pdf page fan-out (1→N row emission) and extraction all
-    happen inside the same batch. No order_key: it is attached
-    afterwards on slim columns (``pipeline.attach_order_key``).
+    happen inside the same batch.
 
     Output batches are flushed every ``FUSED_OUT_BATCH_ROWS`` emitted
     rows — including mid-document, so one degenerate PDF's fan-out
@@ -188,7 +186,7 @@ def _extract_pages_fused_batches(batches: Iterator[pd.DataFrame],
                     continue
                 for p in range(shard, total, shards):
                     try:
-                        text = doc.page_text(p, columns=pdf_columns)
+                        text = doc.page_text(p)
                         text = text.rstrip() + "\n" if text.strip() else ""
                         emit("pdf_page", url, p, total, created_ts, text,
                              STATUS_COMPLETED, None, n)
@@ -211,21 +209,16 @@ FUSED_SCHEMA = (
 )
 
 
-def extract_pages_fused(pages: DataFrame, pdf_columns: bool = False,
+def extract_pages_fused(pages: DataFrame,
                         counter: Accumulator | None = None) -> DataFrame:
     """Raw pages → extracted rows in ONE payload pass (the hot path).
 
-    ``pdf_columns=True`` switches PDF page rendering to the
-    column-aware layout mode (``minipdf.extract_pdf_page_text_columns``
-    — multi-column pages read column-by-column). Default OFF: the
-    golden byte-equality contract against the reference fixtures pins
-    the plain line-order render.
+    PDF pages render in plain line order: the golden byte-equality
+    contract against the reference fixtures pins that render.
 
     The binary column is scanned once, crosses into Python once, and is
-    never shuffled or joined. No order_key column — enqueue order IS
-    the natural key (url, page_index) (design rule D1: order is data);
-    the dense sequence is derivable any time via
-    ``pipeline.attach_order_key`` on the committed (payload-free) output.
+    never shuffled or joined. No order column — enqueue order IS the
+    natural key (url, page_index) (design rule D1: order is data).
 
     Skew note: a PDF's pages are all emitted by the scan partition that
     holds the PDF (fan-out happens in-batch). Typical web corpora
@@ -236,10 +229,9 @@ def extract_pages_fused(pages: DataFrame, pdf_columns: bool = False,
     ``counter`` (from ``lineage_counter``) collects each task's lineage
     values while the plan runs.
     """
-    fn = partial(_extract_pages_fused_batches, pdf_columns=pdf_columns,
-                 counter=counter)
     return pages.select("url", "warc_ts", "html").mapInPandas(
-        fn, schema=FUSED_SCHEMA
+        partial(_extract_pages_fused_batches, counter=counter),
+        schema=FUSED_SCHEMA,
     )
 
 

@@ -22,15 +22,6 @@ def status_histogram(extracted: DataFrame) -> DataFrame:
     )
 
 
-def status_totals(extracted: DataFrame) -> DataFrame:
-    """Pivot of the histogram into one totals row (A2)."""
-    return extracted.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("status") == "completed", 1).otherwise(0)).alias("completed"),
-        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-    )
-
-
 def latest_failed_error(extracted: DataFrame) -> DataFrame:
     """Last failed row's error, by enqueue order (W3: max_by).
 

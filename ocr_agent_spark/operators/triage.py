@@ -14,10 +14,10 @@ cli.py:270-307):
 
 Two layers here:
 
-- :func:`discover_inputs` — driver-side, filesystem-true: the CLI
+- :func:`discover_input_rows` — driver-side, filesystem-true: the CLI
   argument list is small by construction, and existence/dir-walk
   checks are driver filesystem operations, so a distributed pass would
-  only add overhead. Returns the category table + the expanded
+  only add overhead. Returns the category rows + the expanded
   supported files in enqueue order (input order, sorted within dirs —
   the reference's determinism contract, input_discovery.py:100-109).
 - :func:`classify_path_column` — the extension predicate as a pure JVM
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # The reference's supported sets (input_discovery.py:14-24). The Spark
@@ -45,8 +45,6 @@ CAT_UNSUPPORTED = "unsupported"
 CAT_EMPTY_DIR = "empty_dir"
 CAT_UNKNOWN = "unknown"
 
-TRIAGE_SCHEMA = "input_path string, category string"
-
 
 def _ext(path: str) -> str:
     low = path.lower()
@@ -57,24 +55,15 @@ def _ext(path: str) -> str:
     return os.path.splitext(low)[1].lstrip(".")
 
 
-def discover_inputs(
-    spark: SparkSession,
-    paths: list[str],
-    supported_exts: tuple[str, ...] = SUPPORTED_IMAGE_EXTENSIONS
-    + SUPPORTED_PDF_EXTENSIONS,
-) -> tuple[list[str], DataFrame]:
-    """(supported files in enqueue order, triage category DataFrame)."""
-    supported, rows = discover_input_rows(paths, supported_exts)
-    return supported, spark.createDataFrame(rows, TRIAGE_SCHEMA)
-
-
 def discover_input_rows(
     paths: list[str],
     supported_exts: tuple[str, ...] = SUPPORTED_IMAGE_EXTENSIONS
     + SUPPORTED_PDF_EXTENSIONS,
 ) -> tuple[list[str], list[tuple[str, str]]]:
-    """Spark-free core of :func:`discover_inputs` (CLI can triage —
-    and refuse with exit code 2 — before paying session startup).
+    """(supported files in enqueue order, (path, category) rows).
+
+    Spark-free, so the CLI can triage — and refuse with exit code 2 —
+    before paying session startup.
 
     Input order is preserved for files; directory contents are sorted
     (recursive) — byte-identical queue order across runs, the same
@@ -139,10 +128,8 @@ def triage_counts(df: DataFrame, path_col: str | Column) -> DataFrame:
     )
 
 
-def render_triage_report(rows: list[tuple[str, str]] | DataFrame) -> str:
+def render_triage_report(rows: list[tuple[str, str]]) -> str:
     """The reference's diagnostic text (cli.py:270-307 shape)."""
-    if isinstance(rows, DataFrame):
-        rows = [(r["input_path"], r["category"]) for r in rows.collect()]
     by_cat: dict[str, list[str]] = {}
     for p, cat in rows:
         by_cat.setdefault(cat, []).append(p)

@@ -23,9 +23,9 @@ never partially committed). Zero-pending is a no-op. Empty input
 raises (exit-code-2 guard, cli.py:187-192 / A3).
 
 Order contract (D1): enqueue order is the natural key
-(url, page_index); the merge sorts by it. The dense ``order_key`` of
-the reference's task table is derived from committed output by
-``attach_order_key`` — order is data, never execution order.
+(url, page_index), the role the reference queue's AUTOINCREMENT
+task_id plays as an ORDER BY key; the merge sorts by it. There is no
+dense order column — order is data, never execution order.
 """
 
 from __future__ import annotations
@@ -46,11 +46,7 @@ from ocr_agent_spark.operators.extract import (
     lineage_counter,
     lineage_from_extracted,
 )
-from ocr_agent_spark.operators.ingest import (
-    BROADCAST_KEY_LIMIT,
-    assign_order_key,
-    has_doc_meta,
-)
+from ocr_agent_spark.operators.ingest import has_doc_meta
 from ocr_agent_spark.operators.merge import (
     merge_extracted_to_file,
     merge_extracted_to_markdown,
@@ -187,23 +183,6 @@ def _run_stats(pages: DataFrame, committed: DataFrame | None) -> DataFrame:
 
 def read_extracted(spark: SparkSession, output_root: str) -> DataFrame | None:
     return extraction_store(output_root).read(spark)
-
-
-def attach_order_key(extracted: DataFrame) -> DataFrame:
-    """Dense 1..N order_key over committed output (payload-free).
-
-    Derivable data: the key follows (url, page_index), the analogue of
-    the reference queue's AUTOINCREMENT task_id. Broadcast-attached
-    when small; slim shuffle join otherwise.
-    """
-    from ocr_agent_spark.cache import persist_tracked
-
-    slim = persist_tracked(extracted.select("url", "page_index"))
-    n = slim.count()
-    keyed = assign_order_key(slim)
-    if n <= BROADCAST_KEY_LIMIT:
-        keyed = F.broadcast(keyed)
-    return extracted.join(keyed, ["url", "page_index"])
 
 
 def read_lineage(spark: SparkSession, output_root: str) -> DataFrame | None:

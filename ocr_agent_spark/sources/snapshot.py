@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -96,7 +97,14 @@ class SnapshotStore:
     # -- write path ---------------------------------------------------------
 
     def _publish(self, manifest: dict, seq: int) -> None:
-        """Atomic CAS manifest publish (write+fsync temp, hard-link)."""
+        """Atomic CAS manifest publish (write+fsync temp, hard-link).
+
+        On a lost race the run dir this manifest would have published
+        is referenced by no manifest, so ``expire_snapshots`` would
+        never reclaim it: it is removed before ``CommitConflictError``
+        is raised, and a retry under the same run_id can write it
+        again. A publish that fails any other way (a kill) leaves the
+        dir for the retry to find."""
         target = os.path.join(self.snap_dir, f"snap-{seq:06d}.json")
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
         try:
@@ -107,6 +115,8 @@ class SnapshotStore:
             try:
                 os.link(tmp, target)
             except FileExistsError:
+                shutil.rmtree(os.path.join(self.data_dir, manifest["run_id"]),
+                              ignore_errors=True)
                 raise CommitConflictError(
                     f"snapshot seq={seq} already published (concurrent "
                     f"writer?); re-read the latest manifest and retry"
@@ -235,16 +245,7 @@ class SnapshotStore:
             manifest["settings"] = prev["settings"]
         if "schema" in prev:  # nor the table schema record
             manifest["schema"] = prev["schema"]
-        try:
-            self._publish(manifest, seq)
-        except CommitConflictError:
-            # The rewrite is a FULL copy of the table — on a lost race
-            # it must not linger as an unreferenced orphan (each retry
-            # under contention would leak another table copy).
-            import shutil
-
-            shutil.rmtree(run_dir, ignore_errors=True)
-            raise
+        self._publish(manifest, seq)
         return run_id
 
     def expire_snapshots(self, keep_latest: int = 1) -> list[str]:
@@ -256,8 +257,6 @@ class SnapshotStore:
         referenced by any KEPT manifest, so the latest table state (and
         any kept history) stays fully readable. Returns deleted run ids.
         """
-        import shutil
-
         if keep_latest < 1:
             raise ValueError("keep_latest must be >= 1")
         names = self._manifests()
@@ -292,8 +291,6 @@ class SnapshotStore:
         ``_delete_output_paths_safely`` (cli.py:356-371): refuses to
         remove anything unless the directory layout is exactly the one
         this store created (data/ + _snapshots/ with snap-*.json)."""
-        import shutil
-
         entries = set(os.listdir(self.root))
         if not entries <= {"data", "_snapshots"}:
             raise ValueError(

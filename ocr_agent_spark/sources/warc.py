@@ -104,35 +104,32 @@ def _read_archives(batches: Iterator[pd.DataFrame],
             yield pd.DataFrame(rows)
 
 
-def _paths_df(spark: SparkSession, paths: list[str],
-              num_partitions: int | None) -> DataFrame:
+def _paths_df(spark: SparkSession, paths: list[str]) -> DataFrame:
     if not paths:
         raise ValueError("no WARC paths given")
-    n = num_partitions or min(len(paths), int(
+    n = min(len(paths), int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     ))
     df = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
     return df.repartition(n)
 
 
-def read_warc(spark: SparkSession, paths: list[str],
-              num_partitions: int | None = None) -> DataFrame:
+def read_warc(spark: SparkSession, paths: list[str]) -> DataFrame:
     """WARC archive paths → pages DataFrame (input-hint schema).
 
     ``paths`` are worker-readable file paths (shared FS / fuse mount /
     pre-localized). One archive is parsed by exactly one task.
     """
-    return _paths_df(spark, paths, num_partitions).mapInPandas(
+    return _paths_df(spark, paths).mapInPandas(
         lambda b: _read_archives(b, with_errors=False), schema=PAGES_DDL
     )
 
 
-def read_warc_errors(spark: SparkSession, paths: list[str],
-                     num_partitions: int | None = None) -> DataFrame:
+def read_warc_errors(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Per-archive triage: pages emitted + first structural error (null
     for clean files). The D2-style companion to ``read_warc`` — corrupt
     deliveries surface as rows, not task failures."""
-    return _paths_df(spark, paths, num_partitions).mapInPandas(
+    return _paths_df(spark, paths).mapInPandas(
         lambda b: _read_archives(b, with_errors=True), schema=_ERRORS_DDL
     )
 
@@ -148,117 +145,6 @@ def write_pages_warc(pages_rows, out_path: str, compress: bool = True) -> int:
             write_warc_record(fh, url, ts, bytes(html), compress=compress)
             n += 1
     return n
-
-
-# -- CDX-indexed reads: splitting archives across tasks ---------------------
-
-CDX_DDL = "path string, url string, warc_ts timestamp, offset long, length long"
-
-
-def build_cdx_df(spark: SparkSession, paths: list[str],
-                 num_partitions: int | None = None) -> DataFrame:
-    """Index archives → CDX DataFrame (one archive per task — the one
-    inherently sequential pass; everything after is splittable).
-
-    Persist the result next to the archives (parquet) and reuse it —
-    Common Crawl publishes exactly this index alongside each crawl so
-    consumers never pay the sequential scan twice.
-    """
-    def index(batches):
-        from ocr_agent_spark.kernel.warcfile import build_cdx
-
-        for batch in batches:
-            rows = {"path": [], "url": [], "warc_ts": [],
-                    "offset": [], "length": []}
-            for path in batch["path"]:
-                # per-file containment (the module's malformed-archive
-                # contract): a corrupt archive indexes its records up
-                # to the damage and is reported by read_warc_errors —
-                # it must not kill the 10k-file indexing job.
-                try:
-                    with open(path, "rb") as fh:
-                        for row in build_cdx(fh):
-                            rows["path"].append(path)
-                            rows["url"].append(row["url"])
-                            rows["warc_ts"].append(row["ts"])
-                            rows["offset"].append(row["offset"])
-                            rows["length"].append(row["length"])
-                except Exception:
-                    continue
-            if rows["path"]:
-                # an all-corrupt batch yields nothing: an EMPTY frame's
-                # untyped warc_ts column (float64) cannot Arrow-cast to
-                # timestamp
-                yield pd.DataFrame(rows)
-
-    return _paths_df(spark, paths, num_partitions).mapInPandas(
-        index, schema=CDX_DDL
-    )
-
-
-def read_warc_indexed(cdx: DataFrame,
-                      num_partitions: int | None = None) -> DataFrame:
-    """CDX rows → pages DataFrame with RECORD-granular parallelism.
-
-    This is the splittability upgrade over ``read_warc``: tasks are
-    assigned (path, offset, length) ranges, so ONE 1 GB archive spreads
-    over the whole cluster instead of pinning to one task — and a
-    url-pruned CDX (filter before calling) touches only the matching
-    byte ranges, a predicate pushdown the sequential reader cannot do.
-    Rows within a task are processed offset-sorted for sequential IO.
-    """
-    spark = cdx.sparkSession
-    from pyspark.sql import functions as F
-
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_agent_spark.kernel.warcfile import read_record_at
-
-        cols = ("url", "warc_ts", "html", "text", "lang")
-        for batch in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            batch = batch.sort_values(["path", "offset"])
-            handle_path, handle = None, None
-            try:
-                for path, offset, length in zip(
-                    batch["path"], batch["offset"], batch["length"]
-                ):
-                    # per-record containment: a stale CDX row (archive
-                    # rewritten since indexing) or damaged byte range
-                    # yields nothing instead of failing the task; the
-                    # periodic re-index + read_warc_errors pass owns
-                    # surfacing such files.
-                    try:
-                        if path != handle_path:
-                            if handle is not None:
-                                handle.close()
-                            handle, handle_path = None, None
-                            handle = open(path, "rb")
-                            handle_path = path
-                        page = read_record_at(handle, int(offset), int(length))
-                    except Exception:
-                        continue
-                    if page is None:
-                        continue
-                    url, ts, html = page
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["html"].append(html)
-                    rows["text"].append(None)
-                    rows["lang"].append(None)
-                    if len(rows["url"]) >= _OUT_BATCH_ROWS:
-                        yield pd.DataFrame(rows)
-                        rows = {c: [] for c in cols}
-            finally:
-                if handle is not None:
-                    handle.close()
-            if rows["url"]:
-                yield pd.DataFrame(rows)
-
-    ranged = cdx.repartition(num_partitions, F.col("path"), F.col("offset"))
-    return ranged.mapInPandas(fetch, schema=PAGES_DDL)
 
 
 # -- sitemap ingestion: crawl-frontier seeding ------------------------------
@@ -429,11 +315,9 @@ def _read_wet_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             yield pd.DataFrame(rows)
 
 
-def read_wet(spark: SparkSession, paths: list[str],
-             num_partitions: int | None = None) -> DataFrame:
+def read_wet(spark: SparkSession, paths: list[str]) -> DataFrame:
     """WET archives → (path, url, warc_ts, text) DataFrame; one archive
-    per task (see ``read_warc`` for the CDX-indexed split alternative
-    on the response side)."""
-    return _paths_df(spark, paths, num_partitions).mapInPandas(
+    per task, like ``read_warc``."""
+    return _paths_df(spark, paths).mapInPandas(
         _read_wet_archives, WET_DDL
     )

@@ -1,12 +1,15 @@
 """Structured Streaming ingestion (the inbox-watcher analogue).
 
-Every stream (a pages-parquet inbox, ``ingest``; a WARC manifest inbox,
-``warc``) drains through one loop into the job's snapshot table, so
-the watch folder's poll, ``.ready``, ``.processing`` and
-``.processed``/``.failed`` states (ST1-ST4) all map to that one drain.
-``dedup``, ``windows`` and ``stateful`` are stream-side column helpers.
+Two drivers, the package's streaming entry points: a pages-parquet
+inbox (``ingest``) and a WARC manifest inbox (``warc``). Both drain
+through one loop into the job's snapshot table, so the watch folder's
+poll, ``.ready``, ``.processing`` and ``.processed``/``.failed`` states
+(ST1-ST4) all map to that one drain. ``dedup``, ``windows`` and
+``stateful`` are retired stream-side column helpers that no driver
+uses (``tests/test_package_reachable.py``: ``RETIRED``).
 """
 
 from ocr_agent_spark.streaming.ingest import run_streaming_extraction_committed
+from ocr_agent_spark.streaming.warc import run_streaming_warc_extraction
 
-__all__ = ["run_streaming_extraction_committed"]
+__all__ = ["run_streaming_extraction_committed", "run_streaming_warc_extraction"]

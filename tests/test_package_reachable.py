@@ -1,20 +1,33 @@
-"""Every package module must be reachable from an entry point.
+"""Every package module, and every public function and class in a
+reached module, must be reachable from an entry point.
 
-The product is one extraction job, driven by the CLI, streaming ingest
-and the Python worker daemon Spark loads by name. A module that none of
-those imports, directly or through other modules, is dead code; this
-test names it so it is deleted (or wired in) rather than left to grow.
+The product is one extraction job, driven by the CLI, the two streaming
+ingest drivers (pages parquet, WARC manifests) and the Python worker
+daemon Spark loads by name. A module that none of those imports,
+directly or through other modules, is dead code; this test names it so
+it is deleted (or wired in) rather than left to grow.
 
-The one exception is ``RETIRED``: the query library that only the
-retired round-8 driver (``__spark_entry__.py``) called. Those modules
-still have their own tests and go one family at a time; the list may
-only shrink, and no script outside ``tests/`` may import from it again.
+The one module-level exception is ``RETIRED``: the query library that
+only the retired round-8 driver (``__spark_entry__.py``) called, and
+the stream-side column helpers (``streaming/{dedup,stateful,windows}``)
+with the text functions only they reach. Those modules still have
+their own tests and go one family at a time; the list only shrinks,
+and no script outside ``tests/`` may import from it again.
 
 The walk is static: it parses every module with ``ast`` and follows
 ``import`` / ``from ... import`` statements anywhere in the file,
 including the lazy imports inside functions. Importing ``a.b.c`` also
 imports the packages ``a`` and ``a.b`` (their ``__init__`` runs), so
 those count as reached too.
+
+A reached module can still carry functions only tests call. So every
+public top-level ``def``/``class`` of a reached, non-retired module
+(``fixtures``, the package's test data, aside) must be referred to by
+name from another package module, from its own module outside its
+definition, or from ``perfbench/``. The exceptions are listed in
+``TEST_ONLY``, which, like ``RETIRED``, only shrinks.
+The check is by name, not by call graph: a reference is any name,
+attribute, imported name or identifier-shaped string constant.
 """
 
 from __future__ import annotations
@@ -32,6 +45,8 @@ ROOTS = (
     f"{PACKAGE}.__main__",
     f"{PACKAGE}.pipeline",
     f"{PACKAGE}.worker_daemon",
+    f"{PACKAGE}.streaming.ingest",
+    f"{PACKAGE}.streaming.warc",
 )
 
 # Reached only from their own tests. Delete a family (and its tests)
@@ -40,6 +55,13 @@ RETIRED = frozenset(
     f"{PACKAGE}.{name}"
     for name in (
         "corpus",
+        # stream-side column helpers and the text functions they reach
+        "streaming.dedup",
+        "streaming.stateful",
+        "streaming.windows",
+        "functions.dedup",
+        "functions.itercut",
+        "functions.text",
         "sources.bucketed",
         "sources.sized_writer",
         # media and link kernels
@@ -89,6 +111,38 @@ RETIRED = frozenset(
 )
 
 
+# Public functions and classes of reached modules that only tests call.
+# Delete one (and its tests) or wire it into the job, then take it off
+# this list.
+TEST_ONLY = frozenset(
+    f"{PACKAGE}.{name}"
+    for name in (
+        # the WET and sitemap readers and the WARC export
+        "sources.warc.read_sitemaps",
+        "sources.warc.read_wet",
+        "sources.warc.sitemap_children",
+        "sources.warc.write_pages_warc",
+        "sources.warc.write_wet_shards",
+        "kernel.sitemap.build_sitemap",
+        "kernel.warcfile.build_warc",
+        # the robots.txt table functions
+        "functions.robots.robots_crawl_delays",
+        "functions.robots.robots_rules_table",
+        "functions.robots.robots_sitemaps",
+        "kernel.robots.is_allowed",
+        # monitoring and skew helpers
+        "operators.metrics.heavy_hitter_hosts",
+        "operators.metrics.latest_failed_error",
+        "operators.metrics.salted_host_counts",
+        "operators.skew.salted_repartition",
+        "operators.triage.triage_counts",
+    )
+)
+
+# The package's test-data module: its helpers are for tests by design.
+FIXTURES = f"{PACKAGE}.fixtures"
+
+
 def _package_modules() -> dict[str, Path]:
     modules = {}
     for path in PACKAGE_DIR.rglob("*.py"):
@@ -136,10 +190,8 @@ def _reachable(modules: dict[str, Path], roots) -> set[str]:
 
 
 def _entry_point_reach(modules: dict[str, Path]) -> set[str]:
-    streaming = [m for m in modules if m.startswith(f"{PACKAGE}.streaming")]
-    roots = [*ROOTS, *streaming]
-    assert all(r in modules for r in roots), sorted(set(roots) - set(modules))
-    return _reachable(modules, roots)
+    assert all(r in modules for r in ROOTS), sorted(set(ROOTS) - set(modules))
+    return _reachable(modules, ROOTS)
 
 
 def _scripts() -> list[Path]:
@@ -158,7 +210,7 @@ def test_every_package_module_is_reachable_from_an_entry_point():
     unreached = sorted(set(modules) - _entry_point_reach(modules) - RETIRED)
     assert not unreached, (
         f"{len(unreached)} package module(s) are imported by no entry point "
-        f"({', '.join(ROOTS)}, {PACKAGE}.streaming.*): {unreached}"
+        f"({', '.join(ROOTS)}): {unreached}"
     )
 
 
@@ -178,3 +230,73 @@ def test_no_script_imports_a_retired_module():
         for name in sorted(_reachable(modules, imported) & RETIRED):
             callers.setdefault(name, str(path.relative_to(REPO)))
     assert not callers, f"retired module(s) imported outside tests/: {callers}"
+
+
+def _referenced_names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Every name ``tree`` refers to, outside the subtree ``skip``: bare
+    names, attribute names, imported names and identifier-shaped string
+    constants (``__all__``, ``getattr`` targets)."""
+    names: set[str] = set()
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier()):
+            names.add(node.value)
+        stack.extend(ast.iter_child_nodes(node))
+    return names
+
+
+def _public_definitions(tree: ast.Module):
+    for node in tree.body:
+        if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")):
+            yield node
+
+
+def _function_check() -> tuple[set[str], set[str]]:
+    """(qualified names of every checked public definition, those of
+    them that nothing outside ``tests/`` refers to)."""
+    modules = _package_modules()
+    trees = {name: ast.parse(path.read_text(), filename=str(path))
+             for name, path in modules.items()}
+    refs = {name: _referenced_names(tree) for name, tree in trees.items()}
+    bench: set[str] = set()
+    for path in (REPO / "perfbench").rglob("*.py"):
+        bench |= _referenced_names(ast.parse(path.read_text(), filename=str(path)))
+    checked, unused = set(), set()
+    for module in sorted(_entry_point_reach(modules) - RETIRED - {FIXTURES}):
+        tree = trees[module]
+        elsewhere = bench.union(*(r for m, r in refs.items() if m != module))
+        for node in _public_definitions(tree):
+            qualified = f"{module}.{node.name}"
+            checked.add(qualified)
+            if (node.name not in elsewhere
+                    and node.name not in _referenced_names(tree, skip=node)):
+                unused.add(qualified)
+    return checked, unused
+
+
+def test_every_public_function_is_used_outside_tests():
+    _, unused = _function_check()
+    test_only = sorted(unused - TEST_ONLY)
+    assert not test_only, (
+        f"{len(test_only)} public function(s) or class(es) of reached modules "
+        f"are referred to only by tests: {test_only}"
+    )
+
+
+def test_test_only_list_names_only_unused_definitions():
+    checked, unused = _function_check()
+    gone = sorted(TEST_ONLY - checked)
+    assert not gone, f"deleted or no longer checked, take off TEST_ONLY: {gone}"
+    used = sorted(TEST_ONLY - unused)
+    assert not used, f"used outside tests, take off TEST_ONLY: {used}"

@@ -69,25 +69,6 @@ def test_golden_byte_equality(spark, completed_root):
     assert mismatches == []
 
 
-def _assert_dense_order(rows):
-    by_key = sorted(rows, key=lambda r: r["order_key"])
-    assert [r["order_key"] for r in by_key] == list(range(1, len(rows) + 1))
-    assert [(r["url"], r["page_index"]) for r in by_key] == sorted(
-        (r["url"], r["page_index"]) for r in rows
-    )
-
-
-def test_order_key_derivable_from_committed(spark, completed_root):
-    from ocr_agent_spark.pipeline import attach_order_key
-
-    rows = (
-        attach_order_key(read_extracted(spark, completed_root))
-        .select("order_key", "url", "page_index")
-        .collect()
-    )
-    _assert_dense_order(rows)
-
-
 def test_status_histogram_all_completed(spark, completed_root):
     hist = {
         r["status"]: r["task_count"]

@@ -53,13 +53,16 @@ def test_concurrent_commit_conflicts_loudly(spark, tmp_path):
         with pytest.raises(CommitConflictError, match="seq=1"):
             store.commit(spark.createDataFrame([(3,)], "id long"), run_id="loser")
 
-    # Winner's commit is intact; loser's run never published.
+    # Winner's commit is intact; loser's run never published, and its
+    # run dir is not left behind as an orphan no manifest references.
     assert store.latest_manifest()["runs"] == ["base", "winner"]
     assert store.read(spark).count() == 2
-    # Loser can retry against the new base and succeed.
+    assert not (tmp_path / "cas" / "data" / "loser").exists()
+    # Loser can retry under the same run_id against the new base.
     retry = SnapshotStore(str(tmp_path / "cas"))
-    retry.commit(spark.createDataFrame([(3,)], "id long"), run_id="loser2")
+    retry.commit(spark.createDataFrame([(3,)], "id long"), run_id="loser")
     assert retry.read(spark).count() == 3
+    assert retry.latest_manifest()["runs"] == ["base", "winner", "loser"]
 
 
 def test_crashed_manifest_write_leaves_no_partial_state(spark, tmp_path):

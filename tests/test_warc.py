@@ -162,7 +162,7 @@ def test_read_warc_matches_source_rows(spark, tmp_path):
 
     pages = _pages(60)
     paths = _write_archives(str(tmp_path), pages)
-    df = read_warc(spark, paths, num_partitions=3)
+    df = read_warc(spark, paths)
     assert df.columns == ["url", "warc_ts", "html", "text", "lang"]
     got = {r["url"]: r for r in df.collect()}
     assert len(got) == 60
@@ -292,46 +292,6 @@ def test_warc_corrupt_gzip_raises_typed():
             list(iter_warc_pages(io.BytesIO(blob)))
 
 
-# -- CDX index / splittable reads -------------------------------------------
-
-
-def test_cdx_indexed_read_equals_sequential(spark, tmp_path):
-    """The CDX path must reproduce the sequential reader exactly, while
-    splitting single archives across many tasks."""
-    from ocr_agent_spark.sources.warc import build_cdx_df, read_warc, read_warc_indexed
-
-    pages = _pages(50)
-    paths = _write_archives(str(tmp_path), pages, shards=2)
-    cdx = build_cdx_df(spark, paths, num_partitions=2)
-    rows = cdx.collect()
-    assert len(rows) == 50
-    # record-granular parallelism: far more partitions than archives
-    indexed = read_warc_indexed(cdx, num_partitions=8)
-    seq = read_warc(spark, paths)
-    a = {r["url"]: bytes(r["html"]) for r in indexed.collect()}
-    b = {r["url"]: bytes(r["html"]) for r in seq.collect()}
-    assert a == b
-
-
-def test_cdx_pruned_read_touches_only_selected(spark, tmp_path):
-    """Filtering the CDX before reading = predicate pushdown to byte
-    ranges: only matching records decode."""
-    from pyspark.sql import functions as F
-
-    from ocr_agent_spark.sources.warc import build_cdx_df, read_warc_indexed
-
-    pages = _pages(30)
-    paths = _write_archives(str(tmp_path), pages, shards=1)
-    cdx = build_cdx_df(spark, paths)
-    picked = cdx.filter(F.col("url").rlike("/p/(1|7|23)$"))
-    got = sorted(r["url"] for r in read_warc_indexed(picked).collect())
-    assert got == [
-        "https://example.com/p/1",
-        "https://example.com/p/23",
-        "https://example.com/p/7",
-    ]
-
-
 def test_warc_content_length_bounds():
     """Negative Content-Length must not swallow the next record into
     this body (verified failure, code-review r4); absurd lengths must
@@ -349,28 +309,6 @@ def test_warc_content_length_bounds():
         list(iter_warc_records(io.BytesIO(record("-5") + good)))
     with pytest.raises(WarcFormatError, match="bound"):
         list(iter_warc_records(io.BytesIO(record("999999999999") + good)))
-
-
-def test_cdx_survives_corrupt_archive_and_stale_offsets(spark, tmp_path):
-    """Containment contract for the indexed path: a corrupt archive
-    indexes to nothing (not a job failure), and CDX rows pointing at
-    rewritten bytes skip instead of failing the fetch task."""
-    from pyspark.sql import functions as F
-
-    from ocr_agent_spark.sources.warc import build_cdx_df, read_warc_indexed
-
-    pages = _pages(20)
-    good = _write_archives(str(tmp_path), pages, shards=1)
-    bad = os.path.join(str(tmp_path), "bad.warc.gz")
-    with open(bad, "wb") as fh:
-        fh.write(b"\x1f\x8b\x08\x00" + b"garbage" * 8)
-    cdx = build_cdx_df(spark, good + [bad])
-    assert cdx.count() == 20  # bad archive contributes nothing, job lives
-
-    # stale rows: shift offsets into the middle of members
-    stale = cdx.withColumn("offset", F.col("offset") + F.lit(7))
-    assert read_warc_indexed(stale).count() == 0  # skipped, not failed
-    assert read_warc_indexed(cdx).count() == 20
 
 
 # -- sitemaps ---------------------------------------------------------------
