@@ -27,18 +27,11 @@ Every module is reachable from ``__main__``, ``pipeline``,
 ``worker_daemon``, ``streaming.ingest`` or ``streaming.warc``
 (``tests/test_package_reachable.py``), except the retired modules that
 test lists in ``RETIRED``: the round-8 query library (the rest of
-``functions/``, the media and link kernels,
+``functions/``, the media and link kernels, ``cache``,
 ``sources/{bucketed,sized_writer}`` and ``corpus``) and the stream-side
 column helpers (``streaming/{dedup,stateful,windows}``). The same test
 holds every public function of a reached module to a caller outside
 ``tests/``; its ``TEST_ONLY`` list names the ones still without one.
 """
-
-from ocr_agent_spark.cache import (  # noqa: F401
-    cache_scope,
-    persist_tracked,
-    release_all_caches,
-    release_caches,
-)
 
 __version__ = "0.2.0"

@@ -102,9 +102,8 @@ class SnapshotStore:
         On a lost race the run dir this manifest would have published
         is referenced by no manifest, so ``expire_snapshots`` would
         never reclaim it: it is removed before ``CommitConflictError``
-        is raised, and a retry under the same run_id can write it
-        again. A publish that fails any other way (a kill) leaves the
-        dir for the retry to find."""
+        is raised. A publish that fails any other way (a kill) leaves
+        the dir, and ``commit`` replaces it on a retry."""
         target = os.path.join(self.snap_dir, f"snap-{seq:06d}.json")
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
         try:
@@ -132,6 +131,11 @@ class SnapshotStore:
                lineage: Callable[[], list[dict]] | None = None) -> str:
         """Write ``df`` under a fresh run dir, then atomically publish it.
 
+        A ``run_id`` that a manifest on disk names (live, or folded by a
+        ``compact`` not yet expired) raises ``ValueError``; a dir of
+        that name no manifest names is a stranded write and is replaced.
+        Two writers using one run_id at the same time is misuse.
+
         ``lineage`` (optional) is called once the data is written; its
         rows go to the run dir's ``_lineage.json`` before the publish.
 
@@ -144,7 +148,11 @@ class SnapshotStore:
         run_id = run_id or uuid.uuid4().hex[:12]
         run_dir = os.path.join(self.data_dir, run_id)
         if os.path.exists(run_dir):
-            raise ValueError(f"run_id {run_id!r} already written")
+            if any(run_id in m["runs"] for m in self.snapshots()):
+                raise ValueError(f"run_id {run_id!r} already written")
+            # No manifest names it: stranded by a writer killed before
+            # its publish, so a retry under its run_id rewrites it.
+            shutil.rmtree(run_dir)
         df.write.mode("errorifexists").parquet(run_dir)
         if lineage is not None:
             _write_json_durably(os.path.join(run_dir, LINEAGE_FILE), lineage())

@@ -10,35 +10,32 @@ snapshot table:
                             drains the backlog then stops (batch-friendly)
 - ``.ready`` marker (ST2) → the file source only sees fully-written
                             files (atomic rename is the writer contract)
-- ``.processing`` lock (ST3) → checkpointed source offsets, and a run_id
-                            derived from the batch id: a replayed batch
-                            already committed (live in the manifest, or
-                            folded by a compaction) is skipped, a run dir
-                            stranded between write and publish is rewritten
+- ``.processing`` lock (ST3) → checkpointed source offsets; a replayed
+                            batch commits nothing because its urls are
+                            already committed (resume by content, as in a
+                            batch run)
 - ``.processed``/``.failed`` markers (ST4) → the batch's rows (status/error
                             columns, failure rows never abort) and lineage,
-                            published together by ``pipeline.commit_run``
+                            published together by the batch's commit
 
-The transformation is the SAME fused extraction as the batch job, so
-streamed and batch output share one table, one resume contract and one
-merge/status surface.
+Each micro-batch IS a batch run: ``pipeline.run_extraction_job`` over the
+batch's pages, so streamed and batch output share one table, one resume
+rule (url anti-join, giant-PDF sharding included) and one merge/status
+surface. A run dir stranded by a kill before its publish is replaced by
+the retry in ``SnapshotStore.commit``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_agent_spark.fixtures import PAGES_ARROW_SCHEMA_DDL
-from ocr_agent_spark.operators.extract import extract_pages_fused
-from ocr_agent_spark.pipeline import commit_run, extraction_store
+from ocr_agent_spark.pipeline import EmptyInputError, run_extraction_job
 
 
 def _drain_into_store(
-    spark: SparkSession,
     source: DataFrame,
     output_root: str,
     checkpoint_dir: str,
@@ -46,37 +43,30 @@ def _drain_into_store(
     to_pages: Callable[[DataFrame], DataFrame | None],
 ) -> list[str]:
     """Drain ``source`` (AvailableNow) into ``output_root``'s snapshot
-    table; returns the run_ids this drain committed (``[]`` on a no-op).
+    table; returns the run_ids that committed rows (``[]`` on a no-op).
 
-    Each micro-batch becomes run ``<run_prefix><batch_id:08d>``: its
-    pages (``to_pages(batch)``; ``None`` commits nothing) are extracted
-    and committed, data and lineage in one manifest publish. Source
-    offsets live in ``checkpoint_dir``; after a failure, or with a fresh
-    checkpoint, ``foreachBatch`` re-delivers the same ``batch_id``.
-    Replay rule: a run_id that is live in the latest manifest, or that
-    a compaction folded (``SnapshotStore.compact`` keeps each folded
-    run's lineage rows under its run_id), is already committed and is
-    skipped; any other run dir of that name was left by a crash before
-    its publish, so it is discarded and the batch rewritten.
+    Each micro-batch runs ``run_extraction_job`` over its pages
+    (``to_pages(batch)``; ``None`` commits nothing) as run
+    ``<run_prefix><query id[:8]>-<batch_id:08d>``. The query id is the
+    checkpoint's, so the run_id is unique per checkpoint and stable
+    across its restarts: a batch re-delivered after a kill retries its
+    own run_id. Source offsets live in ``checkpoint_dir``.
     """
-    store = extraction_store(output_root)
     committed: list[str] = []
 
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
-        run_id = f"{run_prefix}{batch_id:08d}"
-        manifest = store.latest_manifest()
-        if manifest is not None and (
-            run_id in manifest["runs"]
-            or any(r["run_id"] == run_id for r in store.lineage())
-        ):
-            return
         pages = to_pages(batch)
         if pages is None:
             return
-        shutil.rmtree(os.path.join(store.data_dir, run_id), ignore_errors=True)
-        commit_run(spark, store, run_id,
-                   lambda counter: extract_pages_fused(pages, counter=counter))
-        committed.append(run_id)
+        spark = batch.sparkSession
+        qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        run_id = f"{run_prefix}{qid[:8]}-{batch_id:08d}"
+        try:
+            result = run_extraction_job(spark, pages, output_root, run_id=run_id)
+        except EmptyInputError:
+            return
+        if result.pages_processed > 0:
+            committed.append(run_id)
 
     (
         source.writeStream.foreachBatch(commit_batch)
@@ -108,5 +98,5 @@ def run_streaming_extraction_committed(
         spark.readStream.schema(PAGES_ARROW_SCHEMA_DDL)
         .format("parquet").load(input_dir)
     )
-    return _drain_into_store(spark, pages, output_root, checkpoint_dir,
-                             "stream", lambda batch: batch)
+    return _drain_into_store(pages, output_root, checkpoint_dir, "stream",
+                             lambda batch: batch)

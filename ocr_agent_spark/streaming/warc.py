@@ -6,8 +6,9 @@ then appends its path to a small manifest file it drops in
 source expects). This stream treats the MANIFEST files as the
 streaming source, and each micro-batch runs the batch WARC reader over
 the listed archives, then drains through the same loop as every other
-stream (``streaming.ingest._drain_into_store``: fused extraction, one
-``commit_run`` per batch, replayed batches skipped).
+stream (``streaming.ingest._drain_into_store``: one
+``run_extraction_job`` per batch; a replayed batch's urls are already
+committed, so it commits nothing).
 
 Why manifests and not a binary file stream: vanilla Spark's file
 streaming sources are text/csv/json/orc/parquet — and a 1 GB archive
@@ -16,9 +17,8 @@ offset tracking; the archive bytes stay on the worker that parses
 them (``sources/warc.read_warc``: one archive per task, streaming
 gzip-member decode, bounded batches).
 
-An archive listed in two different manifests would be re-parsed;
-downstream url-revisit policy (latest ``warc_ts`` wins) makes that a
-dedup concern, not a correctness loss — list each archive once.
+An archive listed in two different manifests is re-parsed, but its
+urls commit once: first committed url wins, as in a batch run.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ def run_streaming_warc_extraction(
 ) -> list[str]:
     """Drain all pending manifests (AvailableNow); returns committed
     run_ids. Each micro-batch: manifest lines → ``read_warc`` over the
-    archive paths → fused extraction → atomic snapshot commit."""
+    archive paths → ``run_extraction_job``."""
 
     def to_pages(batch: DataFrame) -> DataFrame | None:
         # The batch frame holds PATH STRINGS only — collecting it moves
@@ -46,5 +46,5 @@ def run_streaming_warc_extraction(
         return read_warc(spark, paths) if paths else None
 
     manifests = spark.readStream.format("text").load(manifest_dir)
-    return _drain_into_store(spark, manifests, output_root, checkpoint_dir,
-                             "warc", to_pages)
+    return _drain_into_store(manifests, output_root, checkpoint_dir, "warc",
+                             to_pages)

@@ -250,6 +250,44 @@ def test_run_commit_is_atomic(spark, corpus, tmp_path, monkeypatch):
     assert len(store.snapshots()) == n_manifests
 
 
+def test_killed_run_retries_under_its_run_id(spark, corpus, tmp_path, monkeypatch):
+    """A run killed before its manifest publish leaves a run dir that no
+    manifest names. A retry under the same run_id replaces that dir and
+    commits once. A run_id that a manifest names, live or folded by a
+    compaction not yet expired, still raises."""
+    from ocr_agent_spark.pipeline import extraction_store
+    from ocr_agent_spark.sources.snapshot import SnapshotStore
+
+    pages = corpus.limit(25)
+    root = str(tmp_path / "retry")
+
+    def killed(self, manifest, seq):
+        raise RuntimeError("killed before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotStore, "_publish", killed)
+        with pytest.raises(RuntimeError, match="killed before publish"):
+            run_extraction_job(spark, pages, root, run_id="killed")
+    store = extraction_store(root)
+    assert store.latest_manifest() is None
+    assert os.listdir(store.data_dir) == ["killed"]
+
+    result = run_extraction_job(spark, pages, root, run_id="killed")
+    assert result.pages_skipped_committed == 0
+    assert store.latest_manifest()["runs"] == ["killed"]
+    ext = read_extracted(spark, root)
+    assert ext.count() == ext.select("url", "page_index").distinct().count()
+    _assert_lineage_equals_data(spark, root, "killed")
+
+    with pytest.raises(ValueError, match="already written"):
+        run_extraction_job(spark, corpus, root, run_id="killed")
+    store.compact(spark)
+    assert "killed" not in store.latest_manifest()["runs"]
+    with pytest.raises(ValueError, match="already written"):
+        run_extraction_job(spark, corpus, root, run_id="killed")
+    assert read_extracted(spark, root).count() == ext.count()
+
+
 def test_read_lineage_legacy_root(spark, corpus, tmp_path):
     """A root written before lineage moved into the run dirs keeps its
     separate lineage table; read_lineage returns its rows together with

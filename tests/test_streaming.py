@@ -121,7 +121,8 @@ def test_streaming_multipage_pdf_fans_out_all_pages(spark, tmp_path):
 def test_streaming_snapshot_committed_sink(spark, tmp_path):
     """foreachBatch → SnapshotStore: streamed and batch extraction share
     one table, one resume contract, one merge surface; drains are
-    idempotent (re-drain commits nothing) and lineage rows land per run."""
+    idempotent (re-drain commits nothing), a file that repeats committed
+    urls commits only its new ones, and lineage rows land per run."""
     from ocr_agent_spark.pipeline import (
         merge_job,
         read_extracted,
@@ -141,14 +142,16 @@ def test_streaming_snapshot_committed_sink(spark, tmp_path):
     # idempotence: nothing new → no commits
     assert run_streaming_extraction_committed(spark, inbox, root, ckpt) == []
 
-    # new arrivals → exactly the new rows, in the SAME snapshot table
-    _write_batch(f"{inbox}/b1.parquet", records[18:])
+    # new arrivals → exactly the new rows, in the SAME snapshot table;
+    # the file repeats five committed urls, and those commit nothing
+    _write_batch(f"{inbox}/b1.parquet", records[13:])
     runs2 = run_streaming_extraction_committed(spark, inbox, root, ckpt)
     assert runs2 and set(runs2).isdisjoint(runs1)
 
     ext = read_extracted(spark, root)
     assert ext.select("url").distinct().count() == 30
     assert ext.count() == ext.select("url", "page_index").distinct().count()
+    assert _drained_rows(spark, root, runs1 + runs2) == ext.count()
 
     # lineage rows exist for every streamed run
     lineage = read_lineage(spark, root)
@@ -173,8 +176,9 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
     """Each micro-batch publishes its rows and their lineage in one
     manifest, so there is no window where a run is committed without
     lineage. A drain replayed with a fresh checkpoint redelivers every
-    batch: it commits nothing, every committed run still has exactly its
-    lineage, and no row is duplicated."""
+    batch: it commits nothing, and with a new file beside the old one it
+    commits only the new file's rows. Every committed run still has
+    exactly its lineage, and no row is duplicated."""
     from ocr_agent_spark.pipeline import (
         extraction_store,
         read_extracted,
@@ -195,7 +199,15 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
         spark, inbox, root, str(tmp_path / "ckpt2"))
     assert replay_runs == []  # no new extraction commits (exactly-once)
 
+    # a fresh checkpoint delivers both files in one batch: the new
+    # file's rows commit, the replayed ones do not
+    _write_batch(f"{inbox}/b1.parquet", generate_pages(24)[12:])
+    new_runs = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt3"))
+    assert len(new_runs) == 1
+
     ext = read_extracted(spark, root)
+    assert ext.select("url").distinct().count() == 24
     assert ext.count() == ext.select("url", "page_index").distinct().count()
     docs = {}
     for r in read_lineage(spark, root).collect():
@@ -207,7 +219,8 @@ def test_committed_streaming_replay_keeps_lineage_atomic(spark, tmp_path):
 def test_drain_rewrites_a_run_stranded_before_publish(spark, tmp_path, monkeypatch):
     """A crash between a micro-batch's write and its manifest publish
     leaves a run dir no manifest lists. The checkpoint re-delivers the
-    batch, and the drain discards that dir and commits the run once."""
+    batch under the same run_id, and the commit replaces that dir and
+    commits the run once."""
     from ocr_agent_spark.pipeline import extraction_store, read_extracted
     from ocr_agent_spark.sources.snapshot import SnapshotStore
 
@@ -225,11 +238,12 @@ def test_drain_rewrites_a_run_stranded_before_publish(spark, tmp_path, monkeypat
             run_streaming_extraction_committed(spark, inbox, root, ckpt)
     store = extraction_store(root)
     assert store.latest_manifest() is None
-    assert os.path.isdir(os.path.join(store.data_dir, "stream00000000"))
+    stranded = os.listdir(store.data_dir)
+    assert len(stranded) == 1
 
     runs = run_streaming_extraction_committed(spark, inbox, root, ckpt)
-    assert runs == ["stream00000000"]
-    assert store.latest_manifest()["runs"] == ["stream00000000"]
+    assert runs == stranded
+    assert store.latest_manifest()["runs"] == runs
     ext = read_extracted(spark, root)
     assert ext.count() == ext.select("url", "page_index").distinct().count()
     assert _drained_rows(spark, root, runs) == ext.count()
@@ -237,10 +251,10 @@ def test_drain_rewrites_a_run_stranded_before_publish(spark, tmp_path, monkeypat
 
 def test_drain_skips_a_batch_folded_by_compaction(spark, tmp_path):
     """``SnapshotStore.compact`` replaces the manifest's runs with one
-    ``compact-*`` run, keeping each folded run's lineage rows under its
-    run_id. A batch replayed after it (a fresh checkpoint re-delivers
-    batch 0) is already committed: the drain must skip it, not rewrite
-    its run dir and commit its rows a second time."""
+    ``compact-*`` run. A batch replayed after it (a fresh checkpoint
+    re-delivers batch 0) is already committed: its urls are in the
+    compacted run, so the drain commits nothing, and the folded run's
+    dir stays for ``expire_snapshots`` to reclaim."""
     from ocr_agent_spark.pipeline import extraction_store, read_extracted
 
     inbox = str(tmp_path / "inbox")
@@ -248,7 +262,7 @@ def test_drain_skips_a_batch_folded_by_compaction(spark, tmp_path):
     _write_batch(f"{inbox}/b0.parquet", generate_pages(12))
     runs = run_streaming_extraction_committed(
         spark, inbox, root, str(tmp_path / "ckpt"))
-    assert runs == ["stream00000000"]
+    assert len(runs) == 1
     store = extraction_store(root)
     store.compact(spark)
     assert store.latest_manifest()["runs"][0].startswith("compact-")
@@ -258,4 +272,24 @@ def test_drain_skips_a_batch_folded_by_compaction(spark, tmp_path):
     assert replay == []
     ext = read_extracted(spark, root)
     assert ext.count() == ext.select("url", "page_index").distinct().count()
-    assert os.path.isdir(os.path.join(store.data_dir, "stream00000000"))
+    assert os.path.isdir(os.path.join(store.data_dir, runs[0]))
+
+
+def test_stream_resumes_against_a_batch_run(spark, tmp_path):
+    """A file whose pages a batch run already committed commits nothing
+    when it is streamed: a stream resumes by url, as the batch job does."""
+    from ocr_agent_spark.pipeline import read_extracted, run_extraction_job
+
+    inbox = str(tmp_path / "inbox")
+    root = str(tmp_path / "job")
+    records = [r for r in generate_pages(20) if r.html[:4] != b"%PDF"][:10]
+    _write_batch(f"{inbox}/b0.parquet", records)
+    first = run_extraction_job(
+        spark, spark.read.parquet(f"{inbox}/b0.parquet"), root)
+    assert first.pages_processed == 10
+
+    runs = run_streaming_extraction_committed(
+        spark, inbox, root, str(tmp_path / "ckpt"))
+    assert runs == []
+    ext = read_extracted(spark, root)
+    assert ext.count() == ext.select("url", "page_index").distinct().count() == 10
