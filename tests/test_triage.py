@@ -8,6 +8,7 @@ testing only, never at runtime).
 
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_agent_spark.operators.triage import (
@@ -66,11 +67,12 @@ def test_discover_inputs_matches_reference(tmp_path):
 
     sys.path.insert(0, "/root/reference/src")
     try:
-        from ocr_agent.input_discovery import (
-            discover_input_paths_in_enqueue_order,
-        )
+        # Skips only where the reference checkout is absent.
+        input_discovery = pytest.importorskip("ocr_agent.input_discovery")
     finally:
         sys.path.remove("/root/reference/src")
+    discover_input_paths_in_enqueue_order = (
+        input_discovery.discover_input_paths_in_enqueue_order)
 
     inputs = _fixture_tree(tmp_path)
     supported, rows = discover_input_rows(inputs)
